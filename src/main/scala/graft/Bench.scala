@@ -56,21 +56,21 @@ object Bench {
     dir
   }
 
+  private val ScalingPartitions = 256
+
   /** The scaling job: ×repFactor replication (narrow explode) through the
     * full quality pipeline. The base rows repartition to 256 BEFORE the
     * explode — the 64-file dir otherwise bin-packs to ~defaultParallelism
     * splits (openCost-dominated sizing), i.e. ONE task wave per level, and
     * the big level's makespan becomes its slowest-of-N task over variable-
-    * length text (ragged tail). A/B-measured in tools.ScaleExperiment:
-    * rep256 is faster at both levels AND tighter per-round efficiency. */
+    * length text (ragged tail). An interleaved A/B (3 rounds, both
+    * variants in every round) measured 256 partitions faster than that
+    * one-wave read at both levels (4 cores 35.4–40.5 s vs 37.2–42.8 s,
+    * 16 cores 10.0–10.5 s vs 11.1–11.9 s) AND tighter in per-round
+    * efficiency (0.883–0.968 vs 0.781–0.961). */
   private[graft] def scalingPipelineDf(s: SparkSession, pagesDir: String,
-                                       repFactor: Int,
-                                       // tools.ScaleExperiment's A/B knob;
-                                       // ≤0 skips the repartition (the
-                                       // one-wave baseline variant)
-                                       repartitionTo: Int = 256): DataFrame = {
-    val base = s.read.parquet(pagesDir)
-    val pages = (if (repartitionTo > 0) base.repartition(repartitionTo) else base)
+                                       repFactor: Int): DataFrame = {
+    val pages = s.read.parquet(pagesDir).repartition(ScalingPartitions)
       .withColumn("rep", explode(sequence(lit(0), lit(repFactor - 1))))
       .withColumn("url", concat(col("url"), lit("?rep="), col("rep")))
       .drop("rep")

@@ -30,7 +30,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("repetition_ratio", "repetition_ratio(text) - top word-2gram frequency share"),
       (args: Seq[Expression]) => RepetitionRatio(args.head, 2)))
     e.injectFunction((FunctionIdentifier("langid"),
-      info("langid", "langid(text) - struct(lang, confidence)"),
+      info("langid", "langid(text) - struct(lang, confidence). " +
+        "Non-deterministic (pinned so the optimizer evaluates it once per row), " +
+        "so it is allowed only in Project, Filter, Aggregate or Window: not in " +
+        "ORDER BY, join conditions or generators (alias it in a subquery first)"),
       (args: Seq[Expression]) => LangIdExpression(args.head, LangIdModel.default)))
     e.injectFunction((FunctionIdentifier("winnow_fingerprint"),
       info("winnow_fingerprint", "winnow_fingerprint(text) - rolling-hash fingerprint set"),

@@ -551,84 +551,100 @@ object IncrementalCuration {
     val spark = corpus.sparkSession
     val st = init(corpus, embeddings, nCells, withLineDedup, withSpanDedup,
       spanK)
-    StateLake.append(st.docs, s"$root/docs", "doc_id", nBuckets, 0,
-      annotations = maxIdAnnotation(st.docs))
-    StateLake.append(st.bands, s"$root/bands", "band_digest", nBuckets, 0)
-    st.lines.foreach(l =>
-      StateLake.append(l, s"$root/lines", "line_digest", nBuckets, 0))
-    st.grams.foreach(g => StateLake.append(g, s"$root/grams", "g", nBuckets, 0))
-    st.semantic.foreach { sem =>
-      StateLake.append(sem.cells, s"$root/cells", "cell", nBuckets, 0)
+    // every table and Bloom sidecar is an independent batch-0 commit: one
+    // concurrent wave ([[StateLake.commitAll]]). A sidecar commit returns
+    // its fixed sizing for the meta file.
+    def table(name: String, piece: DataFrame,
+              annotations: => Map[String, String] = Map.empty)
+        : () => Option[(String, String)] = () => {
+      appendTable(root, name, piece, nBuckets, 0, annotations); None }
+    def sidecar(name: String, piece: DataFrame, key: String, items: Long,
+                metaKey: String): () => Option[(String, String)] = () => {
+      // 0 = 4x the bootstrap count
+      val n = if (items > 0) items else 4L * piece.count()
+      writeSidecar(root, name, piece, key, n, bloomFpp, bloomShards, 0)
+      Some(metaKey -> n.toString)
+    }
+    // the centroids ride the same wave (a plain write, read only after
+    // the meta file below exists)
+    def centroids(sem: SemState): () => Option[(String, String)] = () => {
       import spark.implicits._
       sem.centroids.zipWithIndex.map { case (u, i) => (i, u.toSeq) }.toSeq
         .toDF("cell", "u").coalesce(1)
         .write.mode("overwrite").parquet(s"$root/centroids")
+      None
     }
-    hostArrivals.foreach(h =>
-      StateLake.append(h, s"$root/hosts", "host", nBuckets, 0))
     // Bloom sidecars: the bootstrap's filter contribution, so no step
-    // ever re-scans history digests to build a prefilter
-    val stDigests = st.digests.getOrElse(st.docs.select("digest"))
-    val docsItems =
-      if (bloomDocsItems > 0) bloomDocsItems else 4L * stDigests.count()
-    StateLake.writeBloom(spark, IncrementalDedup.buildFilterArray(
-        stDigests, "digest", docsItems, bloomFpp, bloomShards),
-      s"$root/docs_bloom", 0)
-    val lineItems = st.lines.map { l =>
-      val items = if (bloomLineItems > 0) bloomLineItems else 4L * l.count()
-      StateLake.writeBloom(spark, IncrementalDedup.buildFilterArray(
-          l, "line_digest", items, bloomFpp, bloomShards),
-        s"$root/lines_bloom", 0)
-      items
-    }
-    // gram filters probe the STRING form of g (crossSpanCutsManaged's
-    // digest form) — the contribution must be built over the same form
-    val gramItems = st.grams.map { g =>
-      val items = if (bloomGramItems > 0) bloomGramItems else 4L * g.count()
-      StateLake.writeBloom(spark, IncrementalDedup.buildFilterArray(
-          g.select(col("g").cast("string").as("g_digest")),
-          "g_digest", items, bloomFpp, bloomShards),
-        s"$root/grams_bloom", 0)
-      items
-    }
+    // ever re-scans history digests to build a prefilter. Gram filters
+    // probe the STRING form of g (crossSpanCutsManaged's digest form) —
+    // the contribution must be built over the same form.
+    val sized = StateLake.commitAll(
+      Seq(table("docs", st.docs, maxIdAnnotation(st.docs)),
+        table("bands", st.bands),
+        sidecar("docs", st.digests.getOrElse(st.docs.select("digest")),
+          "digest", bloomDocsItems, "bloomDocsItems")) ++
+      st.lines.toSeq.flatMap(l => Seq(table("lines", l),
+        sidecar("lines", l, "line_digest", bloomLineItems, "bloomLineItems"))) ++
+      st.grams.toSeq.flatMap(g => Seq(table("grams", g),
+        sidecar("grams", g.select(col("g").cast("string").as("g_digest")),
+          "g_digest", bloomGramItems, "bloomGramItems"))) ++
+      st.semantic.toSeq.flatMap(sem =>
+        Seq(table("cells", sem.cells), centroids(sem))) ++
+      hostArrivals.map(h => table("hosts", h))).flatten
     writeMeta(spark, root, Map(
       "spanK" -> spanK.toString, "buckets" -> nBuckets.toString,
-      "bloomDocsItems" -> docsItems.toString,
       "bloomFpp" -> bloomFpp.toString,
-      "bloomShards" -> bloomShards.toString) ++
-      lineItems.map(i => "bloomLineItems" -> i.toString) ++
-      gramItems.map(i => "bloomGramItems" -> i.toString))
+      "bloomShards" -> bloomShards.toString) ++ sized)
   }
+
+  /** Append `piece` as batch `batchId` of state table `name`, clustered by
+    * its probe key ([[lakeKeys]]). */
+  private def appendTable(root: String, name: String, piece: DataFrame,
+                          nBuckets: Int, batchId: Int,
+                          annotations: Map[String, String] = Map.empty): Unit =
+    StateLake.append(piece, s"$root/$name", lakeKeys.toMap.apply(name),
+      nBuckets, batchId, annotations)
+
+  /** Write the Bloom contribution of `piece`'s `key` column as batch
+    * `batchId` of table `name`'s sidecar, with the table's fixed sizing
+    * (bit-compatible with every other batch's, for the reader's merge). */
+  private def writeSidecar(root: String, name: String, piece: DataFrame,
+                           key: String, items: Long, fpp: Double, shards: Int,
+                           batchId: Int): Unit =
+    StateLake.writeBloom(piece.sparkSession, IncrementalDedup.buildFilterArray(
+      piece, key, items, fpp, shards), s"$root/${name}_bloom", batchId)
 
   /** The lake state as plain (lazy) DataFrames — [[State]] re-assembled
     * from the persisted tables as of `upTo` (default: everything
     * committed). Reads are column-pruned by each consumer; [[stepLake]]
     * additionally bucket-prunes the probe-keyed tables. */
   def loadLake(spark: SparkSession, root: String,
-               upTo: Int = Int.MaxValue): State = {
-    val meta = readMeta(spark, root)
-    val present = tableDirs(spark, root).toSet
-    def tbl(name: String, cols: String*): DataFrame =
-      StateLake.read(spark, s"$root/$name", upTo)
-        .select(cols.map(col): _*)
-    val sem =
-      if (!present("cells")) None
-      else {
+               upTo: Int = Int.MaxValue): State =
+    lakeState(spark, root, readMeta(spark, root), tableDirs(spark, root).toSet)(
+      (name, cols) =>
+        StateLake.read(spark, s"$root/$name", upTo).select(cols.map(col): _*))
+
+  /** [[State]] over the `present` tables, each read ONCE through
+    * `readTable(name, columns)` (a read lists the table's files and infers
+    * its schema, so a read thrown away still costs a Spark job). */
+  private def lakeState(spark: SparkSession, root: String,
+                        meta: Map[String, String], present: Set[String])
+                       (readTable: (String, Seq[String]) => DataFrame): State = {
+    def opt(name: String, cols: String*): Option[DataFrame] =
+      if (present(name)) Some(readTable(name, cols)) else None
+    State(
+      docs = readTable("docs", Seq("doc_id", "text", "digest")),
+      bands = readTable("bands", Seq("id", "band", "band_digest")),
+      semantic = opt("cells", "id", "u", "cell").map { cells =>
         val centroids = spark.read.parquet(s"$root/centroids")
           .collect().sortBy(_.getInt(0))
           .map(_.getSeq[Double](1).toArray)
-        Some(SemState(centroids, tbl("cells", "id", "u", "cell")))
-      }
-    State(
-      docs = tbl("docs", "doc_id", "text", "digest"),
-      bands = tbl("bands", "id", "band", "band_digest"),
-      semantic = sem,
-      lines = if (present("lines")) Some(tbl("lines", "line_digest")) else None,
-      grams = if (present("grams"))
-        Some(tbl("grams", "g", "first_id", "first_pos")) else None,
-      hosts = if (present("hosts"))
-        Some(StateLake.read(spark, s"$root/hosts", upTo)
-          .groupBy("host").agg(sum("n_seen").as("n_seen"))) else None,
+        SemState(centroids, cells)
+      },
+      lines = opt("lines", "line_digest"),
+      grams = opt("grams", "g", "first_id", "first_pos"),
+      hosts = opt("hosts", "host", "n_seen")
+        .map(_.groupBy("host").agg(sum("n_seen").as("n_seen"))),
       spanK = meta("spanK").toInt)
   }
 
@@ -649,7 +665,12 @@ object IncrementalCuration {
     * commits, re-invoke with the SAME batch — the state version is the
     * minimum committed batch across tables, so the replay recomputes the
     * identical survivors from the pre-crash state and fills exactly the
-    * missing table commits (the committed ones skip idempotently).
+    * missing table commits (the committed ones skip idempotently). The
+    * per-table and sidecar commits run CONCURRENTLY
+    * ([[StateLake.commitAll]]), so a crash can leave any subset of them
+    * committed, not just a prefix; the min-over-tables version covers
+    * every subset, and a failed commit surfaces only after the others
+    * have finished, so a replay never races an append still in flight.
     *
     * `atVersion` pins the state version a caller RECORDED before a prior
     * attempt (the streaming driver's write-ahead intent,
@@ -673,7 +694,7 @@ object IncrementalCuration {
     val nBuckets = meta("buckets").toInt
     val stateVersion = atVersion.getOrElse(lakeStateVersion(spark, root))
     val batchId = stateVersion + 1
-    val base = loadLake(spark, root, upTo = stateVersion)
+    val present = tableDirs(spark, root).toSet
     val docsFilters = meta.get("bloomDocsItems").map(_ =>
       StateLake.readBloom(spark, s"$root/docs_bloom", stateVersion))
     val lineFilters = meta.get("bloomLineItems").map(_ =>
@@ -701,7 +722,9 @@ object IncrementalCuration {
     // ratios), so each table gets its own gate.
     val bText = batch.select(col("doc_id").cast("long").as("doc_id"),
       col("text"))
-    val batchDocs = bText.count()
+    // the batch's size and min id in ONE aggregation (one job)
+    val bStats = bText.agg(count(lit(1)), min("doc_id")).head()
+    val batchDocs = bStats.getLong(0)
     // Monotone-crawl-id contract, enforced LOUDLY: every incremental
     // operator keys on batch ids exceeding all history ids (near-dup pair
     // canonicalization, the semantic a.id < b.id drop rule, the host-cap
@@ -736,42 +759,37 @@ object IncrementalCuration {
         }
       }
       .collectFirst { case Some(v) => v }
-    val bMin = bText.agg(min("doc_id")).head()
-    if (!bMin.isNullAt(0)) histMax.foreach { hm =>
-      require(bMin.getLong(0) > hm,
+    if (!bStats.isNullAt(1)) histMax.foreach { hm =>
+      require(bStats.getLong(1) > hm,
         s"monotone-crawl-id contract violated: batch min doc_id " +
-          s"${bMin.getLong(0)} <= history max doc_id $hm — assign fresh, " +
+          s"${bStats.getLong(1)} <= history max doc_id $hm — assign fresh, " +
           "strictly increasing ids per crawl drop (reused ids make the " +
           "incremental dedup verdicts silently wrong)")
     }
     val pruneBound = 8.0 * nBuckets * math.max(1.0, math.log(nBuckets.toDouble))
-    def pruned(name: String, keysPerDoc: Double, probe: => DataFrame,
-               probeKey: String, cols: String*): DataFrame = {
-      val t = StateLake.read(spark, s"$root/$name", upTo = stateVersion)
-      (if (batchDocs * keysPerDoc >= pruneBound) t
-       else t.filter(col("bucket").isInCollection(
-         StateLake.probedBuckets(probe, probeKey, nBuckets))))
-        .select(cols.map(col): _*)
+    val lineDedupOn = present("lines")
+    // (keys per doc, probe keys, key column) of each prunable table
+    def probe(name: String): Option[(Double, DataFrame, String)] = name match {
+      case "bands" if !lineDedupOn => Some((4.0,
+        IncrementalDedup.bandTable(bText, "doc_id", "text"), "band_digest"))
+      case "lines" => Some((32.0,
+        IncrementalDedup.lineDigests(bText, "doc_id", "text"), "line_digest"))
+      case "grams" if !lineDedupOn => Some((512.0,
+        graft.operators.ExactSubstring
+          .occurrences(bText, "doc_id", "text", meta("spanK").toInt), "g"))
+      case _ => None
     }
-    val lineDedupOn = base.lines.isDefined
-    def whole(name: String, cols: String*): DataFrame =
-      StateLake.read(spark, s"$root/$name", upTo = stateVersion)
-        .select(cols.map(col): _*)
-    val state = base.copy(
-      bands =
-        if (lineDedupOn) whole("bands", "id", "band", "band_digest")
-        else pruned("bands", 4.0,
-          IncrementalDedup.bandTable(bText, "doc_id", "text"), "band_digest",
-          "id", "band", "band_digest"),
-      lines = base.lines.map(_ => pruned("lines", 32.0,
-        IncrementalDedup.lineDigests(bText, "doc_id", "text"), "line_digest",
-        "line_digest")),
-      grams = base.grams.map(_ =>
-        if (lineDedupOn) whole("grams", "g", "first_id", "first_pos")
-        else pruned("grams", 512.0,
-          graft.operators.ExactSubstring
-            .occurrences(bText, "doc_id", "text", base.spanK), "g",
-          "g", "first_id", "first_pos")))
+    val state = lakeState(spark, root, meta, present) {
+      (name, cols) =>
+        val t = StateLake.read(spark, s"$root/$name", upTo = stateVersion)
+        (probe(name) match {
+          case Some((keysPerDoc, keys, keyCol))
+              if batchDocs * keysPerDoc < pruneBound =>
+            t.filter(col("bucket").isInCollection(
+              StateLake.probedBuckets(keys, keyCol, nBuckets)))
+          case _ => t
+        }).select(cols.map(col): _*)
+    }
 
     val core = stepCore(state, batch, batchEmbeddings, cfg,
       expectedHistoryDigests, bloomShards, expectedHistoryLines,
@@ -779,55 +797,46 @@ object IncrementalCuration {
       docsFilters = docsFilters, lineFilters = lineFilters,
       gramFilters = gramFilters)
     val ap = appendPieces(core.survivors, batchEmbeddings, state, Some(core.sigs))
-    StateLake.append(ap.docs, s"$root/docs", "doc_id", nBuckets, batchId,
-      annotations = maxIdAnnotation(core.survivors))
-    StateLake.append(ap.bands, s"$root/bands", "band_digest", nBuckets, batchId)
-    ap.lines.foreach(l =>
-      StateLake.append(l, s"$root/lines", "line_digest", nBuckets, batchId))
-    ap.grams.foreach(g =>
-      StateLake.append(g, s"$root/grams", "g", nBuckets, batchId))
-    ap.cells match {
-      case Some(c) =>
-        StateLake.append(c, s"$root/cells", "cell", nBuckets, batchId)
-      case None => base.semantic.foreach { sem =>
-        // A semantic lake must advance its cells table EVERY batch, even
-        // when the batch carries no vectors (the streaming driver never
-        // does): the state version is the min committed batch across
-        // tables, so a stalled cells table would pin it at bootstrap
-        // forever — every later step would recompute the same batchId,
-        // skip all its appends idempotently, and silently curate against
-        // frozen state while emitting duplicates. An empty append keeps
-        // the tables in lockstep.
-        StateLake.append(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            sem.cells.schema), s"$root/cells", "cell", nBuckets, batchId)
-      }
-    }
-    core.hostsDelta.foreach(d =>
-      StateLake.append(d, s"$root/hosts", "host", nBuckets, batchId))
+    // A semantic lake must advance its cells table EVERY batch, even when
+    // the batch carries no vectors (the streaming driver never does): the
+    // state version is the min committed batch across tables, so a stalled
+    // cells table would pin it at bootstrap forever — every later step
+    // would recompute the same batchId, skip all its appends idempotently,
+    // and silently curate against frozen state while emitting duplicates.
+    // An empty append keeps the tables in lockstep.
+    val cells = ap.cells.orElse(state.semantic.map(sem =>
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        sem.cells.schema)))
+    // the lines and grams pieces each feed an append AND a sidecar: derived
+    // once (a lazy val's initializer is synchronized, so the second commit
+    // of the wave waits for the first one's checkpoint instead of re-running
+    // the distinct / gram pass)
+    lazy val lines = ap.lines.map(_.localCheckpoint())
+    lazy val grams = ap.grams.map(_.localCheckpoint())
+    def table(name: String, piece: => DataFrame,
+              annotations: => Map[String, String] = Map.empty): () => Unit =
+      () => appendTable(root, name, piece, nBuckets, batchId, annotations)
     // sidecar contributions: filters over JUST the appended digests, with
     // the table's fixed sizing (bit-compat for the reader's merge)
     val sFpp = meta.get("bloomFpp").map(_.toDouble).getOrElse(0.01)
     val sShards = meta.get("bloomShards").map(_.toInt).getOrElse(1)
-    meta.get("bloomDocsItems").foreach(items =>
-      StateLake.writeBloom(spark, IncrementalDedup.buildFilterArray(
-          ap.docs, "digest", items.toLong, sFpp, sShards),
-        s"$root/docs_bloom", batchId))
-    (meta.get("bloomLineItems"), ap.lines) match {
-      case (Some(items), Some(l)) =>
-        StateLake.writeBloom(spark, IncrementalDedup.buildFilterArray(
-            l, "line_digest", items.toLong, sFpp, sShards),
-          s"$root/lines_bloom", batchId)
-      case _ => ()
-    }
-    (meta.get("bloomGramItems"), ap.grams) match {
-      case (Some(items), Some(g)) =>
-        StateLake.writeBloom(spark, IncrementalDedup.buildFilterArray(
-            g.select(col("g").cast("string").as("g_digest")), "g_digest",
-            items.toLong, sFpp, sShards),
-          s"$root/grams_bloom", batchId)
-      case _ => ()
-    }
+    def sidecar(name: String, metaKey: String, key: String,
+                piece: => DataFrame): Option[() => Unit] =
+      meta.get(metaKey).map(items => () =>
+        writeSidecar(root, name, piece, key, items.toLong, sFpp, sShards, batchId))
+    // every table and sidecar commit is independent: one concurrent wave
+    StateLake.commitAll(
+      Seq(table("docs", ap.docs, maxIdAnnotation(core.survivors)),
+        table("bands", ap.bands)) ++
+      ap.lines.map(_ => table("lines", lines.get)) ++
+      ap.grams.map(_ => table("grams", grams.get)) ++
+      cells.map(c => table("cells", c)) ++
+      core.hostsDelta.map(d => table("hosts", d)) ++
+      sidecar("docs", "bloomDocsItems", "digest", ap.docs) ++
+      ap.lines.flatMap(_ => sidecar("lines", "bloomLineItems", "line_digest",
+        lines.get)) ++
+      ap.grams.flatMap(_ => sidecar("grams", "bloomGramItems", "g_digest",
+        grams.get.select(col("g").cast("string").as("g_digest")))))
     core.mark("appends")
     core.survivors.select("doc_id", "text")
   }

@@ -68,6 +68,13 @@ object StateLake {
     * rename) and idempotent: returns false without writing when the batch
     * is already committed.
     *
+    * Write geometry: the piece is shuffled into min(nBuckets,
+    * defaultParallelism) tasks keyed on `bucket` — one task wave, however
+    * many buckets the table has. A bucket still lands in exactly one task,
+    * so every `batch=N/bucket=K` directory holds exactly one file
+    * (StateLakeSpec pins it). A step's appends to different tables are
+    * independent commits; [[commitAll]] runs them concurrently.
+    *
     * `annotations` are tiny per-batch metadata values (e.g. the docs
     * table's running max doc_id for the monotone-id guard) written as a
     * `_annotations.properties` file INSIDE the staging dir — they commit
@@ -80,10 +87,13 @@ object StateLake {
     val f = fs(spark, dir)
     commitStaged(f, new Path(dir, s".staging-$batchId"),
         new Path(dir, f"batch=$batchId%06d")) { staging =>
-      // one shuffle of the APPENDED piece only (batch-scale), clustering
-      // each bucket's rows into one task so each partition dir gets one file
+      // one shuffle of the APPENDED piece only (batch-scale): hashing on
+      // `bucket` puts each bucket's rows in one task, so each partition dir
+      // gets one file; a task writes several buckets when nBuckets exceeds
+      // the core count (a task per bucket would run in several waves)
+      val tasks = math.min(nBuckets, spark.sparkContext.defaultParallelism)
       df.withColumn("bucket", bucketOf(col(keyCol), nBuckets))
-        .repartition(nBuckets, col("bucket"))
+        .repartition(tasks, col("bucket"))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(staging.toString)
       if (annotations.nonEmpty) {
@@ -93,6 +103,34 @@ object StateLake {
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         finally out.close()
       }
+    }
+  }
+
+  /** Run a step's independent commits ([[append]], [[writeBloom]] on
+    * different tables) concurrently, one thread each, and return their
+    * results in order. It waits for EVERY commit to finish before it
+    * rethrows the first failure (in `commits` order; later failures ride
+    * along as suppressed): a caller that replays the step after a failure
+    * must not race an append still in flight, or [[commitStaged]] would
+    * delete that append's live staging dir. The pool threads are created
+    * by the calling thread, so they inherit its Spark local properties
+    * (job group, scheduler pool). */
+  private[graft] def commitAll[A](commits: Seq[() => A]): Seq[A] = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    import scala.jdk.CollectionConverters._
+    import scala.util.{Failure, Try}
+    val pool = Executors.newFixedThreadPool(math.max(1, commits.size))
+    val outcomes =
+      try pool.invokeAll(commits.map(c => (() => c()): Callable[A]).asJava)
+        .asScala.toSeq.map(f => Try(f.get()).recoverWith {
+          case e: ExecutionException => Failure(e.getCause)
+        })
+      finally pool.shutdown()
+    outcomes.collect { case Failure(e) => e } match {
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ => outcomes.map(_.get)
     }
   }
 

@@ -24,12 +24,30 @@ class PipelineSpec extends SparkSpecBase {
     assert(viaKept.toSeq == viaFilter.toSeq)
     // exactly one detector eval in the plan, and it sits ABOVE the keep
     // filter (the whole point: dropped pages never pay the scrub pass)
-    val plan = kept.queryExecution.optimizedPlan.toString
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, Literal, Size}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val optimized = kept.queryExecution.optimizedPlan
+    val plan = optimized.toString
     assert("process_pii".r.findAllIn(plan).length == 1, plan)
-    val filterIdx = plan.indexOf("Filter")
-    val piiIdx = plan.indexOf("process_pii")
-    assert(filterIdx >= 0 && piiIdx >= 0 && piiIdx < filterIdx,
-      s"keep filter must evaluate below (after in plan text, above in tree) the detector:\n$plan")
+    // the keep filter is the Filter with keep as a conjunct: the attribute
+    // itself, or its definition size(drop_reasons) = 0 once the optimizer
+    // inlines it into the pushed-down filter. An inferred isnotnull filter
+    // matches neither.
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(a, b) => conjuncts(a) ++ conjuncts(b)
+      case other => Seq(other)
+    }
+    val keepFilters = optimized.collect {
+      case f: Filter if conjuncts(f.condition).exists {
+        case a: AttributeReference => a.name == "keep"
+        case EqualTo(Size(reasons, _), Literal(0, _)) =>
+          reasons.toString.contains("too_few_words")
+        case _ => false
+      } => f
+    }
+    assert(keepFilters.nonEmpty, s"no keep filter in the plan:\n$plan")
+    assert(keepFilters.forall(f => !f.child.toString.contains("process_pii")),
+      s"keep filter must evaluate below (in tree order) the detector:\n$plan")
   }
 
   test("quality stage: Gopher line-shape gates fire on bullet/teaser noise") {

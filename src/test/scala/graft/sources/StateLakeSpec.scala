@@ -41,6 +41,54 @@ class StateLakeSpec extends SparkSpecBase {
     assert(StateLake.read(spark, dir).count() == 40)
   }
 
+  test("more buckets than cores: one parquet file per bucket dir, each row in bucketOf(key)") {
+    val dir = tmp()
+    val nBuckets = 4 * spark.sparkContext.defaultParallelism + 3
+    val n = 50 * nBuckets
+    assert(StateLake.append(rows(n), dir, "k", nBuckets, 0))
+    assert(StateLake.append(rows(n, n), dir, "k", nBuckets, 1))
+    for (b <- Seq("batch=000000", "batch=000001")) {
+      val bucketDirs = new java.io.File(dir, b).listFiles().filter(_.isDirectory)
+      assert(bucketDirs.length == nBuckets, s"$b: every bucket holds rows")
+      for (d <- bucketDirs) {
+        val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+        assert(files.length == 1, s"$b/${d.getName} holds ${files.toSeq}")
+      }
+    }
+    val all = StateLake.read(spark, dir)
+    assert(all.count() == 2L * n)
+    assert(all.filter(col("bucket") =!= StateLake.bucketOf(col("k"), nBuckets))
+      .count() == 0, "stored bucket must equal bucketOf(key)")
+  }
+
+  test("commitAll: a failure surfaces only after every other commit finished") {
+    val finished = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val boom = new java.io.IOException("commit 0 failed")
+    val commits: Seq[() => Unit] = (0 until 4).map { i => () =>
+      if (i == 0) throw boom // fails at once; the others are still running
+      Thread.sleep(300)
+      finished.add(i)
+      ()
+    }
+    val e = intercept[java.io.IOException](StateLake.commitAll(commits))
+    assert(e eq boom)
+    assert(finished.toArray.toSet == Set(1, 2, 3),
+      "every other commit must finish before the failure is rethrown")
+  }
+
+  test("commitAll: commits run concurrently, results come back in order, local properties inherited") {
+    val n = 4
+    val latch = new java.util.concurrent.CountDownLatch(n)
+    spark.sparkContext.setLocalProperty("statelake.spec", "wave")
+    val out = try StateLake.commitAll((0 until n).map { i => () =>
+      latch.countDown()
+      // every commit waits for all the others: only concurrent ones pass
+      assert(latch.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (i, spark.sparkContext.getLocalProperty("statelake.spec"))
+    }) finally spark.sparkContext.setLocalProperty("statelake.spec", null)
+    assert(out == (0 until n).map(i => (i, "wave")))
+  }
+
   test("a torn staging dir is invisible to readers and cleaned by the retry") {
     val dir = tmp()
     StateLake.append(rows(10), dir, "k", 4, 0)
