@@ -1,7 +1,7 @@
 package graft
 
 import graft.filter.LangIdModel
-import graft.functions.{CcnetNormalize, DeflateRatio, LangIdExpression, LuhnValid, NfcNormalize, PiiDetectExpression, PiiScrubExpression, RepetitionRatio, RrnValid, WinnowFingerprint}
+import graft.functions.{CcnetNormalize, DeflateRatio, LangIdExpression, LuhnValid, NfcNormalize, PiiDetectExpression, PiiScrubExpression, PushFiltersThroughPinned, RepetitionRatio, RrnValid, WinnowFingerprint}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -12,14 +12,18 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *
   * Then `SELECT scrub_pii(text) FROM pages` works from pure SQL (including
-  * thrift/JDBC sessions). The same registrations are applied per-session by
-  * GraftSession.local for programmatic use.
+  * thrift/JDBC sessions). It also injects the optimizer rule
+  * [[graft.functions.PushFiltersThroughPinned]] into the operator-optimization
+  * batch, where it iterates with PushDownPredicates: filters that read no
+  * pinned expression's output sink below the pinned projections. Every
+  * GraftSession.local session is built with these extensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def info(name: String, usage: String) =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "", "", "", "", "", "", "built-in")
 
   override def apply(e: SparkSessionExtensions): Unit = {
+    e.injectOptimizerRule(_ => PushFiltersThroughPinned)
     e.injectFunction((FunctionIdentifier("detect_pii"),
       info("detect_pii", "detect_pii(text) - 12-category PII detection struct"),
       (args: Seq[Expression]) => PiiDetectExpression(args.head)))

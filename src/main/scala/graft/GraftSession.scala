@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * Local mode stands in for a multi-executor cluster; shuffle partitions are
   * sized to cores (not the 200 default) and AQE is on so plans re-partition /
   * skew-split at runtime — the same configs we'd ship in spark-submit at
-  * cluster scale.
+  * cluster scale. The session carries [[GraftExtensions]]: the engine's SQL
+  * functions and its optimizer rule.
   */
 object GraftSession {
   def local(cores: Int, appName: String = "graft"): SparkSession = {
@@ -24,9 +25,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.PiiFunctions.register(spark)
     spark
   }
 }

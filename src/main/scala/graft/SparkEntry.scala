@@ -13,7 +13,6 @@ object SparkEntry {
   /** Flagship: the full quality-filter + PII-scrub pipeline over synthetic
     * Common-Crawl-style pages at sf=0.001 (driver smoke-checks rows>0). */
   def entry(spark: SparkSession): DataFrame = {
-    graft.functions.PiiFunctions.register(spark)
     QualityPipeline.run(SyntheticPages.fromDocuments(spark, "/root/testdata/sf0.001"))
       .select("url", "lang_pred", "keep", "n_pii")
   }

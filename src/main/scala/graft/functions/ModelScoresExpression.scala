@@ -38,11 +38,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * saves on short tasks.
   */
 case class ModelScoresExpression(child: Expression, models: ModelScoresExpression.ModelRef)
-    extends UnaryExpression with CodegenFallback {
-  // Pinned non-deterministic (the value is pure — see QualitySignalsFull):
-  // a keep-filter consuming both model scores would otherwise inline the
-  // two-model tokenize+score pass once per reference.
-  override lazy val deterministic: Boolean = false
+    extends UnaryExpression with CodegenFallback with PurePinned {
   private def lm: BigramLM = models.lm
   private def qm: QualityModel = models.qm
   private def cacheKey: String = models.key

@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.core.{PiiCategories, PiiDetector}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -59,13 +58,7 @@ case class PiiScrubExpression(child: Expression) extends UnaryExpression with Co
   * redaction from ONE detector pass (detect_pii + scrub_pii as separate
   * columns would each run the full pattern battery). The pipeline's hot path. */
 case class PiiProcessExpression(child: Expression, strict: Boolean = false)
-    extends UnaryExpression with CodegenFallback {
-  // Pinned non-deterministic (the value is pure — see QualitySignalsFull):
-  // a downstream filter consuming both struct fields would otherwise inline
-  // the full detector pass once per reference via PushDownPredicates'
-  // guard-free alias substitution — and this is the single most expensive
-  // per-row expression in the pipeline.
-  override lazy val deterministic: Boolean = false
+    extends UnaryExpression with CodegenFallback with PurePinned {
   override def dataType: DataType = StructType(Seq(
     StructField("text_scrubbed", StringType, nullable = false),
     StructField("n_pii", IntegerType, nullable = false)))
@@ -157,12 +150,4 @@ object PiiFunctions {
   def scrub_pii_strict(c: Column): Column = ColumnBridge.column(PiiScrubStrictExpression(ColumnBridge.expression(c)))
   def process_pii(c: Column): Column = ColumnBridge.column(PiiProcessExpression(ColumnBridge.expression(c)))
   def process_pii_strict(c: Column): Column = ColumnBridge.column(PiiProcessExpression(ColumnBridge.expression(c), strict = true))
-
-  /** SQL registration: SELECT detect_pii(text), scrub_pii(text) ... */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "detect_pii", exprs => PiiDetectExpression(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "scrub_pii", exprs => PiiScrubExpression(exprs.head), "scala_udf")
-  }
 }

@@ -55,12 +55,7 @@ object RepetitionRatio {
   * style hashed n-gram linear model. The model rides in the expression
   * (serialized once per task closure, weights shared per executor). */
 case class LangIdExpression(child: Expression, model: LangIdModel)
-    extends UnaryExpression with CodegenFallback {
-  // Non-determinism pin — see QualitySignalsFull: a keep-filter consuming
-  // both struct fields (lang + confidence) would otherwise inline the model
-  // scoring pass once per reference via PushDownPredicates' guard-free
-  // alias substitution. Values are pure; only plan placement is constrained.
-  override lazy val deterministic: Boolean = false
+    extends UnaryExpression with CodegenFallback with PurePinned {
   override def dataType: DataType = StructType(Seq(
     StructField("lang", StringType, nullable = false),
     StructField("confidence", DoubleType, nullable = false)))
@@ -324,18 +319,8 @@ object QualitySignals {
   * int/int IEEE operations the declarative form performed. Value parity
   * with all three standalone formulations is pinned in QualitySignalsSpec. */
 case class QualitySignalsFull(child: Expression)
-    extends UnaryExpression with CodegenFallback
+    extends UnaryExpression with CodegenFallback with PurePinned
     with org.apache.spark.sql.graftshim.ExpectsStringInput {
-  // Pinned NON-DETERMINISTIC although the value is a pure function of the
-  // input: PushDownPredicates substitutes aliases through projections with
-  // no cost guard, so a keep-filter over fields of this struct inlines the
-  // whole document scan once PER FIELD REFERENCE (measured: 15 evals/row in
-  // the curation quality stage — the fusion's entire win inverted). The
-  // non-determinism pin forbids the optimizer from duplicating, reordering
-  // or substituting the expression (the guide §4.4 discipline for expensive
-  // UDFs), so the struct is computed once and filters read its fields.
-  // Values are unchanged; only plan placement is constrained.
-  override lazy val deterministic: Boolean = false
   override def dataType: DataType = StructType(Seq(
     StructField("n_words", IntegerType, nullable = false),
     StructField("n_chars", IntegerType, nullable = false),
@@ -402,11 +387,7 @@ object QualitySignalsFull {
   *    document has no elements.
   */
 case class DupShapeSignals(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  // Non-determinism pin — see QualitySignalsFull: the dup-shape gates read
-  // four fraction pairs off this struct inside the keep-filter, which would
-  // otherwise inline the two count-map passes once per reference.
-  override lazy val deterministic: Boolean = false
+    extends UnaryExpression with CodegenFallback with PurePinned {
   override def dataType: DataType = StructType(Seq(
     StructField("n_lines", IntegerType, nullable = false),
     StructField("dup_lines", IntegerType, nullable = false),

@@ -14,14 +14,14 @@ import java.nio.file.{Files, Paths}
   *
   * Every stage is a narrow projection (no shuffle) — the only shuffles are
   * the metrics rollups at the end. At cluster scale the same plan reads an
-  * Iceberg/parquet table partitioned by crawl date and bucketed by url hash;
-  * apply scan predicates (crawl-date pruning, host allowlists) to the
-  * input BEFORE [[run]] so they reach the scan — the chain's expensive
-  * expressions are pinned non-deterministic (no duplication through
-  * filter pushdown), which also stops the optimizer sinking caller-side
-  * filters below them (see the contract on [[run]]). (No Iceberg runtime
-  * ships in this sandbox — parquet directories stand in with identical
-  * layout.)
+  * Iceberg/parquet table partitioned by crawl date and bucketed by url hash.
+  * The chain's expensive expressions are pinned non-deterministic so filter
+  * pushdown cannot duplicate them; in a GraftSession the
+  * PushFiltersThroughPinned rule still sinks every filter that reads none of
+  * their outputs. So scan predicates (crawl-date pruning, host allowlists)
+  * applied after [[run]] reach the scan, and `run(...).filter(col("keep"))`
+  * drops pages before the PII stage. (No Iceberg runtime ships with this
+  * build — parquet directories stand in with identical layout.)
   */
 object QualityPipeline {
 
@@ -322,40 +322,15 @@ object QualityPipeline {
       .drop("pp")
 
   /** Full chain (the C4 line-filter stage joins when `cfg.c4LineFilter`;
-    * the host-rank gate joins when a rank table is passed).
-    *
-    * Predicate-placement contract: the expensive per-row expressions in
-    * this chain (langid, quality signals, the PII detector) are pinned
-    * non-deterministic so the optimizer cannot DUPLICATE them through
-    * filter pushdown — which also means it will not SINK a caller's
-    * filter below these projections. Apply scan predicates (crawl-date
-    * partition pruning, host allowlists) to `pages` BEFORE calling run(),
-    * and use [[runKept]] instead of `run(...).filter(col("keep"))` when
-    * only kept rows are consumed. */
+    * the host-rank gate joins when a rank table is passed). */
   def run(pages: DataFrame, cfg: Config = Config(),
           model: LangIdModel = LangIdModel.default,
-          hostRanks: Option[DataFrame] = None): DataFrame =
-    staged(pages, cfg, model, hostRanks, keepOnly = false)
-
-  /** [[run]] with the keep decision applied BEFORE the PII stage: dropped
-    * pages never pay the detector pass — the single most expensive per-row
-    * expression in the chain. Row-identical to
-    * `run(...).filter(col("keep"))` (keep does not depend on the PII
-    * columns), but the caller-side form leaves the filter ABOVE piiStage
-    * (see the predicate-placement contract on [[run]]), scrubbing pages
-    * that are about to be dropped. */
-  def runKept(pages: DataFrame, cfg: Config = Config(),
-              model: LangIdModel = LangIdModel.default,
-              hostRanks: Option[DataFrame] = None): DataFrame =
-    staged(pages, cfg, model, hostRanks, keepOnly = true)
-
-  private def staged(pages: DataFrame, cfg: Config, model: LangIdModel,
-                     hostRanks: Option[DataFrame], keepOnly: Boolean): DataFrame = {
+          hostRanks: Option[DataFrame] = None): DataFrame = {
     val base = extract(pages)
     val lf = if (cfg.c4LineFilter) lineFilterStage(base, cfg) else base
     val quality = qualityStage(langIdStage(lf, model), cfg)
     val ranked = hostRanks.fold(quality)(hostRankStage(quality, _, cfg.minHostRank))
-    piiStage(if (keepOnly) ranked.filter(col("keep")) else ranked, cfg.strictScrub)
+    piiStage(ranked, cfg.strictScrub)
   }
 
   /** Full chain from RAW HTML pages (url, warc_ts, html, lang [, text]):

@@ -86,11 +86,7 @@ object PageStream {
     // resolved once on the first batch, cached for the run (the metadata
     // file exists by then — written at query start)
     lazy val streamId = streamIdOf(spark, checkpointDir)
-    // runKept, not run().filter(keep): the keep decision is applied before
-    // the PII stage, so pages the quality gates drop never pay the
-    // detector pass (the non-determinism pins stop the optimizer from
-    // sinking a caller-side filter below piiStage — see QualityPipeline.run)
-    val q = QualityPipeline.runKept(readPages(spark, inDir), cfg)
+    val q = QualityPipeline.run(readPages(spark, inDir), cfg).filter(col("keep"))
       .select(col("url"), col("warc_ts"),
         encode(concat(lit("<html><body>"), col("text_scrubbed"),
           lit("</body></html>")), "UTF-8").as("html"),
