@@ -3,10 +3,8 @@ package graft.functions
 import java.text.Normalizer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** CCNet paragraph-normalization key (Wenzek et al. 2020 §4.1: their dedup
@@ -35,19 +33,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * has no high code point) — fits the scan stage; the produced key feeds a
   * single 8-byte hash, so the dedup shuffle never carries the text.
   */
-case class CcnetNormalize(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "ccnet_normalize"
-
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    UTF8String.fromString(CcnetNormalize.normalize(s))
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object CcnetNormalize {
 
   /** Single-pass normalization; allocates only the output builder. */
@@ -82,6 +67,10 @@ object CcnetNormalize {
     sb.toString
   }
 
-  def ccnet_normalize(c: Column): Column =
-    ColumnBridge.column(CcnetNormalize(ColumnBridge.expression(c)))
+  def normalize(u: UTF8String): UTF8String = UTF8String.fromString(normalize(u.toString))
+
+  private[graft] def ccnetNormalizeExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("ccnet_normalize", this, "normalize", StringType, Seq(StringType), args)
+
+  def ccnet_normalize(c: Column): Column = StaticKernel.column(ccnetNormalizeExpr, c)
 }

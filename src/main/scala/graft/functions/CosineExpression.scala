@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** cosine_sim(a, b) → the cosine similarity of two float/double arrays,
   * fused into one pass per row.
@@ -14,42 +11,25 @@ import org.apache.spark.sql.types._
   * Value contract: BIT-IDENTICAL to the declarative form it replaces —
   *   dot = aggregate(zip_with(a, b, (x,y) => x*y), 0.0, +)
   *   sim = dot / (sqrt(aggregate(a,0.0,+x²)) * sqrt(aggregate(b,0.0,+y²)))
-  * i.e. three LEFT-TO-RIGHT double folds from 0.0 (float elements widened
-  * per element), the exact association order DuckDB's
-  * list_cosine_similarity mirror also computes. The declarative form paid
-  * interpreted per-element lambda evaluation (higher-order functions are
-  * CodegenFallback) on EVERY scored candidate pair — brute-force top-k,
-  * LSH/IVF probes, SemDeDup's within-cell pairing, semantic
-  * decontamination; this is one eval call with primitive loops.
+  * i.e. three LEFT-TO-RIGHT double folds from 0.0, the exact association
+  * order DuckDB's list_cosine_similarity mirror also computes. The
+  * declarative form paid interpreted per-element lambda evaluation
+  * (higher-order functions are CodegenFallback) on EVERY scored candidate
+  * pair — brute-force top-k, LSH/IVF probes, SemDeDup's within-cell
+  * pairing, semantic decontamination; this is one static call with
+  * primitive loops.
+  *
+  * An `array<float>` argument reaches the kernel through the analyzer's
+  * implicit cast to `array<double>`: float → double widening is exact, so
+  * the folds see the same values. Any other element type fails at analysis.
   *
   * NULL semantics: a NULL array, a NULL element, or mismatched lengths
   * yield NULL — the declarative form's zip_with/null-propagation verdicts
   * for those inputs (mismatched lengths zip a null past the shorter side,
   * nulling the dot fold).
   */
-case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (children.forall(c => ok(c.dataType))) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two array<float|double> children, got " +
-        children.map(_.dataType.simpleString).mkString(", "))
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_sim"
-
-  @transient private lazy val leftIsFloat =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  @transient private lazy val rightIsFloat =
-    right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+object CosineFunctions {
+  def cosineSim(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (y.numElements() != n) return null
     var dot = 0.0
@@ -58,8 +38,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
     var i = 0
     while (i < n) {
       if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xi = if (leftIsFloat) x.getFloat(i).toDouble else x.getDouble(i)
-      val yi = if (rightIsFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      val xi = x.getDouble(i)
+      val yi = y.getDouble(i)
       dot += xi * yi
       na += xi * xi
       nb += yi * yi
@@ -68,13 +48,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
+  private[graft] def cosineExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("cosine_sim", this, "cosineSim", DoubleType,
+      Seq(ArrayType(DoubleType), ArrayType(DoubleType)), args, nullableResult = true)
 
-object CosineFunctions {
-  def cosine_sim(a: Column, b: Column): Column =
-    ColumnBridge.column(CosineSimilarity(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  def cosine_sim(a: Column, b: Column): Column = StaticKernel.column(cosineExpr, a, b)
 }

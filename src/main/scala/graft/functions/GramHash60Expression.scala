@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** gram_hash60s(text) → array<long>: the portable 60-bit hash of every
@@ -22,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * recompute the same value independently). NULL text → EMPTY array,
   * exactly like the chain's `when(size(w) >= k, …).otherwise(empty)`.
   *
-  * Why an expression: positional k-gram emission is the widest narrow
+  * Why a kernel: positional k-gram emission is the widest narrow
   * stage the engine runs — every token of every document fans into k
   * grams, and the substring-span stage it feeds dominates the composed
   * curation run (63% of wall time at the bench scale). The declarative
@@ -33,18 +31,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * bytes straight to the 60-bit long — no intermediate string array, and
   * the posexplode downstream fans out 8-byte longs instead of ~50-byte
   * gram strings. */
-case class GramHash60s(child: Expression, gramWidth: Int)
-    extends UnaryExpression with CodegenFallback
-    with org.apache.spark.sql.graftshim.ExpectsStringInput {
-  require(gramWidth >= 1)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "gram_hash60s"
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
+object GramHash60Functions {
+  def gramHash60s(v: UTF8String, gramWidth: Int): ArrayData = {
     if (v == null) return ArrayData.toArrayData(Array.emptyLongArray)
-    val text = v.asInstanceOf[UTF8String].toString
+    val text = v.toString
     // tokenize EXACTLY like split(lower(trim(text)), "\s+") — see
     // MinHashSignatures for the trim/split/locale fine print
     var s = 0
@@ -75,11 +65,13 @@ case class GramHash60s(child: Expression, gramWidth: Int)
     ArrayData.toArrayData(out)
   }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+  private[graft] def gramHash60sExpr(gramWidth: Int)(args: Seq[Expression]): Expression = {
+    require(gramWidth >= 1)
+    StaticKernel.expr("gram_hash60s", this, "gramHash60s",
+      ArrayType(LongType, containsNull = false), Seq(StringType), args, Seq(gramWidth),
+      nullSafe = false)
+  }
 
-object GramHash60Functions {
   def gram_hash60s(c: Column, gramWidth: Int): Column =
-    ColumnBridge.column(GramHash60s(ColumnBridge.expression(c), gramWidth))
+    StaticKernel.column(gramHash60sExpr(gramWidth), c)
 }

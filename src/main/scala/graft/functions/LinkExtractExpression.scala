@@ -2,11 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `extract_links(html)` → the href values of `<a>` tags, in document order,
@@ -18,21 +16,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * NOT skipped — link extraction runs on the raw markup, not the extracted
   * text (a crawler follows links wherever they appear). One O(|html|) scan.
   */
-case class ExtractLinks(child: Expression)
-    extends UnaryExpression with CodegenFallback
-    with org.apache.spark.sql.graftshim.ExpectsStringInput {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "extract_links"
-
-  override def nullSafeEval(input: Any): Any = {
-    val html = input.asInstanceOf[UTF8String].toString
-    val out = ExtractLinks.links(html)
-    ArrayData.toArrayData(out.map(UTF8String.fromString))
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ExtractLinks {
   def links(html: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -155,34 +138,32 @@ object ExtractLinks {
     }
   }
 
-  def extract_links(c: Column): Column =
-    ColumnBridge.column(ExtractLinks(ColumnBridge.expression(c)))
+  def linksArray(u: UTF8String): ArrayData =
+    ArrayData.toArrayData(links(u.toString).map(UTF8String.fromString))
 
-  def extract_link_anchors(c: Column): Column =
-    ColumnBridge.column(ExtractLinkAnchors(ColumnBridge.expression(c)))
-}
-
-/** `extract_link_anchors(html)` → `array<struct<href,anchor>>`: the href and
-  * visible anchor text of every `<a href>` tag, in document order (see
-  * [[ExtractLinks.linkAnchors]] for the anchor semantics). Incoming anchor
-  * text is a classic page-quality / relevance signal — aggregated per target
-  * host it describes a page in its LINKERS' words, which spam can't cheaply
-  * forge at scale. One O(|html|) scan, same scanner as `extract_links`. */
-case class ExtractLinkAnchors(child: Expression)
-    extends UnaryExpression with CodegenFallback
-    with org.apache.spark.sql.graftshim.ExpectsStringInput {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("href", StringType, nullable = false),
-    StructField("anchor", StringType, nullable = false))), containsNull = false)
-  override def prettyName: String = "extract_link_anchors"
-
-  override def nullSafeEval(input: Any): Any = {
-    val html = input.asInstanceOf[UTF8String].toString
-    val out = ExtractLinks.linkAnchors(html)
-    ArrayData.toArrayData(out.map { case (href, anchor) =>
+  /** `extract_link_anchors(html)` → `array<struct<href,anchor>>`: the href and
+    * visible anchor text of every `<a href>` tag, in document order (see
+    * [[ExtractLinks.linkAnchors]] for the anchor semantics). Incoming anchor
+    * text is a classic page-quality / relevance signal — aggregated per target
+    * host it describes a page in its LINKERS' words, which spam can't cheaply
+    * forge at scale. One O(|html|) scan, same scanner as `extract_links`. */
+  def linkAnchorsArray(u: UTF8String): ArrayData =
+    ArrayData.toArrayData(linkAnchors(u.toString).map { case (href, anchor) =>
       InternalRow(UTF8String.fromString(href), UTF8String.fromString(anchor))
     })
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+
+  private[graft] def extractLinksExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("extract_links", this, "linksArray",
+      ArrayType(StringType, containsNull = false), Seq(StringType), args)
+
+  private[graft] def extractLinkAnchorsExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("extract_link_anchors", this, "linkAnchorsArray",
+      ArrayType(StructType(Seq(
+        StructField("href", StringType, nullable = false),
+        StructField("anchor", StringType, nullable = false))), containsNull = false),
+      Seq(StringType), args)
+
+  def extract_links(c: Column): Column = StaticKernel.column(extractLinksExpr, c)
+
+  def extract_link_anchors(c: Column): Column = StaticKernel.column(extractLinkAnchorsExpr, c)
 }

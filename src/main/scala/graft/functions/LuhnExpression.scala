@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{BooleanType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Luhn (mod-10) checksum validation for card-number candidates (ISO/IEC
@@ -25,18 +23,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Narrow per-row work, no allocation beyond the input scan — fits the
   * scan stage next to the detector expressions.
   */
-case class LuhnValid(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "luhn_valid"
-
-  override def nullSafeEval(input: Any): Any =
-    LuhnValid.check(input.asInstanceOf[UTF8String].toString)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object LuhnValid {
 
   /** Single right-to-left pass; doubles every second digit from the check
@@ -60,6 +46,10 @@ object LuhnValid {
     nDigits >= 13 && nDigits <= 19 && sum % 10 == 0
   }
 
-  def luhn_valid(c: Column): Column =
-    ColumnBridge.column(LuhnValid(ColumnBridge.expression(c)))
+  def check(u: UTF8String): Boolean = check(u.toString)
+
+  private[graft] def luhnValidExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("luhn_valid", this, "check", BooleanType, Seq(StringType), args)
+
+  def luhn_valid(c: Column): Column = StaticKernel.column(luhnValidExpr, c)
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Mojibake repair (the ftfy `fix_encoding` core, reimplemented from the
@@ -30,29 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * runs to fixpoint, capped at 3 (ftfy's own default recursion bound).
   * Narrow per-row work with an ASCII fast path — fits the scan stage.
   */
-case class FixMojibake(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "fix_mojibake"
-
-  override def nullSafeEval(input: Any): Any = {
-    val u = input.asInstanceOf[UTF8String]
-    val s = u.toString
-    var cur = s
-    var rounds = 0
-    var changed = true
-    while (changed && rounds < 3) {
-      val next = FixMojibake.repairOnce(cur)
-      changed = next ne cur
-      if (changed) cur = next
-      rounds += 1
-    }
-    if (cur eq s) input else UTF8String.fromString(cur)
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object FixMojibake {
 
   /** Decoded char for each cp1252 byte 0x80+i (Java decode semantics: the
@@ -165,6 +140,22 @@ object FixMojibake {
     sb.toString
   }
 
-  def fix_mojibake(c: Column): Column =
-    ColumnBridge.column(FixMojibake(ColumnBridge.expression(c)))
+  def fix(u: UTF8String): UTF8String = {
+    val s = u.toString
+    var cur = s
+    var rounds = 0
+    var changed = true
+    while (changed && rounds < 3) {
+      val next = repairOnce(cur)
+      changed = next ne cur
+      if (changed) cur = next
+      rounds += 1
+    }
+    if (cur eq s) u else UTF8String.fromString(cur)
+  }
+
+  private[graft] def fixMojibakeExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("fix_mojibake", this, "fix", StringType, Seq(StringType), args)
+
+  def fix_mojibake(c: Column): Column = StaticKernel.column(fixMojibakeExpr, c)
 }

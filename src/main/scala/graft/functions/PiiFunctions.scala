@@ -10,48 +10,9 @@ import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Catalyst-native PII functions.
-  *
-  * The detector object (compiled patterns) is a JVM singleton — loaded once
-  * per executor classloader, satisfying the compile-once-per-executor rule.
-  * The expressions run inside the generated plan (CodegenFallback: children
-  * stay codegen'd; the expression itself is an eval call — no Scala-UDF
-  * serialization/encoder overhead, exact null semantics).
-  */
 object PiiSchema {
   val resultType: StructType = StructType(
     PiiCategories.names.map(n => StructField(n, ArrayType(StringType, containsNull = false), nullable = true)))
-}
-
-/** detect_pii(text) → struct of 12 nullable array<string> fields (canonical
-  * category order). Byte-identical semantics with the reference detector. */
-case class PiiDetectExpression(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = PiiSchema.resultType
-  override def prettyName: String = "detect_pii"
-  override def nullSafeEval(input: Any): Any = {
-    val r = PiiDetector.detect(input.asInstanceOf[UTF8String].toString)
-    val fields = new Array[Any](PiiCategories.size)
-    var i = 0
-    while (i < fields.length) {
-      val l = r.cats(i)
-      if (l != null)
-        fields(i) = ArrayData.toArrayData(l.iterator.map(UTF8String.fromString).toArray[Any])
-      i += 1
-    }
-    InternalRow.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(fields))
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** scrub_pii(text) → text with every detected span replaced by `[<category>]`
-  * (overlaps merged; deterministic left-to-right). Net-new redaction semantics
-  * — see graft.core.PiiDetector.scrub. */
-case class PiiScrubExpression(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "scrub_pii"
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(PiiDetector.scrub(input.asInstanceOf[UTF8String].toString))
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }
 
 /** process_pii(text) → struct(text_scrubbed string, n_pii int): detection and
@@ -92,30 +53,6 @@ case class PiiProcessExpression(child: Expression, strict: Boolean = false)
   override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }
 
-/** scrub_pii_strict(text): like scrub_pii, but a card / RRN span whose value
-  * is checksum-ELIGIBLE (a full numeric candidate: 13-19 card digits with
-  * separators, or the complete 13-digit RRN shape) yet FAILS its checksum
-  * ([[LuhnValid]]; [[RrnValid.check]] or the ARC +2 variant
-  * [[RrnValid.checkArc]]) is left unredacted — these are precisely the
-  * regex layer's random-number false positives (invoice/tracking/order
-  * ids). Values that are NOT checksum-eligible — masked cards, crypto
-  * wallets (in the card category by reference contract), partial or
-  * OCR-damaged RRNs — are always scrubbed: recall over precision wherever
-  * a checksum can't rule.
-  *
-  * Net-new semantics; the reference-parity scrub is [[PiiScrubExpression]]. */
-case class PiiScrubStrictExpression(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "scrub_pii_strict"
-  override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
-    val spans = PiiDetector.detectWithSpans(text)._2
-    UTF8String.fromString(
-      PiiDetector.scrubSpans(text, spans.filter(PiiChecksums.redact)))
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
 /** The checksum gate shared by the strict scrub (and available to bespoke
   * span post-filters). */
 object PiiChecksums {
@@ -143,11 +80,67 @@ object PiiChecksums {
   }
 }
 
+/** Catalyst-native PII functions.
+  *
+  * The detector object (compiled patterns) is a JVM singleton — loaded once
+  * per executor classloader, satisfying the compile-once-per-executor rule.
+  * `detect_pii`, `scrub_pii` and `scrub_pii_strict` are static kernels
+  * ([[StaticKernel]]): WholeStageCodegen calls them directly inside the
+  * generated stage — no Scala-UDF serialization/encoder overhead, NULL in →
+  * NULL out. `process_pii` stays a pinned expression ([[PurePinned]]) so
+  * the optimizer evaluates it once per row.
+  */
 object PiiFunctions {
+
+  /** detect_pii(text) → struct of 12 nullable array<string> fields
+    * (canonical category order). Byte-identical semantics with the
+    * reference detector. */
+  def detect(u: UTF8String): InternalRow = {
+    val r = PiiDetector.detect(u.toString)
+    val fields = new Array[Any](PiiCategories.size)
+    var i = 0
+    while (i < fields.length) {
+      val l = r.cats(i)
+      if (l != null)
+        fields(i) = ArrayData.toArrayData(l.iterator.map(UTF8String.fromString).toArray[Any])
+      i += 1
+    }
+    InternalRow.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(fields))
+  }
+
+  /** scrub_pii(text) → text with every detected span replaced by
+    * `[<category>]` (overlaps merged; deterministic left-to-right). Net-new
+    * redaction semantics — see graft.core.PiiDetector.scrub. */
+  def scrub(u: UTF8String): UTF8String = UTF8String.fromString(PiiDetector.scrub(u.toString))
+
+  /** scrub_pii_strict(text): like scrub_pii, but a card / RRN span whose
+    * value is checksum-ELIGIBLE (a full numeric candidate: 13-19 card digits
+    * with separators, or the complete 13-digit RRN shape) yet FAILS its
+    * checksum ([[LuhnValid]]; [[RrnValid.check]] or the ARC +2 variant
+    * [[RrnValid.checkArc]]) is left unredacted — these are precisely the
+    * regex layer's random-number false positives (invoice/tracking/order
+    * ids). Values that are NOT checksum-eligible — masked cards, crypto
+    * wallets (in the card category by reference contract), partial or
+    * OCR-damaged RRNs — are always scrubbed: recall over precision wherever
+    * a checksum can't rule. Net-new semantics; the reference-parity scrub is
+    * [[scrub]]. */
+  def scrubStrict(u: UTF8String): UTF8String = {
+    val text = u.toString
+    val spans = PiiDetector.detectWithSpans(text)._2
+    UTF8String.fromString(PiiDetector.scrubSpans(text, spans.filter(PiiChecksums.redact)))
+  }
+
+  private[graft] def detectPiiExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("detect_pii", this, "detect", PiiSchema.resultType, Seq(StringType), args)
+  private[graft] def scrubPiiExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("scrub_pii", this, "scrub", StringType, Seq(StringType), args)
+  private[graft] def scrubPiiStrictExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("scrub_pii_strict", this, "scrubStrict", StringType, Seq(StringType), args)
+
   /** Column API: detect_pii($"text") */
-  def detect_pii(c: Column): Column = ColumnBridge.column(PiiDetectExpression(ColumnBridge.expression(c)))
-  def scrub_pii(c: Column): Column = ColumnBridge.column(PiiScrubExpression(ColumnBridge.expression(c)))
-  def scrub_pii_strict(c: Column): Column = ColumnBridge.column(PiiScrubStrictExpression(ColumnBridge.expression(c)))
+  def detect_pii(c: Column): Column = StaticKernel.column(detectPiiExpr, c)
+  def scrub_pii(c: Column): Column = StaticKernel.column(scrubPiiExpr, c)
+  def scrub_pii_strict(c: Column): Column = StaticKernel.column(scrubPiiStrictExpr, c)
   def process_pii(c: Column): Column = ColumnBridge.column(PiiProcessExpression(ColumnBridge.expression(c)))
   def process_pii_strict(c: Column): Column = ColumnBridge.column(PiiProcessExpression(ColumnBridge.expression(c), strict = true))
 }

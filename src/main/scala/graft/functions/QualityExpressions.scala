@@ -5,25 +5,15 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Gopher-style within-document repetition: frequency share of the most
   * common word n-gram. O(tokens) per row via open hash counting — a custom
-  * Expression because built-in array higher-order functions would be O(n²).
+  * kernel because built-in array higher-order functions would be O(n²).
   */
-case class RepetitionRatio(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
-  require(n >= 1)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = s"repetition_ratio_$n"
-  override def nullSafeEval(input: Any): Any =
-    RepetitionRatio.ratio(input.asInstanceOf[UTF8String].toString, n)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object RepetitionRatio {
   /** The ratio's one definition, shared with the fused pipeline expression
     * ([[QualitySignalsFull]]) so the two paths cannot drift. Quirks are
@@ -49,6 +39,14 @@ object RepetitionRatio {
     }
     maxC.toDouble / total
   }
+
+  def ratio(u: UTF8String, n: Int): Double = ratio(u.toString, n)
+
+  private[graft] def repetitionRatioExpr(n: Int)(args: Seq[Expression]): Expression = {
+    require(n >= 1)
+    StaticKernel.expr(s"repetition_ratio_$n", this, "ratio", DoubleType, Seq(StringType),
+      args, Seq(n))
+  }
 }
 
 /** langid(text) → struct(lang string, confidence double) via the fastText-
@@ -73,17 +71,13 @@ case class LangIdExpression(child: Expression, model: LangIdModel)
   * rightmost minimum; output = sorted distinct fingerprint set. Near-identical
   * documents share most fingerprints regardless of alignment. O(n) per row.
   */
-case class WinnowFingerprint(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with CodegenFallback {
-  require(k >= 2 && w >= 1)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "winnow_fingerprint"
+object WinnowFingerprint {
   private val Base = 257L
   private val Mod = (1L << 61) - 1
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    if (s.length < k) return org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array.empty[Long])
+  def fingerprint(u: UTF8String, k: Int, w: Int): ArrayData = {
+    val s = u.toString
+    if (s.length < k) return ArrayData.toArrayData(Array.empty[Long])
     // rolling hashes of all k-grams
     val n = s.length - k + 1
     val hashes = new Array[Long](n)
@@ -129,7 +123,7 @@ case class WinnowFingerprint(child: Expression, k: Int, w: Int)
     val arr = new Array[Long](out.size)
     val it = out.iterator(); var x = 0
     while (it.hasNext) { arr(x) = it.next(); x += 1 }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(arr)
+    ArrayData.toArrayData(arr)
   }
 
   /** (a·b) mod (2^61-1) via 128-bit product + Mersenne folding. */
@@ -141,8 +135,11 @@ case class WinnowFingerprint(child: Expression, k: Int, w: Int)
     r
   }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  private[graft] def winnowFingerprintExpr(k: Int, w: Int)(args: Seq[Expression]): Expression = {
+    require(k >= 2 && w >= 1)
+    StaticKernel.expr("winnow_fingerprint", this, "fingerprint",
+      ArrayType(LongType, containsNull = false), Seq(StringType), args, Seq(k, w))
+  }
 }
 
 /** Deflate compression ratio (compressed/raw bytes of UTF-8 text): the
@@ -151,23 +148,25 @@ case class WinnowFingerprint(child: Expression, k: Int, w: Int)
   * Level 1 (speed); O(n) per row. The Deflater (native zlib state) is
   * thread-local and reset per row — per-row allocation would dominate the
   * cost on short documents at scale. */
-case class DeflateRatio(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "deflate_ratio"
-  override def nullSafeEval(input: Any): Any = {
-    val raw = input.asInstanceOf[UTF8String].getBytes
+object DeflateRatio {
+  private val local = ThreadLocal.withInitial[java.util.zip.Deflater](
+    () => new java.util.zip.Deflater(1, true))
+  private val buf = ThreadLocal.withInitial[Array[Byte]](() => new Array[Byte](8192))
+
+  def ratio(u: UTF8String): Double = {
+    val raw = u.getBytes
     if (raw.isEmpty) return 1.0d
-    val d = DeflateRatio.local.get()
+    val d = local.get()
     d.reset()
     d.setInput(raw); d.finish()
-    val buf = DeflateRatio.buf.get()
+    val b = buf.get()
     var out = 0L
-    while (!d.finished()) out += d.deflate(buf)
+    while (!d.finished()) out += d.deflate(b)
     out.toDouble / raw.length
   }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+
+  private[graft] def deflateRatioExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("deflate_ratio", this, "ratio", DoubleType, Seq(StringType), args)
 }
 
 /** Unicode NFC normalization: crawl text mixes precomposed and combining-
@@ -176,24 +175,16 @@ case class DeflateRatio(child: Expression)
   * before any hashing step makes byte-equality mean glyph-equality.
   * java.text.Normalizer is allocation-free on already-NFC input (the
   * common case) via the isNormalized fast path. */
-case class NfcNormalize(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfc_normalize"
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    if (java.text.Normalizer.isNormalized(s, java.text.Normalizer.Form.NFC)) input
+object NfcNormalize {
+  def normalize(u: UTF8String): UTF8String = {
+    val s = u.toString
+    if (java.text.Normalizer.isNormalized(s, java.text.Normalizer.Form.NFC)) u
     else UTF8String.fromString(
       java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
   }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
-object DeflateRatio {
-  private val local = ThreadLocal.withInitial[java.util.zip.Deflater](
-    () => new java.util.zip.Deflater(1, true))
-  private val buf = ThreadLocal.withInitial[Array[Byte]](() => new Array[Byte](8192))
+  private[graft] def nfcNormalizeExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("nfc_normalize", this, "normalize", StringType, Seq(StringType), args)
 }
 
 /** Single-pass fused quality signals: one scan of the document replaces the
@@ -210,29 +201,23 @@ object DeflateRatio {
   * Spark's `split(limit=-1)` keeps; the alpha check runs on the
   * UTF8String-lowercased text exactly like `lower()`.
   */
-case class QualitySignals(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", IntegerType, nullable = false),
-    StructField("n_chars", IntegerType, nullable = false),
-    StructField("n_symbols", IntegerType, nullable = false),
-    StructField("n_alpha_words", IntegerType, nullable = false)))
-  override def prettyName: String = "quality_signals"
-
-  override def nullSafeEval(input: Any): Any = {
-    val u = input.asInstanceOf[UTF8String]
+object QualitySignals {
+  def signals(u: UTF8String): InternalRow = {
     val s = u.toString
-    import QualitySignals._
     InternalRow(wordCount(s), nonWsCodePoints(s), symbolCount(s),
       alphaWords(u.toLowerCase.toString))
   }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
-/** The signal definitions, shared verbatim with the fused pipeline
-  * expression ([[QualitySignalsFull]]) so the two paths cannot drift. */
-object QualitySignals {
+  private[graft] def qualitySignalsExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("quality_signals", this, "signals", StructType(Seq(
+      StructField("n_words", IntegerType, nullable = false),
+      StructField("n_chars", IntegerType, nullable = false),
+      StructField("n_symbols", IntegerType, nullable = false),
+      StructField("n_alpha_words", IntegerType, nullable = false))), Seq(StringType), args)
+
+  // The signal definitions below are shared verbatim with the fused pipeline
+  // expression ([[QualitySignalsFull]]) so the two paths cannot drift.
+
   @inline private[functions] def isJWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
@@ -444,20 +429,17 @@ case class DupShapeSignals(child: Expression)
 }
 
 object QualityFunctions {
-  def quality_signals(c: Column): Column =
-    ColumnBridge.column(QualitySignals(ColumnBridge.expression(c)))
+  def quality_signals(c: Column): Column = StaticKernel.column(QualitySignals.qualitySignalsExpr, c)
   def quality_signals_full(c: Column): Column =
     ColumnBridge.column(QualitySignalsFull(ColumnBridge.expression(c)))
   def dup_shape_signals(c: Column): Column =
     ColumnBridge.column(DupShapeSignals(ColumnBridge.expression(c)))
   def repetition_ratio(c: Column, n: Int): Column =
-    ColumnBridge.column(RepetitionRatio(ColumnBridge.expression(c), n))
+    StaticKernel.column(RepetitionRatio.repetitionRatioExpr(n), c)
   def langid(c: Column, model: LangIdModel = LangIdModel.default): Column =
     ColumnBridge.column(LangIdExpression(ColumnBridge.expression(c), model))
   def winnow_fingerprint(c: Column, k: Int = 8, w: Int = 16): Column =
-    ColumnBridge.column(WinnowFingerprint(ColumnBridge.expression(c), k, w))
-  def deflate_ratio(c: Column): Column =
-    ColumnBridge.column(DeflateRatio(ColumnBridge.expression(c)))
-  def nfc_normalize(c: Column): Column =
-    ColumnBridge.column(NfcNormalize(ColumnBridge.expression(c)))
+    StaticKernel.column(WinnowFingerprint.winnowFingerprintExpr(k, w), c)
+  def deflate_ratio(c: Column): Column = StaticKernel.column(DeflateRatio.deflateRatioExpr, c)
+  def nfc_normalize(c: Column): Column = StaticKernel.column(NfcNormalize.nfcNormalizeExpr, c)
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{BooleanType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `robots_allowed(robots_txt, url)` — REP / robots.txt evaluation per
@@ -30,19 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * keyed by the robots text) — parse once per host, match per page. Narrow
   * per-row work; broadcast/join the robots table to pages upstream.
   */
-case class RobotsAllowed(left: Expression, right: Expression, agent: String)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "robots_allowed"
-
-  override def nullSafeEval(robots: Any, url: Any): Any = {
-    val rules = RobotsAllowed.rulesFor(robots.asInstanceOf[UTF8String].toString, agent)
-    RobotsAllowed.allowed(rules, RobotsAllowed.pathOf(url.asInstanceOf[UTF8String].toString))
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 object RobotsAllowed {
 
   /** (pattern, isAllow), pre-split on '*' for the wildcard matcher. */
@@ -162,7 +147,13 @@ object RobotsAllowed {
     bestAllow
   }
 
+  def allowed(robots: UTF8String, url: UTF8String, agent: UTF8String): Boolean =
+    allowed(rulesFor(robots.toString, agent.toString), pathOf(url.toString))
+
+  private[graft] def robotsAllowedExpr(agent: String)(args: Seq[Expression]): Expression =
+    StaticKernel.expr("robots_allowed", this, "allowed", BooleanType,
+      Seq(StringType, StringType), args, Seq(agent))
+
   def robots_allowed(robots: Column, url: Column, agent: String = "*"): Column =
-    ColumnBridge.column(RobotsAllowed(
-      ColumnBridge.expression(robots), ColumnBridge.expression(url), agent))
+    StaticKernel.column(robotsAllowedExpr(agent), robots, url)
 }

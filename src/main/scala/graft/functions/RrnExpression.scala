@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{BooleanType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Korean resident-registration-number (주민등록번호) checksum validation:
@@ -27,18 +25,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Accepts an optional single `-` between d6 and d7 (the regex's surface
   * form); any other non-digit, or a digit count ≠ 13, → false.
   */
-case class RrnValid(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "rrn_valid"
-
-  override def nullSafeEval(input: Any): Any =
-    RrnValid.check(input.asInstanceOf[UTF8String].toString)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object RrnValid {
 
   /** Shape parse: exactly 13 digits with at most one '-' at the 6|7
@@ -97,6 +83,10 @@ object RrnValid {
     ((11 - weightedSum(d) % 11) % 10 + 2) % 10 == d(12)
   }
 
-  def rrn_valid(c: Column): Column =
-    ColumnBridge.column(RrnValid(ColumnBridge.expression(c)))
+  def check(u: UTF8String): Boolean = check(u.toString)
+
+  private[graft] def rrnValidExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("rrn_valid", this, "check", BooleanType, Seq(StringType), args)
+
+  def rrn_valid(c: Column): Column = StaticKernel.column(rrnValidExpr, c)
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** shingle_hashes(text) → array<long>: distinct word-k-shingles of the
@@ -21,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (an xxhash collision between two distinct shingles yields the value
   * twice, exactly like the old chain) — but computed in one pass per row.
   *
-  * Why an expression: this sits on the Jaccard-VERIFY side of every
+  * Why a kernel: this sits on the Jaccard-VERIFY side of every
   * near-dup path (full-corpus q16/q39 and the incremental daily step),
   * where it runs over each candidate doc's full text. The declarative
   * higher-order-function chain (`sequence` → `transform` → `element_at`
@@ -30,22 +28,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * incremental step's bottleneck; this pass is ~8× that, no intermediate
   * Catalyst arrays.
   */
-case class ShingleHashes(child: Expression, shingleWidth: Int)
-    extends UnaryExpression with CodegenFallback
-    with org.apache.spark.sql.graftshim.ExpectsStringInput {
-  require(shingleWidth >= 1)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "shingle_hashes"
-
+object ShingleHashesFunctions {
   /** NULL text → EMPTY array, exactly like the declarative chain: there
     * `size(split(null)) IS NULL` fails the `when` guard and falls through
     * to the empty-array branch — so a null-text doc verifies as Jaccard 0
     * against everything rather than poisoning the pair with a null. */
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
+  def shingleHashes(v: UTF8String, shingleWidth: Int): ArrayData = {
     if (v == null) return ArrayData.toArrayData(Array.emptyLongArray)
-    val text = v.asInstanceOf[UTF8String].toString
+    val text = v.toString
     // tokenize EXACTLY like split(lower(trim(text)), "\s+") — see
     // MinHashSignatures for why trim is space-only, split keeps empties
     // (limit -1) and lowercasing follows Spark's ASCII/slow dispatch
@@ -75,11 +65,13 @@ case class ShingleHashes(child: Expression, shingleWidth: Int)
     ArrayData.toArrayData(out.result())
   }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+  private[graft] def shingleHashesExpr(shingleWidth: Int)(args: Seq[Expression]): Expression = {
+    require(shingleWidth >= 1)
+    StaticKernel.expr("shingle_hashes", this, "shingleHashes",
+      ArrayType(LongType, containsNull = false), Seq(StringType), args, Seq(shingleWidth),
+      nullSafe = false)
+  }
 
-object ShingleHashesFunctions {
   def shingle_hashes(c: Column, shingleWidth: Int = 3): Column =
-    ColumnBridge.column(ShingleHashes(ColumnBridge.expression(c), shingleWidth))
+    StaticKernel.column(shingleHashesExpr(shingleWidth), c)
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `simhash60(text)` → the 60-bit SimHash of the lowered whitespace token
@@ -25,14 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Spark-parity helpers of [[MinHashSignatures]] (space-only trim,
   * `lowerLikeSpark`, split limit −1, md5-60) so the value identity holds on
   * every input the declarative form accepts. */
-case class SimHash60(child: Expression)
-    extends UnaryExpression with CodegenFallback
-    with org.apache.spark.sql.graftshim.ExpectsStringInput {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash60"
-
-  override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
+object SimHashFunctions {
+  def simHash60(v: UTF8String): Long = {
+    val text = v.toString
     // Spark's trim(): strips only ' ' (not \t/\n) — then lower, then split
     // keeping leading/trailing empty tokens (Pattern.split limit -1), so an
     // empty or all-space doc yields ONE "" token exactly like the explode.
@@ -65,11 +58,8 @@ case class SimHash60(child: Expression)
     out
   }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+  private[graft] def simhash60Expr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("simhash60", this, "simHash60", LongType, Seq(StringType), args)
 
-object SimHashFunctions {
-  def simhash60(c: Column): Column =
-    ColumnBridge.column(SimHash60(ColumnBridge.expression(c)))
+  def simhash60(c: Column): Column = StaticKernel.column(simhash60Expr, c)
 }

@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 /** sorted_intersect_count(a, b) → |a ∩ b| for two ASCENDING-sorted long
   * arrays with distinct elements, by a single merge walk — the Jaccard
@@ -20,32 +17,14 @@ import org.apache.spark.sql.types._
   * per document (in the shingle-table projection), not once per pair.
   *
   * Correctness contract: both inputs must be sorted ascending with no
-  * duplicate elements (ShingleHashes emits distinct hashes; the caller
+  * duplicate elements (shingle_hashes emits distinct hashes; the caller
   * sorts with sort_array). Under that contract the merge count equals
   * |a ∩ b| exactly — the same value array_intersect's size produced
-  * (DedupSpec pins the identity against the hash-set form).
+  * (DedupSpec pins the identity against the hash-set form). A non-long-array
+  * argument fails at analysis, not per task.
   */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  // analysis-time type check (the ExpectsStringInput discipline): a
-  // non-long-array child must fail at analysis, not per-task with a
-  // ClassCastException
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = ArrayType(LongType)
-    if (children.forall(c => c.dataType match {
-        case ArrayType(LongType, _) => true
-        case _ => false
-      })) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two $ok children, got " +
-        children.map(_.dataType.simpleString).mkString(", "))
-  }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_count"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+object SortedIntersectFunctions {
+  def sortedIntersectCount(x: ArrayData, y: ArrayData): Int = {
     val nx = x.numElements()
     val ny = y.numElements()
     var i = 0
@@ -61,13 +40,10 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     n
   }
 
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
+  private[graft] def sortedIntersectExpr(args: Seq[Expression]): Expression =
+    StaticKernel.expr("sorted_intersect_count", this, "sortedIntersectCount", IntegerType,
+      Seq(ArrayType(LongType), ArrayType(LongType)), args)
 
-object SortedIntersectFunctions {
   def sorted_intersect_count(a: Column, b: Column): Column =
-    ColumnBridge.column(SortedIntersectCount(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    StaticKernel.column(sortedIntersectExpr, a, b)
 }

@@ -51,10 +51,11 @@ object TextFunctions {
     * equals the string-set Jaccard up to 2⁻⁶⁴ collisions (the same trade
     * every hash60 key makes), while the per-pair arrays shuffle ~4×
     * smaller and intersect over primitive equality instead of strings.
-    * Computed by the one-pass [[ShingleHashes]] expression — value-identical
-    * to the declarative `transform(shingles(text, k), xxhash64)` it
-    * replaced (ShingleHashesSpec pins the equality), ~8× faster on the
-    * verify side of the near-dup paths. */
+    * Computed by the one-pass [[ShingleHashesFunctions.shingleHashes]]
+    * kernel — value-identical to the declarative
+    * `transform(shingles(text, k), xxhash64)` it replaced
+    * (ShingleHashesSpec pins the equality), ~8× faster on the verify side
+    * of the near-dup paths. */
   def shingleHashes(text: Column, k: Int): Column =
     ShingleHashesFunctions.shingle_hashes(text, k)
 

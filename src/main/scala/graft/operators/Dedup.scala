@@ -180,11 +180,12 @@ object Dedup {
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
       // |A∪B| = |A|+|B|−|A∩B|: one merge-walk intersect count per pair
-      // (see graft.functions.SortedIntersectCount) instead of
-      // intersect + a materialized union array (the union allocated ~2×
-      // the shingle payload per pair just to be sized and thrown away).
+      // (see graft.functions.SortedIntersectFunctions.sortedIntersectCount)
+      // instead of intersect + a materialized union array (the union
+      // allocated ~2× the shingle payload per pair just to be sized and
+      // thrown away).
       // Shingle arrays are distinct-by-construction, so the identity is
-      // exact (ShingleHashes emits a duplicate hash only on an xxhash
+      // exact (shingle_hashes emits a duplicate hash only on an xxhash
       // string collision — the same 2⁻⁶⁴ trade the hashed arrays make).
       // The intersect stays in its own projection so CollapseProject
       // cannot inline (and so duplicate) the non-cheap expression.
@@ -206,7 +207,7 @@ object Dedup {
     * "distinct contaminated shingles". */
   def decontaminate(corpus: DataFrame, bench: DataFrame, idCol: String,
                     textCol: String, width: Int = 3): DataFrame = {
-    // both sides ride the one-pass ShingleHashes expression (the Jaccard-
+    // both sides ride the one-pass shingle_hashes kernel (the Jaccard-
     // verify representation): the corpus explode and the broadcast set carry
     // 8-byte longs instead of ~30-byte shingle strings, and the per-row
     // higher-order gram construction collapses into one expression pass —
@@ -317,7 +318,7 @@ object Dedup {
 
   /** SimHash-64: per token-hash bit voting — near-identical docs land on
     * digests within small Hamming distance. Computed by the one-pass
-    * [[graft.functions.SimHash60]] expression: SimHash is a pure
+    * [[graft.functions.SimHashFunctions.simHash60]] kernel: SimHash is a pure
     * per-document function, so no token ever shuffles (the declarative
     * explode + 60-column vote aggregation it replaced moved every token
     * hash through an exchange; DedupSpec pins the value identity). A doc

@@ -39,7 +39,8 @@ object ExactSubstring {
     * the same trade Lee et al.'s hash-bucketed variants make.)
     * Documents shorter than `k` tokens emit nothing.
     *
-    * Hashing rides the one-pass [[graft.functions.GramHash60s]] expression —
+    * Hashing rides the one-pass static kernel
+    * [[graft.functions.GramHash60Functions.gramHash60s]] —
     * value-identical to `transform(ngrams(text, k), hash60)` (GramHash60Spec
     * pins it) but with no intermediate gram-string array, and the explode
     * fans out 8-byte longs instead of gram strings. */
@@ -122,7 +123,7 @@ object ExactSubstring {
   /** CCNet-style fuzzy line/paragraph dedup (Wenzek et al. 2020 §4.1): the
     * dedup key is the 60-bit hash of the CCNET-NORMALIZED line (lowercase,
     * accent-fold, digit-fold, punctuation-strip — see
-    * [[graft.functions.CcnetNormalize]]), so "Share on FACEBOOK - 1,234
+    * [[graft.functions.CcnetNormalize.normalize]]), so "Share on FACEBOOK - 1,234
     * Likes!" and "share on facebook 0 likes" are the same boilerplate and
     * survive once corpus-wide. Rebuilt text keeps the ORIGINAL line bytes
     * of each first occurrence — normalization only chooses the key.

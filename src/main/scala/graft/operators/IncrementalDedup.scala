@@ -225,7 +225,7 @@ object IncrementalDedup {
     // (at scale, the id-keyed semi join is satisfied by the docs table's
     // bucketing; the non-candidate history text is never even projected)
     // sorted once per doc → zero-allocation merge-walk intersect per pair
-    // (see Dedup.jaccardVerify / graft.functions.SortedIntersectCount)
+    // (see Dedup.jaccardVerify / graft.functions.SortedIntersectFunctions.sortedIntersectCount)
     val shB = batch.select(col(idCol).cast("long").as("batch_id"), col(textCol))
       .join(cand.select("batch_id").distinct(), Seq("batch_id"), "left_semi")
       .select(col("batch_id"),
@@ -300,7 +300,7 @@ object IncrementalDedup {
   /** One row per line of `docs`: (id, line_no, line, line_digest), digest =
     * decimal string of the 60-bit hash of the CCNET-NORMALIZED line (case /
     * digit / punctuation variants of the same boilerplate share a digest —
-    * [[graft.functions.CcnetNormalize]]). This is both the probe side of
+    * [[graft.functions.CcnetNormalize.normalize]]). This is both the probe side of
     * [[newLinesOnly]] and the row shape a production pipeline APPENDS to
     * its persisted seen-paragraphs digest table after each batch. */
   def lineDigests(docs: DataFrame, idCol: String, textCol: String): DataFrame = {

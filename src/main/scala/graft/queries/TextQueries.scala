@@ -1304,7 +1304,7 @@ object TextQueries {
     // mod-10 checksum to kill invoice/tracking-number false positives.
     // Candidates are synthesized deterministically (16 digits, check digit
     // = doc_id%10, grouped 4-4-4-4) so ~1 in 10 validates; Spark evaluates
-    // the LuhnValid expression on the SEPARATED form (stripping exercised),
+    // the luhn_valid kernel on the SEPARATED form (stripping exercised),
     // the oracle recomputes the checksum digit-by-digit in SQL.
     "q82_card_luhn" -> ((s, dir) => {
       val raw = concat(lit("4"),

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.functions.{CcnetNormalize, ExtractLinks, LuhnValid, PiiFunctions, QualityFunctions, RrnValid}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The spark.sql.extensions packaging: a session created with
@@ -8,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * functions to pure SQL (the spark-submit / thrift-server path). */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  test("extensions register detect/scrub/quality functions for SQL sessions") {
+  private def withExtensions(body: SparkSession => Unit): Unit = {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -18,7 +20,15 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    try {
+    try body(spark) finally {
+      spark.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+  }
+
+  test("extensions register detect/scrub/quality functions for SQL sessions") {
+    withExtensions { spark =>
       val scrubbed = spark.sql(
         "SELECT scrub_pii('문의: kim.cs@corp.co.kr 주민등록번호 850315-1234567 끝') AS s")
         .head().getString(0)
@@ -54,10 +64,34 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(spam < 0.15, s"boilerplate should compress hard: $spam")
       assert(prose > 0.5, s"prose should not: $prose")
       assert(spam < prose)
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+    }
+  }
+
+  test("a SQL kernel call names and computes its column exactly like the Column API") {
+    withExtensions { spark =>
+      import spark.implicits._
+      val t = Seq(
+        ("4111-1111-1111-1111", "문의: kim.cs@corp.co.kr 850315-1234567 Café — 1,234 Likes!",
+          "<a href=/a>x</a><a href='/b'>y</a>"),
+        ("900101-1234568", "e\u0301 plain text", "<p>none</p>"),
+        (null, null, null)).toDF("card", "text", "html")
+      t.createOrReplaceTempView("t")
+      val cases: Seq[(String, Column)] = Seq(
+        "luhn_valid(card)" -> LuhnValid.luhn_valid(col("card")),
+        "rrn_valid(card)" -> RrnValid.rrn_valid(col("card")),
+        "ccnet_normalize(text)" -> CcnetNormalize.ccnet_normalize(col("text")),
+        "nfc_normalize(text)" -> QualityFunctions.nfc_normalize(col("text")),
+        "extract_links(html)" -> ExtractLinks.extract_links(col("html")),
+        "scrub_pii(text)" -> PiiFunctions.scrub_pii(col("text")))
+      for ((call, column) <- cases) {
+        val viaSql = spark.sql(s"SELECT $call FROM t")
+        val viaApi = t.select(column)
+        val field = viaApi.schema.head
+        assert(viaSql.schema.map(f => (f.name, f.dataType, f.nullable)) ==
+          Seq((call, field.dataType, field.nullable)), call)
+        assert(field.name == call)
+        assert(viaSql.collect().toSeq == viaApi.collect().toSeq, call)
+      }
     }
   }
 }
