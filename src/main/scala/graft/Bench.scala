@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   *   efficiency = throughput_4N / (4 · throughput_N).
   */
 object Bench {
-  private[graft] def force(df: DataFrame): Unit =
+  private def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  private[graft] def time[A](f: => A): Double = {
+  private def time[A](f: => A): Double = {
     val t0 = System.nanoTime()
     f
     (System.nanoTime() - t0) / 1e9
@@ -30,7 +30,7 @@ object Bench {
 
   private def nprocs: Int = Runtime.getRuntime.availableProcessors()
 
-  private[graft] def rmDir(path: String): Unit = {
+  private def rmDir(path: String): Unit = {
     def rm(p: java.io.File): Unit = {
       if (p.isDirectory) p.listFiles.foreach(rm)
       p.delete(): Unit
@@ -38,18 +38,14 @@ object Bench {
     rm(new java.io.File(path))
   }
 
-  // --- scaling-pair fixture + job + estimator, SHARED with
-  // tools.ScaleBench so the in-suite and fresh-JVM scaling figures measure
-  // the SAME work by construction (a fixture tweak applied to one copy
-  // would silently make the two readings incomparable — that drift is the
-  // whole reason ScaleBench exists).
+  // --- scaling-pair fixture + job + estimator
 
   /** Materialize the base pages as a 64-file parquet dir (outside any timed
     * region): real crawl input arrives as thousands of splits; the driver
     * fixture is ONE row-group, whose scan would serialize at exactly the
     * parallelism being measured. */
-  private[graft] def scalingFixture(spark: SparkSession, sfDir: String,
-                                    prefix: String): String = {
+  private def scalingFixture(spark: SparkSession, sfDir: String,
+                             prefix: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toString
     SyntheticPages.fromDocuments(spark, sfDir).repartition(64)
       .write.mode("overwrite").parquet(dir)
@@ -68,8 +64,8 @@ object Bench {
     * one-wave read at both levels (4 cores 35.4–40.5 s vs 37.2–42.8 s,
     * 16 cores 10.0–10.5 s vs 11.1–11.9 s) AND tighter in per-round
     * efficiency (0.883–0.968 vs 0.781–0.961). */
-  private[graft] def scalingPipelineDf(s: SparkSession, pagesDir: String,
-                                       repFactor: Int): DataFrame = {
+  private def scalingPipelineDf(s: SparkSession, pagesDir: String,
+                                repFactor: Int): DataFrame = {
     val pages = s.read.parquet(pagesDir).repartition(ScalingPartitions)
       .withColumn("rep", explode(sequence(lit(0), lit(repFactor - 1))))
       .withColumn("url", concat(col("url"), lit("?rep="), col("rep")))
@@ -83,9 +79,9 @@ object Bench {
     * four at 4N (per-force wall time is ~4× shorter there) — so each
     * level's steal exposure is equal; see the methodology comment at the
     * call site in `main`. Returns (tN, t4N) per-force seconds. */
-  private[graft] def scalingPair(mkSession: Int => SparkSession,
-                                 smallCpus: Int, bigCpus: Int,
-                                 df: SparkSession => DataFrame): (Double, Double) = {
+  private def scalingPair(mkSession: Int => SparkSession,
+                          smallCpus: Int, bigCpus: Int,
+                          df: SparkSession => DataFrame): (Double, Double) = {
     var spark = mkSession(smallCpus)
     val a = time { force(df(spark)); force(df(spark)) } / 2
     spark.stop()
@@ -116,116 +112,47 @@ object Bench {
     s""","detector":{"corpus_docs":${docs.length},"passes":$passes,"docs_sec_1thread":${"%.1f".format(dps)}}"""
   }
 
-  /** Pricing inputs for the daily step's OPTIONAL classes (correctness is
-    * q91/q66/q93's job): a heavy/mid/tail host mix sized so all three
-    * admission paths of IncrementalSelect.hostCapStep are exercised at
-    * cap=1000 — 8 saturated heavy hosts (~nDocs/32 prior arrivals each,
-    * dropped without ranking), 256 boundary mid hosts (~977 each — the
-    * only rows windowed), ~200k safe tail hosts (admitted without
-    * ranking). */
-  private def hostOf(c: org.apache.spark.sql.Column) = {
-    // the class selector consumes c's low 2 bits, so the host index within a
-    // class must use DIFFERENT bits (shiftright 2): with the raw id, moduli
-    // divisible by 4 collapse the mix — 2 heavy hosts, 64 mid hosts at 4×
-    // the intended arrivals (already saturated) — and the boundary/windowed
-    // admission path prices at ZERO rows
-    val h = shiftright(c, 2)
-    when(pmod(c, lit(4)) === 0, concat(lit("heavy"), pmod(h, lit(8))))
-      .when(pmod(c, lit(4)) === 1, concat(lit("mid"), pmod(h, lit(256))))
-      .otherwise(concat(lit("tail"), pmod(h, lit(200000))))
-  }
-
-  /** Deterministic 16-dim hash embeddings: uniform vectors price the
-    * frozen-cell assignment + |history|x|batch| pairing — the semantic
-    * stage's cost drivers — without a model in the sandbox. */
-  private def embOf(df: DataFrame) = df.select(col("doc_id").as("vec_id"),
-    transform(sequence(lit(0), lit(15)), i =>
-      pmod(xxhash64(col("text"), i), lit(1000000)).cast("double")
-        / 500000.0 - 1.0).as("embedding"))
-
-  /** The daily-incremental-step bench (shared with `tools.IncrBench` for
-    * standalone profiling): history = ×repFactor MUTUALLY-DISTINCT docs
-    * built from the fixture pages by THIRD-MIXING (one third each from
+  /** The daily-incremental-step bench: history = ×repFactor MUTUALLY-DISTINCT
+    * docs built from the fixture pages by THIRD-MIXING (one third each from
     * three hash-chosen pages + a variant marker) — docs sharing a source
-    * third sit at Jaccard ≈ 0.2, under the LSH collision knee, so the
-    * history has realistic hard negatives but is NOT a wall of
-    * near-duplicates (a curated corpus is distinct by construction; a
-    * history of ~identical variants floods every band bucket and
-    * benchmarks a state no real pipeline has — see `mixed` below). The
-    * history is PERSISTED to parquet (at scale the state lives in the
-    * lake — the step reads files, not an explode pipeline re-derived per
-    * history-side pass). Batch = a ~10%-scale day: fresh third-mixes (a
-    * different mix key), exact recrawls of history rows, and drop-3-token
-    * near-dup mutants of history rows. Bootstrap is untimed (one-time, at
-    * scale a lake read) but reported. Batch ids sit above 2^61 > every
-    * 60-bit history hash — the monotonic-id contract every incremental
-    * operator canonicalizes on.
-    * `alsoFull = true` additionally times the FULL curation chain over
-    * history ∪ batch (one checkpointed run) — the cost the daily step
-    * exists to avoid re-paying; a one-off comparison artifact, not part of
-    * the per-round bench (it multiplies the bench's wall time).
-    * Returns (initSec, stepSec, stageProfile, historyDocs, batchDocs,
-    * fullRunSec — -1 when skipped). */
-  def incrementalBench(spark: SparkSession, pagesDir: String, repFactor: Int,
-                       nDocs: Long, alsoFull: Boolean = false,
-                       // price the OPTIONAL classes too (substring spans,
-                       // semantic, host cap) — the full-width daily step.
-                       // Standalone (tools.IncrBench all), not in the
-                       // per-round JSON: the span-gram state multiplies the
-                       // bootstrap cost and the headline bench's incremental
-                       // figure stays comparable across rounds.
-                       allClasses: Boolean = false)
-      : (Double, Double, Seq[(String, Double)], Long, Long, Double) = {
-    val (histDocs, batch0, histDir) = incrementalFixture(spark, pagesDir, repFactor)
-    val batch = if (!allClasses) batch0
-      else batch0.withColumn("host", hostOf(col("doc_id"))).localCheckpoint()
+    * third sit at Jaccard ≈ 0.2, under the LSH collision knee, so the history
+    * has realistic hard negatives but is NOT a wall of near-duplicates (a
+    * curated corpus is distinct by construction; a history of ~identical
+    * variants floods every band bucket and benchmarks a state no real
+    * pipeline has — see `mixed` below). The history is PERSISTED to parquet
+    * (at scale the state lives in the lake — the step reads files, not an
+    * explode pipeline re-derived per history-side pass). Batch = a ~10%-scale
+    * day: fresh third-mixes (a different mix key), exact recrawls of history
+    * rows, and drop-3-token near-dup mutants of history rows. Bootstrap is
+    * untimed (one-time, at scale a lake read) but reported. Batch ids sit
+    * above 2^61 > every 60-bit history hash — the monotonic-id contract every
+    * incremental operator canonicalizes on.
+    * Returns (initSec, stepSec, stageProfile, historyDocs, batchDocs). */
+  private def incrementalBench(spark: SparkSession, pagesDir: String,
+                               repFactor: Int, nDocs: Long)
+      : (Double, Double, Seq[(String, Double)], Long, Long) = {
+    val (histDocs, batch, histDir) = incrementalFixture(spark, pagesDir, repFactor)
     val nBatch = batch.count()
     var state: graft.pipeline.IncrementalCuration.State = null
     val initSec = time {
-      state = graft.pipeline.IncrementalCuration.init(histDocs,
-        if (allClasses) Some(embOf(histDocs)) else None,
-        withLineDedup = true, withSpanDedup = allClasses)
-      if (allClasses)
-        state = state.copy(hosts = Some(graft.operators.IncrementalSelect
-          .hostCapInit(histDocs.withColumn("host", hostOf(col("doc_id"))), "host")
-          .localCheckpoint()))
+      state = graft.pipeline.IncrementalCuration.init(histDocs, None,
+        withLineDedup = true)
     }
-    // size the gram Bloom from the REAL persisted-table count (the state is
-    // materialized — counting it is a metadata-cheap scan), as the scaladoc
-    // prescribes for production; the 512x default would build a filter for
-    // half a billion items here
-    val nGrams = state.grams.map(_.count()).getOrElse(-1L)
     def rep(): (Double, Seq[(String, Double)]) = {
       val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
       val sec = time {
         graft.pipeline.IncrementalCuration.step(state, batch,
-          batchEmbeddings = if (allClasses) Some(embOf(batch)) else None,
           expectedHistoryDigests = nDocs,
           // the fixture corpus is one paragraph per page — size the line
           // filter from the known line count, not the 32x safety default
           expectedHistoryLines = 2L * nDocs,
-          expectedHistoryGrams = nGrams,
-          hostCapN = if (allClasses) Some(1000) else None,
           onStage = (n, s) => stages += ((n, s)))
       }
       (sec, stages.toSeq)
     }
     val (stepSec, stepStages) = Seq(rep(), rep()).minBy(_._1)
-    val fullSec =
-      if (!alsoFull) -1.0
-      else {
-        val outDir = java.nio.file.Files.createTempDirectory("graft_bench_incrfull").toString
-        val union = histDocs.select(col("doc_id"), col("text"))
-          .unionByName(batch.select(col("doc_id"), col("text")))
-        val sec = time {
-          Curation.runCheckpointed(spark, union, None, outDir,
-            inputFp = "incrfull-" + outDir)
-        }
-        rmDir(outDir)
-        sec
-      }
     rmDir(histDir)
-    (initSec, stepSec, stepStages, nDocs, nBatch, fullSec)
+    (initSec, stepSec, stepStages, nDocs, nBatch)
   }
 
   /** The LAKE-BACKED daily step (`pipeline_incremental_lake`): the same
@@ -238,26 +165,15 @@ object Bench {
     * untimed (one-time, reported); each rep resets the tables to version
     * 0 by dropping the appended batch dirs so both reps step the same
     * state. */
-  def incrementalLakeBench(spark: SparkSession, pagesDir: String,
-                           repFactor: Int, nDocs: Long,
-                           // full-width variant (spans/semantic/hostcap on)
-                           // over the PRODUCTION state layout — see
-                           // incrementalBench's allClasses
-                           allClasses: Boolean = false)
+  private def incrementalLakeBench(spark: SparkSession, pagesDir: String,
+                                   repFactor: Int, nDocs: Long)
       : (Double, Double, Seq[(String, Double)], Long, Long) = {
-    val (histDocs, batch0, histDir) = incrementalFixture(spark, pagesDir, repFactor)
-    val batch = if (!allClasses) batch0
-      else batch0.withColumn("host", hostOf(col("doc_id"))).localCheckpoint()
+    val (histDocs, batch, histDir) = incrementalFixture(spark, pagesDir, repFactor)
     val nBatch = batch.count()
     val root = java.nio.file.Files
       .createTempDirectory("graft_bench_lake").toString + "/state"
     val initSec = time {
-      IncrementalCuration.initLake(histDocs,
-        if (allClasses) Some(embOf(histDocs)) else None,
-        root, withLineDedup = true, withSpanDedup = allClasses,
-        hostArrivals = if (!allClasses) None
-          else Some(graft.operators.IncrementalSelect.hostCapInit(
-            histDocs.withColumn("host", hostOf(col("doc_id"))), "host")))
+      IncrementalCuration.initLake(histDocs, None, root, withLineDedup = true)
     }
     def resetToBootstrap(): Unit =
       for (t <- Seq("docs", "bands", "lines", "grams", "cells", "hosts",
@@ -270,10 +186,8 @@ object Bench {
       val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
       val sec = time {
         graft.pipeline.IncrementalCuration.stepLake(spark, root, batch,
-          batchEmbeddings = if (allClasses) Some(embOf(batch)) else None,
           expectedHistoryDigests = nDocs,
           expectedHistoryLines = 2L * nDocs,
-          hostCapN = if (allClasses) Some(1000) else None,
           onStage = (n, s) => stages += ((n, s)))
       }
       resetToBootstrap()
@@ -289,8 +203,8 @@ object Bench {
     * docs/sec through runCheckpointed's whole chain, checkpoint parquet I/O
     * included, with the per-stage wall-time profile. Each rep gets a FRESH
     * checkpoint dir — a reused one would resume at zero cost and measure
-    * nothing. Exposed for standalone re-measurement (tools.CurBench). */
-  def curationRep(spark: SparkSession, pagesDir: String, repFactor: Int)
+    * nothing. */
+  private def curationRep(spark: SparkSession, pagesDir: String, repFactor: Int)
       : (Double, Seq[(String, Double)]) = {
     val outDir = java.nio.file.Files.createTempDirectory("graft_bench_curation").toString
     val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
@@ -307,11 +221,11 @@ object Bench {
     (sec, stages.toSeq)
   }
 
-  /** The incremental-step fixture, exposed for profiling tools: a
-    * `repFactor`-replicated third-mix history plus a ~10%-scale batch
-    * (fresh mixes, exact recrawls, drop-3-token near-dup mutants).
+  /** The incremental-step fixture: a `repFactor`-replicated third-mix
+    * history plus a ~10%-scale batch (fresh mixes, exact recrawls,
+    * drop-3-token near-dup mutants).
     * Returns (histDocs, batch [materialized], histDir to rmDir after). */
-  def incrementalFixture(spark: SparkSession, pagesDir: String, repFactor: Int)
+  private def incrementalFixture(spark: SparkSession, pagesDir: String, repFactor: Int)
       : (DataFrame, DataFrame, String) = {
     import graft.functions.{TextFunctions => TF}
     val basePages = spark.read.parquet(pagesDir).select(col("url"), col("text"))
@@ -404,12 +318,11 @@ object Bench {
     // Measured FIRST, before the headline suite: the north rule's criterion
     // is per-spark-submit — a fresh JVM per job — and the in-suite reading
     // taken after ~130 executed query plans was depressed ~0.05 by JVM
-    // aging (grown heap, GC pressure; the fresh-JVM tools.ScaleBench read
-    // 0.810 median / 0.822 best in the same hour post-suite runs read
+    // aging (grown heap, GC pressure; a fresh-JVM run of the same pairs
+    // read 0.810 median / 0.822 best in the same hour post-suite runs read
     // 0.744–0.817 — same code, same host).
     // Fixture + job + pair estimator live in scalingFixture /
-    // scalingPipelineDf / scalingPair above, shared verbatim with
-    // tools.ScaleBench.
+    // scalingPipelineDf / scalingPair above.
     val pagesDir = scalingFixture(spark, sfDir, "graft_bench_pages")
     // Raw-HTML variant of the same corpus for the extraction bench: the body
     // text sandwiched between two known-prose paragraphs (so jusText's
@@ -585,7 +498,7 @@ object Bench {
     // but reported. Batch ids sit above 2^61 > every 60-bit history hash —
     // the monotonic-id contract every incremental operator canonicalizes
     // on.
-    val (incrInitSec, incrStepSec, incrStages, incrHistDocs, incrBatchDocs, _) =
+    val (incrInitSec, incrStepSec, incrStages, incrHistDocs, incrBatchDocs) =
       incrementalBench(spark, pagesDir, repFactor, nDocs)
 
     // the same step against LAKE-backed state: the production layout's

@@ -87,7 +87,7 @@ object ExactSubstring {
 
   /** Per-document coverage statistics for an arbitrary (id, pos) cut list —
     * the [[stats]] aggregation factored out so cross-batch cut lists
-    * ([[IncrementalDedup.incrSpanCuts]]) report through the identical
+    * ([[IncrementalDedup.incrSpanStats]]) report through the identical
     * interval-union arithmetic (lead-window overlap clamp, 4-dp ratio). */
   private[graft] def statsFromCuts(df: DataFrame, idCol: String,
                                    textCol: String, cuts: DataFrame,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -22,11 +22,14 @@ import org.apache.spark.util.sketch.BloomFilter
   *
   * The result is therefore EXACTLY equal to `batch ANTI JOIN history` — the
   * Bloom pass changes the cost, not the answer — which is what the DuckDB
-  * oracle (q51) checks.
+  * oracle (q51) checks. The paragraph ([[newLinesOnly]]) and substring-span
+  * ([[crossSpanCuts]], [[incrSpanStats]]) operators below use the same
+  * prefilter, the span ones through the membership dual [[seenOnly]].
   *
   * Sizing: ~1.2 GB per 10⁹ history keys at fpp=0.01. Beyond a few 10⁹ keys a
   * single broadcast filter stops fitting one task binary / one memory chunk,
-  * so `shards = B > 1` hash-shards the history (`MurmurHash3(digest) mod B`),
+  * so `shards = B > 1` hash-shards the history
+  * (`floorMod(xxhash64(digest), B)` — [[buildFilterArray]], [[shardOf]]),
   * builds one filter per shard in the SAME single pass (a treeAggregate of a
   * B-slot array), and routes each batch row to its shard's filter map-side —
   * still no shuffle of the definitely-new rows, and each filter is 1/B the
@@ -35,66 +38,52 @@ import org.apache.spark.util.sketch.BloomFilter
   * at 10¹²-key scale the filter array is built per-shard-group and probed
   * by executor-side routing exactly as here).
   *
-  * Broadcast lifecycle: each batch of an incremental loop builds a fresh
-  * multi-GB broadcast; without an explicit release they accumulate on the
-  * driver and executors until GC happens to collect the wrapper. Use
-  * [[newOnlyManaged]] in loops and call `release()` after the batch's
-  * ACTION has completed (the DataFrame is lazy — releasing earlier would
-  * fail tasks that haven't probed the filter yet).
+  * Every Bloom-prefiltered operator here takes its filters as an argument:
+  * either built in one pass over the history ([[buildFilterArray]]) or
+  * merged from the per-batch sidecars a lake-backed state persists
+  * ([[graft.sources.StateLake.readBloom]]). CONTRACT: the filters must
+  * cover a SUPERSET of the history's keys. A filter MISSING history keys
+  * produces Bloom false negatives — those rows bypass the verify join and
+  * the answer silently changes (correctness, not cost). Only OVER-full
+  * filters are harmless: extra keys merely degrade fpp, so more rows pay the
+  * verify join. The lake path guarantees the superset by construction — the
+  * state version is the min committed batch across data tables AND Bloom
+  * sidecars ([[graft.pipeline.IncrementalCuration.lakeStateVersion]]), so a
+  * sidecar can never lag the table it guards.
+  *
+  * Broadcast lifecycle: each call broadcasts its filter array and returns
+  * it with a `release()` hook ([[Prefiltered]]). A per-batch loop builds a
+  * fresh multi-GB broadcast every batch; without an explicit release they
+  * accumulate on the driver and executors until GC happens to collect the
+  * wrapper. Call `release()` after the consuming ACTION has completed (the
+  * DataFrame is lazy — releasing earlier would fail tasks that haven't
+  * probed the filter yet).
   */
 object IncrementalDedup {
 
   /** Lazy prefiltered result + explicit broadcast release hook. */
   final case class Prefiltered(df: DataFrame, release: () => Unit)
 
+  /** Broadcast `filters` and return the codegen'd probe of `digestCol`
+    * against them with the broadcast's release hook. A codegen'd probe, not
+    * a Scala UDF: it runs on every row of every incoming batch, and the
+    * UDF's per-row encoder round-trip is a real tax at 10⁹-row batches
+    * (PlanSpec pins zero ScalaUDF nodes here). */
+  private def bloomProbe(df: DataFrame, digestCol: String,
+                         filters: Array[BloomFilter]): (Column, () => Unit) = {
+    val bfB = df.sparkSession.sparkContext.broadcast(filters)
+    (graft.functions.BloomMightContainSharded
+      .might_contain_sharded(col(digestCol), bfB), () => { bfB.destroy(); () })
+  }
+
   /** Rows of `batch` whose `digestCol` value does not occur in
-    * `history(digestCol)`. Both inputs must expose `digestCol`.
-    * Convenience form of [[newOnlyManaged]] for one-shot use (the broadcast
-    * filter is left to GC).
-    *
-    * @param expectedItems sizing hint for the filter (history digest count)
-    * @param fpp           false-positive rate: fraction of genuinely-new rows
-    *                      that needlessly pay the verify join
-    * @param shards        B-way history sharding (B=1 → one filter)
-    */
+    * `history(digestCol)`. Both inputs must expose `digestCol`; `filters`
+    * cover the history's digests (see the object doc's SUPERSET contract).
+    * Exactly equals `batch ANTI JOIN history` — the DuckDB oracle (q51)
+    * checks it. */
   def newOnly(batch: DataFrame, history: DataFrame, digestCol: String,
-              expectedItems: Long, fpp: Double = 0.01, shards: Int = 1): DataFrame =
-    newOnlyManaged(batch, history, digestCol, expectedItems, fpp, shards).df
-
-  /** [[newOnly]] with the broadcast's lifecycle exposed — call `release()`
-    * after the consuming action finishes (required in per-batch loops). */
-  def newOnlyManaged(batch: DataFrame, history: DataFrame, digestCol: String,
-                     expectedItems: Long, fpp: Double = 0.01,
-                     shards: Int = 1): Prefiltered =
-    newOnlyPrebuilt(batch, history, digestCol,
-      buildFilterArray(history, digestCol, expectedItems, fpp, shards))
-
-  /** [[newOnlyManaged]] with the history's Bloom filters supplied instead
-    * of built — the persisted-sidecar path
-    * ([[graft.sources.StateLake.readBloom]]): a daily step loads the
-    * accumulated per-batch filters and never scans the history digest
-    * table to rebuild them (at 10¹²-key scale the rebuild is a full
-    * history pass per day; the sidecar read is megabytes).
-    *
-    * CONTRACT: `filters` must cover a SUPERSET of `history(digestCol)`.
-    * A filter MISSING history digests produces Bloom false negatives —
-    * those rows route to `definitelyNew` and BYPASS the verify anti-join,
-    * silently admitting duplicates (correctness, not cost). Only
-    * OVER-full filters are harmless: extra digests merely degrade fpp, so
-    * more rows pay the verify join. The lake path guarantees the superset
-    * by construction — the state version is the min committed batch across
-    * data tables AND Bloom sidecars
-    * ([[graft.pipeline.IncrementalCuration.lakeStateVersion]]), so a
-    * sidecar can never lag the table it guards. */
-  def newOnlyPrebuilt(batch: DataFrame, history: DataFrame, digestCol: String,
-                      filters: Array[BloomFilter]): Prefiltered = {
-    val bfB = batch.sparkSession.sparkContext.broadcast(filters)
-    // codegen'd probe, not a Scala UDF: it runs on every row of every
-    // incoming batch, and the UDF's per-row encoder round-trip is a real
-    // tax at 10⁹-row batches (PlanSpec pins zero ScalaUDF nodes here)
-    val mightContain = graft.functions.BloomMightContainSharded
-      .might_contain_sharded(col(digestCol), bfB)
-
+              filters: Array[BloomFilter]): Prefiltered = {
+    val (mightContain, release) = bloomProbe(batch, digestCol, filters)
     // No distinct() on the history side: LEFT ANTI semantics are unaffected
     // by right-side duplicates, and a distinct would shuffle the ENTIRE
     // history every batch. At 10¹²-key scale the history digest table is
@@ -102,35 +91,7 @@ object IncrementalDedup {
     val definitelyNew = batch.filter(!mightContain)
     val suspects = batch.filter(mightContain)
       .join(history.select(digestCol), Seq(digestCol), "left_anti")
-    Prefiltered(definitelyNew.unionByName(suspects),
-      () => { bfB.destroy(); () })
-  }
-
-  /** The per-batch incremental loop: dedup each batch against the initial
-    * history PLUS every earlier batch's survivors, releasing each batch's
-    * filter broadcast as soon as its action completes — the broadcast-
-    * lifecycle discipline [[newOnlyManaged]] exists for, exercised as an
-    * actual loop. Returns one materialized survivor DataFrame per batch.
-    *
-    * Production mapping: `localCheckpoint` stands in for the real action
-    * (writing the batch's survivors to the lake and appending their
-    * digests to the bucketed history table); the in-memory history union
-    * stands in for re-reading that table. Each iteration builds ONE fresh
-    * filter over the current history and destroys it before the next —
-    * peak broadcast footprint is one filter array, not `batches.length`. */
-  def dedupBatches(batches: Seq[DataFrame], history0: DataFrame,
-                   digestCol: String, expectedItems: Long,
-                   fpp: Double = 0.01, shards: Int = 1): Seq[DataFrame] = {
-    var history = history0.select(digestCol)
-    val out = Seq.newBuilder[DataFrame]
-    for (batch <- batches) {
-      val pf = newOnlyManaged(batch, history, digestCol, expectedItems, fpp, shards)
-      val survivors = pf.df.localCheckpoint() // eager: runs the probe tasks now
-      pf.release() // safe — every task that needed the filter has finished
-      out += survivors
-      history = history.unionByName(survivors.select(digestCol))
-    }
-    out.result()
+    Prefiltered(definitelyNew.unionByName(suspects), release)
   }
 
   // --- Incremental NEAR-dup dedup (cross-batch MinHash-LSH) --------------
@@ -235,9 +196,12 @@ object IncrementalDedup {
       .select(col("hist_id"),
         sort_array(TF.shingleHashes(col(textCol), shingleWidth)).as("sh_b"))
     cand.join(shB, "batch_id").join(shH, "hist_id")
-      // |A∪B| = |A|+|B|−|A∩B| — see Dedup.jaccardVerify: one merge-walk
-      // intersect count per pair, no materialized union array (this is the
-      // dominant stage of the verify join at 400k+ candidate pairs per step)
+      // |A∪B| = |A|+|B|−|A∩B| — see Dedup.jaccardVerify: a merge-walk
+      // intersect count, no materialized union array (this is the dominant
+      // stage of the verify join at 400k+ candidate pairs per step). A
+      // caller's `jaccard` filter (nearNewOnly, q65) is pushed into the
+      // verify join's condition with `_i` inlined, so the walk runs twice
+      // per pair there and once more in the `_i` projection per kept pair.
       .withColumn("_i", graft.functions.SortedIntersectFunctions
         .sorted_intersect_count(col("sh_a"), col("sh_b")))
       .withColumn("jaccard", col("_i").cast("double") /
@@ -259,40 +223,6 @@ object IncrementalDedup {
       .filter(col("jaccard") >= threshold)
       .select(col("batch_id").as(idCol)).distinct()
     batch.join(dupIds, Seq(idCol), "left_anti")
-  }
-
-  /** Per-batch incremental NEAR-dup loop — the daily-crawl analogue of
-    * [[dedupBatches]]: each batch is filtered against the accumulated
-    * history band table ([[nearNewOnly]]), then its survivors' bands are
-    * appended to the history (what a production run appends to the lake's
-    * bucketed band table). Returns one materialized survivor DataFrame per
-    * batch. Within-batch near-dups are the full-corpus operators' job
-    * (candidatePairs + connectedComponents over the batch alone) — this
-    * loop only guards the batch↔history boundary. */
-  def nearDedupBatches(batches: Seq[DataFrame], history0: DataFrame,
-                       idCol: String, textCol: String,
-                       threshold: Double = 0.5, maxBucket: Int = 4096,
-                       shingleWidth: Int = 3): Seq[DataFrame] = {
-    var history = history0.select(col(idCol), col(textCol))
-    // Band table accumulates as PIECES: each piece is checkpointed exactly
-    // once when it is born, and the per-batch view is a lazy union of the
-    // existing pieces — no re-materialization of the whole history per
-    // batch, no generation-per-batch copies held in the block manager
-    // (at scale: each piece is an APPEND to the persisted band table).
-    var pieces = Vector(
-      bandTable(history, idCol, textCol, shingleWidth = shingleWidth)
-        .localCheckpoint())
-    val out = Seq.newBuilder[DataFrame]
-    for (batch <- batches) {
-      val survivors = nearNewOnly(batch, history, idCol, textCol, threshold,
-        historyBands = Some(pieces.reduce(_ unionByName _)),
-        maxBucket, shingleWidth).localCheckpoint()
-      out += survivors
-      history = history.unionByName(survivors.select(col(idCol), col(textCol)))
-      pieces :+= bandTable(survivors, idCol, textCol, shingleWidth = shingleWidth)
-        .localCheckpoint()
-    }
-    out.result()
   }
 
   // --- Incremental PARAGRAPH/LINE dedup (cross-batch) --------------------
@@ -326,109 +256,43 @@ object IncrementalDedup {
     * join against the digest-bucketed history table. Within-batch line
     * dedup stays [[ExactSubstring.ccnetDedupLines]]'s job — this operator
     * guards the batch↔history boundary only. */
-  def newLinesOnlyManaged(batch: DataFrame, historyDigests: DataFrame,
-                          idCol: String, textCol: String,
-                          expectedItems: Long, fpp: Double = 0.01,
-                          shards: Int = 1): Prefiltered = {
-    val pf = newOnlyManaged(lineDigests(batch, idCol, textCol),
-      historyDigests, "line_digest", expectedItems, fpp, shards)
-    Prefiltered(ExactSubstring.rebuildDocs(pf.df), pf.release)
-  }
-
-  /** [[newLinesOnlyManaged]] with the line-digest filters supplied — the
-    * persisted-sidecar path, same SUPERSET contract as [[newOnlyPrebuilt]]
-    * (a filter missing history line digests silently re-admits known
-    * boilerplate lines). */
-  def newLinesOnlyPrebuilt(batch: DataFrame, historyDigests: DataFrame,
-                           idCol: String, textCol: String,
-                           filters: Array[BloomFilter]): Prefiltered = {
-    val pf = newOnlyPrebuilt(lineDigests(batch, idCol, textCol),
+  def newLinesOnly(batch: DataFrame, historyDigests: DataFrame,
+                   idCol: String, textCol: String,
+                   filters: Array[BloomFilter]): Prefiltered = {
+    val pf = newOnly(lineDigests(batch, idCol, textCol),
       historyDigests, "line_digest", filters)
     Prefiltered(ExactSubstring.rebuildDocs(pf.df), pf.release)
   }
 
-  /** One-shot form of [[newLinesOnlyManaged]] (filter left to GC). */
-  def newLinesOnly(batch: DataFrame, historyDigests: DataFrame,
-                   idCol: String, textCol: String, expectedItems: Long,
-                   fpp: Double = 0.01, shards: Int = 1): DataFrame =
-    newLinesOnlyManaged(batch, historyDigests, idCol, textCol,
-      expectedItems, fpp, shards).df
-
-  /** Per-batch incremental paragraph-dedup loop (the line-grain analogue
-    * of [[dedupBatches]]): each batch is rebuilt against the accumulated
-    * line-digest history, then the digests of its SURVIVING lines are
-    * appended (what a production run appends to the persisted digest
-    * table), and the batch's filter broadcast is released before the next
-    * iteration builds its own. */
-  def lineDedupBatches(batches: Seq[DataFrame], history0: DataFrame,
-                       idCol: String, textCol: String, expectedItems: Long,
-                       fpp: Double = 0.01, shards: Int = 1): Seq[DataFrame] = {
-    // the digest history accumulates as PIECES (the nearDedupBatches
-    // discipline): each piece is checkpointed once at birth and the
-    // per-batch view is a lazy union — re-checkpointing the whole history
-    // per batch would recompute and copy O(N²) rows across the loop and
-    // hold a full history generation per iteration in the block manager
-    var pieces = Vector(
-      lineDigests(history0, idCol, textCol).select("line_digest")
-        .localCheckpoint())
-    val out = Seq.newBuilder[DataFrame]
-    for (batch <- batches) {
-      val pf = newLinesOnlyManaged(batch, pieces.reduce(_ unionByName _),
-        idCol, textCol, expectedItems, fpp, shards)
-      val survivors = pf.df.localCheckpoint() // eager: probe tasks run now
-      pf.release()
-      out += survivors
-      // distinct per appended piece: a boilerplate line surviving in 10k
-      // batch docs must append ONE digest, not 10k — history size (and
-      // every later filter build) should grow with distinct lines, not
-      // line occurrences. (Cross-piece repeats of a digest are harmless:
-      // anti/semi semantics ignore right-side duplicates, the same reason
-      // newOnlyPrebuilt skips a history-wide distinct.)
-      pieces :+= lineDigests(survivors.withColumnRenamed("text_dedup", "t"),
-          "id", "t")
-        .select("line_digest").distinct().localCheckpoint()
-    }
-    out.result()
-  }
-
   // --- Incremental EXACT-SUBSTRING (span) dedup --------------------------
 
-  /** Membership dual of [[newOnlyManaged]]: rows of `probe` whose
-    * `digestCol` value DOES occur in `history(digestCol)`. Bloom-negative
-    * rows are definitely unseen (no false negatives) and never reach the
-    * join; only Bloom-positive suspects pay the exact verify, here a
-    * LEFT SEMI against the digest-bucketed history table (false positives
-    * die there). Result exactly equals `probe SEMI JOIN history` — the
-    * Bloom pass changes cost, not the answer, the same contract as
-    * [[newOnlyManaged]]. */
-  def seenOnlyManaged(probe: DataFrame, history: DataFrame, digestCol: String,
-                      expectedItems: Long, fpp: Double = 0.01,
-                      shards: Int = 1): Prefiltered =
-    seenOnlyPrebuilt(probe, history, digestCol,
-      buildFilterArray(history, digestCol, expectedItems, fpp, shards))
-
-  /** [[seenOnlyManaged]] with the filters supplied — the persisted-sidecar
-    * path, same SUPERSET contract as [[newOnlyPrebuilt]] (here a false
-    * negative silently SKIPS a span cut the history holds the canonical
-    * copy of). */
-  def seenOnlyPrebuilt(probe: DataFrame, history: DataFrame,
-                       digestCol: String,
-                       filters: Array[BloomFilter]): Prefiltered = {
-    val bfB = probe.sparkSession.sparkContext.broadcast(filters)
-    val mightContain = graft.functions.BloomMightContainSharded
-      .might_contain_sharded(col(digestCol), bfB)
-    val seen = probe.filter(mightContain)
-      .join(history.select(digestCol), Seq(digestCol), "left_semi")
-    Prefiltered(seen, () => { bfB.destroy(); () })
+  /** Membership dual of [[newOnly]]: rows of `probe` whose `digestCol`
+    * value DOES occur in `history(digestCol)`. Bloom-negative rows are
+    * definitely unseen (no false negatives) and never reach the join; only
+    * Bloom-positive suspects pay the exact verify, here a LEFT SEMI against
+    * the digest-bucketed history table (false positives die there). Result
+    * exactly equals `probe SEMI JOIN history` under the same SUPERSET
+    * contract as [[newOnly]] (here a false negative silently SKIPS a span
+    * cut the history holds the canonical copy of). */
+  def seenOnly(probe: DataFrame, history: DataFrame, digestCol: String,
+               filters: Array[BloomFilter]): Prefiltered = {
+    val (mightContain, release) = bloomProbe(probe, digestCol, filters)
+    Prefiltered(probe.filter(mightContain)
+      .join(history.select(digestCol), Seq(digestCol), "left_semi"), release)
   }
 
   /** One distributed pass building the B-sharded filter array over
-    * `history(digestCol)` — public so a lake-backed pipeline can build a
-    * batch's filter CONTRIBUTION and persist it as a sidecar
-    * ([[graft.sources.StateLake.writeBloom]]). Sidecar discipline: every
-    * contribution to one logical filter MUST be built with the same
-    * (expectedItems, fpp, shards) — merging needs identical bit-array
-    * sizes, and the shard router depends on B. */
+    * `history(digestCol)` — the filters every prefiltered operator here
+    * probes, and a batch's filter CONTRIBUTION when a lake-backed pipeline
+    * persists it as a sidecar ([[graft.sources.StateLake.writeBloom]]).
+    * Sidecar discipline: every contribution to one logical filter MUST be
+    * built with the same (expectedItems, fpp, shards) — merging needs
+    * identical bit-array sizes, and the shard router depends on B.
+    *
+    * @param expectedItems sizing hint for the filter (history digest count)
+    * @param fpp           false-positive rate: fraction of genuinely-new rows
+    *                      that needlessly pay the verify join
+    * @param shards        B-way history sharding (B=1 → one filter) */
   def buildFilterArray(history: DataFrame, digestCol: String,
                        expectedItems: Long, fpp: Double = 0.01,
                        shards: Int = 1): Array[BloomFilter] = {
@@ -471,28 +335,33 @@ object IncrementalDedup {
       .agg(min(struct(col("id"), col("pos"))).as("f"))
       .select(col("g"), col("f.id").as("first_id"), col("f.pos").as("first_pos"))
 
+  /** The Bloom key of a gram: the decimal string of its 60-bit hash `g`,
+    * as column `g_digest`. The probe ([[crossSpanCuts]]) and every filter
+    * over a gram table — built in memory or written as a lake sidecar —
+    * key on this one form; a filter built over any other form of `g` would
+    * never match the probe (every span cut silently skipped). */
+  def gramDigest: Column = col("g").cast("string").as("g_digest")
+
   /** Cross-boundary span cuts: every (id, pos) occurrence in `batch` of a
     * gram already present in the gram history — the spans last month's
     * corpus holds the canonical copy of. Bloom-prefiltered membership
-    * ([[seenOnlyManaged]]): the overwhelming majority of a fresh crawl's
-    * grams are new and never shuffle; only suspects pay the semi join.
+    * ([[seenOnly]]): the overwhelming majority of a fresh crawl's grams are
+    * new and never shuffle; only suspects pay the semi join. `filters`
+    * cover `historyGrams.select(gramDigest)` on key `g_digest`.
     *
-    * SIZING: `expectedItems` must be sized for GRAM grain — ~512 distinct
-    * grams per doc at k=8, i.e. orders of magnitude above doc counts. The
-    * 2²⁰ default suits only small fixtures; an undersized filter saturates
-    * (fpp → 1) and silently degenerates the prefilter into shuffling every
-    * occurrence into the verify join (correct, but the cost the filter
-    * exists to avoid). Production sizes from the real gram-table count the
-    * way [[graft.pipeline.IncrementalCuration.stepLake]] does. */
-  def crossSpanCutsManaged(batch: DataFrame, historyGrams: DataFrame,
-                           idCol: String, textCol: String, k: Int = 8,
-                           expectedItems: Long = 1 << 20, fpp: Double = 0.01,
-                           shards: Int = 1): Prefiltered = {
+    * SIZING: a gram filter must be sized for GRAM grain — ~512 distinct
+    * grams per doc at k=8, i.e. orders of magnitude above doc counts. An
+    * undersized filter saturates (fpp → 1) and silently degenerates the
+    * prefilter into shuffling every occurrence into the verify join
+    * (correct, but the cost the filter exists to avoid). Production sizes
+    * from the real gram-table count the way
+    * [[graft.pipeline.IncrementalCuration.stepLake]] does. */
+  def crossSpanCuts(batch: DataFrame, historyGrams: DataFrame,
+                    idCol: String, textCol: String, k: Int,
+                    filters: Array[BloomFilter]): Prefiltered = {
     val occ = ExactSubstring.occurrences(batch, idCol, textCol, k)
-      .withColumn("g_digest", col("g").cast("string"))
-    val pf = seenOnlyManaged(occ,
-      historyGrams.select(col("g").cast("string").as("g_digest")),
-      "g_digest", expectedItems, fpp, shards)
+      .select(col("*"), gramDigest)
+    val pf = seenOnly(occ, historyGrams.select(gramDigest), "g_digest", filters)
     Prefiltered(pf.df.select("id", "pos"), pf.release)
   }
 
@@ -500,7 +369,8 @@ object IncrementalDedup {
     * [[ExactSubstring.stats]]: per batch document, the coverage of the
     * union of (a) within-batch duplicated spans (the full-corpus rule over
     * the batch alone — [[ExactSubstring.cutSpans]]) and (b) cross-boundary
-    * spans whose gram the history already holds ([[crossSpanCutsManaged]]).
+    * spans whose gram the history already holds ([[crossSpanCuts]], same
+    * `filters`).
     *
     * EXACTLY equals [[ExactSubstring.stats]] over (history ∪ batch)
     * restricted to batch documents, provided batch ids exceed every
@@ -509,56 +379,16 @@ object IncrementalDedup {
     * in the union, so membership IS the union verdict — which is what the
     * q91 DuckDB oracle checks. Output: (id, n_tokens, n_spans, n_cut,
     * cut_ratio), one row per batch doc. */
-  def incrSpanStatsManaged(batch: DataFrame, historyGrams: DataFrame,
-                           idCol: String, textCol: String, k: Int = 8,
-                           maxDf: Long = 64, expectedItems: Long = 1 << 20,
-                           fpp: Double = 0.01, shards: Int = 1): Prefiltered = {
-    val cross = crossSpanCutsManaged(batch, historyGrams, idCol, textCol, k,
-      expectedItems, fpp, shards)
-    val cuts = ExactSubstring.cutSpans(batch, idCol, textCol, k, maxDf)
-      .unionByName(cross.df).distinct()
-    Prefiltered(
-      ExactSubstring.statsFromCuts(batch, idCol, textCol, cuts, k),
-      cross.release)
-  }
-
-  /** [[crossSpanCutsManaged]] with the gram filters supplied — the
-    * persisted-sidecar path. Contributions MUST be built over the same
-    * digest form the probe uses: `g.cast("string")` (see
-    * [[graft.pipeline.IncrementalCuration.stepLake]]). */
-  def crossSpanCutsPrebuilt(batch: DataFrame, historyGrams: DataFrame,
-                            idCol: String, textCol: String, k: Int,
-                            filters: Array[BloomFilter]): Prefiltered = {
-    val occ = ExactSubstring.occurrences(batch, idCol, textCol, k)
-      .withColumn("g_digest", col("g").cast("string"))
-    val pf = seenOnlyPrebuilt(occ,
-      historyGrams.select(col("g").cast("string").as("g_digest")),
-      "g_digest", filters)
-    Prefiltered(pf.df.select("id", "pos"), pf.release)
-  }
-
-  /** [[incrSpanStatsManaged]] with the gram filters supplied — the
-    * persisted-sidecar path, same answer contract. */
-  def incrSpanStatsPrebuilt(batch: DataFrame, historyGrams: DataFrame,
-                            idCol: String, textCol: String, k: Int,
-                            maxDf: Long,
-                            filters: Array[BloomFilter]): Prefiltered = {
-    val cross = crossSpanCutsPrebuilt(batch, historyGrams, idCol, textCol,
-      k, filters)
-    val cuts = ExactSubstring.cutSpans(batch, idCol, textCol, k, maxDf)
-      .unionByName(cross.df).distinct()
-    Prefiltered(
-      ExactSubstring.statsFromCuts(batch, idCol, textCol, cuts, k),
-      cross.release)
-  }
-
-  /** One-shot form of [[incrSpanStatsManaged]] (filter left to GC). */
   def incrSpanStats(batch: DataFrame, historyGrams: DataFrame,
-                    idCol: String, textCol: String, k: Int = 8,
-                    maxDf: Long = 64, expectedItems: Long = 1 << 20,
-                    fpp: Double = 0.01, shards: Int = 1): DataFrame =
-    incrSpanStatsManaged(batch, historyGrams, idCol, textCol, k, maxDf,
-      expectedItems, fpp, shards).df
+                    idCol: String, textCol: String, k: Int, maxDf: Long,
+                    filters: Array[BloomFilter]): Prefiltered = {
+    val cross = crossSpanCuts(batch, historyGrams, idCol, textCol, k, filters)
+    val cuts = ExactSubstring.cutSpans(batch, idCol, textCol, k, maxDf)
+      .unionByName(cross.df).distinct()
+    Prefiltered(
+      ExactSubstring.statsFromCuts(batch, idCol, textCol, cuts, k),
+      cross.release)
+  }
 
   /** Shard router over the 8-byte filter key — build and probe both run
     * this exact function (no SQL-side mirror needed; result equality with

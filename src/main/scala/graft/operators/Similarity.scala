@@ -219,32 +219,38 @@ object Similarity {
     * Embeddings are L2-normalized first (the algorithm operates on the unit
     * sphere; normalization also makes scaled duplicates land in the same
     * cell — Euclidean cells on raw vectors would separate x from 2x despite
-    * cosine 1). Scale shape: the centroid fit is the bounded `sampleSize`
-    * driver sample (same discipline as [[ivfTopK]]); assignment is a narrow
-    * broadcast-centroid map; the only shuffle is the within-cell self-join,
-    * bounded by `maxCluster` per cell (rank-capped by id — members beyond
-    * the cap are kept unexamined, the documented recall loss; pick
-    * nCells ≈ n / targetClusterSize). Output: (vec_id, cell, keep). */
+    * cosine 1). Scale shape: the centroid fit ([[fitSemCentroids]]) is the
+    * bounded `sampleSize` driver sample (same discipline as [[ivfTopK]]);
+    * assignment is a narrow broadcast-centroid map; the only shuffle is the
+    * within-cell self-join, bounded by `maxCluster` per cell (rank-capped by
+    * id — members beyond the cap are kept unexamined, the documented recall
+    * loss; pick nCells ≈ n / targetClusterSize).
+    *
+    * `centroids` is the coarse quantizer: [[fitSemCentroids]] over the same
+    * vectors for a one-pass run, or the frozen centroids of an earlier pass
+    * (the deterministic remainder of the algorithm). Output: (vec_id, cell,
+    * keep), with a `release()` hook that unpersists the assignment subtree —
+    * call it after the consuming ACTION completes; repeated un-released
+    * calls (batch loops, interactive sessions) otherwise accumulate
+    * MEMORY_AND_DISK blocks until LRU eviction. */
   def semDedup(vectors: DataFrame, threshold: Double,
-               nCells: Int = 16, sampleSize: Int = 2048,
-               maxCluster: Int = 4096): DataFrame =
-    semDedupManaged(vectors, threshold, nCells, sampleSize, maxCluster).df
+               centroids: Array[Array[Double]],
+               maxCluster: Int = 4096): SemDeduped = {
+    // Persisted: the normalize+assign subtree feeds BOTH self-join sides and
+    // the final projection — without this Spark recomputes it three times.
+    // MEMORY_AND_DISK spills at scale; at the 10¹²-row tier a deployment
+    // writes the assignment table to the lake instead (assignCells is that
+    // table).
+    val assigned = assignCells(vectors, centroids)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    SemDeduped(semDropRule(assigned, threshold, maxCluster),
+      () => { assigned.unpersist(); () })
+  }
 
   /** Lazy semDedup result + explicit cache release hook. */
   final case class SemDeduped(df: DataFrame, release: () => Unit)
 
-  /** [[semDedup]] with the persisted assignment subtree's lifecycle
-    * exposed: call `release()` after the consuming ACTION completes.
-    * Repeated un-released invocations (batch loops, interactive sessions)
-    * otherwise accumulate MEMORY_AND_DISK blocks until LRU eviction —
-    * same lifecycle contract as [[IncrementalDedup.newOnlyManaged]]. */
-  def semDedupManaged(vectors: DataFrame, threshold: Double,
-                      nCells: Int = 16, sampleSize: Int = 2048,
-                      maxCluster: Int = 4096): SemDeduped =
-    semDedupManaged(vectors, threshold,
-      fitSemCentroids(vectors, nCells, sampleSize), maxCluster)
-
-  /** The coarse quantizer [[semDedup]] fits before clustering: k-means over
+  /** The coarse quantizer [[semDedup]] clusters with: k-means over
     * an ORDERED bounded sample of the L2-normalized vectors (a bare limit()
     * would sample in partition order and make every cell id depend on input
     * layout). Exposed so an INCREMENTAL deployment can freeze the
@@ -308,29 +314,13 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("_dropped").isNull.as("keep"))
   }
 
-  /** [[semDedupManaged]] with CALLER-SUPPLIED centroids (frozen quantizer —
-    * the deterministic remainder of the algorithm). */
-  def semDedupManaged(vectors: DataFrame, threshold: Double,
-                      centroids: Array[Array[Double]],
-                      maxCluster: Int): SemDeduped = {
-    // Persisted: the normalize+assign subtree feeds BOTH self-join sides and
-    // the final projection — without this Spark recomputes it three times.
-    // MEMORY_AND_DISK spills at scale; at the 10¹²-row tier a deployment
-    // writes the assignment table to the lake instead (assignCells is that
-    // table). The returned release() hook unpersists it.
-    val assigned = assignCells(vectors, centroids)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    SemDeduped(semDropRule(assigned, threshold, maxCluster),
-      () => { assigned.unpersist(); () })
-  }
-
   /** Incremental (cross-batch) SemDeDup — the embedding-space analogue of
     * [[IncrementalDedup.nearNewOnly]]: the daily batch is assigned to the
     * FROZEN historical cells and judged against the persisted historical
     * assignment table plus its own earlier-id rows; only batch verdicts
     * are produced, and only |history|·|batch| within-cell pairs are
     * generated (never history², which was judged when the history was
-    * built). EXACTLY equals [[semDedupManaged]] over history ∪ batch with
+    * built). EXACTLY equals [[semDedup]] over history ∪ batch with
     * the same centroids, restricted to batch ids (spec-pinned) — requires
     * every history id < every batch id (crawl ids grow monotonically).
     *

@@ -218,9 +218,10 @@ object Curation {
       var release: () => Unit = () => ()
       step("semdedup") {
         // embeddings for surviving docs only; docs without a vector are kept
-        val sem = Similarity.semDedupManaged(
-          embs.join(cur.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
-          cfg.semThreshold)
+        val vectors =
+          embs.join(cur.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
+        val sem = Similarity.semDedup(vectors, cfg.semThreshold,
+          Similarity.fitSemCentroids(vectors))
         release = sem.release
         cur.join(
           sem.df.filter(!col("keep")).select(col("vec_id").as("doc_id")),

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *   2b. substring spans (optional, `init(withSpanDedup = true)`) — batch
   *                  docs mostly covered by spans the persisted gram table
   *                  already holds are dropped
-  *                  ([[IncrementalDedup.incrSpanStatsManaged]]);
+  *                  ([[IncrementalDedup.incrSpanStats]]);
   *   3. quality   — the langid + Gopher/C4 gate chain
   *                  ([[Curation.qualityStage]]);
   *   4. semantic  — frozen-centroid cells vs the persisted assignment
@@ -203,8 +203,9 @@ object IncrementalCuration {
                        hostCapN: Option[Int],
                        onStage: (String, Double) => Unit,
                        // persisted-sidecar filters ([[stepLake]]): when
-                       // present, the exact / line stages probe these
-                       // instead of re-scanning history to build fresh ones
+                       // present, the exact / line / span stages probe
+                       // these instead of re-scanning history to build
+                       // fresh ones
                        docsFilters: Option[Array[org.apache.spark.util.sketch.BloomFilter]] = None,
                        lineFilters: Option[Array[org.apache.spark.util.sketch.BloomFilter]] = None,
                        gramFilters: Option[Array[org.apache.spark.util.sketch.BloomFilter]] = None)
@@ -232,13 +233,9 @@ object IncrementalCuration {
     //    the state's narrow materialized projection when present (deriving
     //    it from `docs` re-reads and re-hashes the full history text).
     val histDigests = state.digests.getOrElse(state.docs.select("digest"))
-    val pf = docsFilters match {
-      case Some(fs) => IncrementalDedup.newOnlyPrebuilt(
-        b0, histDigests, "digest", fs)
-      case None => IncrementalDedup.newOnlyManaged(
-        b0, histDigests,
-        "digest", expectedHistoryDigests, shards = bloomShards)
-    }
+    val pf = IncrementalDedup.newOnly(b0, histDigests, "digest",
+      docsFilters.getOrElse(IncrementalDedup.buildFilterArray(
+        histDigests, "digest", expectedHistoryDigests, shards = bloomShards)))
     val b1 = pf.df.localCheckpoint()
     pf.release()
     mark("exact")
@@ -253,12 +250,9 @@ object IncrementalCuration {
         val within = graft.operators.ExactSubstring
           .ccnetDedupLines(b1, "doc_id", "text")
           .select(col("id").as("doc_id"), col("text_dedup").as("text"))
-        val pfL = lineFilters match {
-          case Some(fs) => IncrementalDedup.newLinesOnlyPrebuilt(
-            within, ld, "doc_id", "text", fs)
-          case None => IncrementalDedup.newLinesOnlyManaged(within, ld,
-            "doc_id", "text", lineItems, shards = bloomShards)
-        }
+        val pfL = IncrementalDedup.newLinesOnly(within, ld, "doc_id", "text",
+          lineFilters.getOrElse(IncrementalDedup.buildFilterArray(
+            ld, "line_digest", lineItems, shards = bloomShards)))
         val out = pfL.df.select(col("id").as("doc_id"),
           col("text_dedup").as("text")).localCheckpoint()
         pfL.release()
@@ -312,14 +306,11 @@ object IncrementalCuration {
       case Some(g) =>
         // k comes from the STATE (what the gram table was built with) —
         // probing with an independent cfg knob would silently never match
-        val pfS = gramFilters match {
-          case Some(fs) => IncrementalDedup.incrSpanStatsPrebuilt(b2, g,
-            "doc_id", "text", k = state.spanK, maxDf = cfg.substringMaxDf,
-            filters = fs)
-          case None => IncrementalDedup.incrSpanStatsManaged(b2, g,
-            "doc_id", "text", k = state.spanK, maxDf = cfg.substringMaxDf,
-            expectedItems = gramItems, shards = bloomShards)
-        }
+        val pfS = IncrementalDedup.incrSpanStats(b2, g, "doc_id", "text",
+          k = state.spanK, maxDf = cfg.substringMaxDf,
+          filters = gramFilters.getOrElse(IncrementalDedup.buildFilterArray(
+            g.select(IncrementalDedup.gramDigest), "g_digest", gramItems,
+            shards = bloomShards)))
         val keep = pfS.df.filter(col("cut_ratio") <= cfg.maxCutRatio)
           .select(col("id").as("doc_id"))
         val out = b2.join(keep, Seq("doc_id"), "left_semi").localCheckpoint()
@@ -576,8 +567,7 @@ object IncrementalCuration {
     }
     // Bloom sidecars: the bootstrap's filter contribution, so no step
     // ever re-scans history digests to build a prefilter. Gram filters
-    // probe the STRING form of g (crossSpanCutsManaged's digest form) —
-    // the contribution must be built over the same form.
+    // key on IncrementalDedup.gramDigest, the form the probe uses.
     val sized = StateLake.commitAll(
       Seq(table("docs", st.docs, maxIdAnnotation(st.docs)),
         table("bands", st.bands),
@@ -586,8 +576,8 @@ object IncrementalCuration {
       st.lines.toSeq.flatMap(l => Seq(table("lines", l),
         sidecar("lines", l, "line_digest", bloomLineItems, "bloomLineItems"))) ++
       st.grams.toSeq.flatMap(g => Seq(table("grams", g),
-        sidecar("grams", g.select(col("g").cast("string").as("g_digest")),
-          "g_digest", bloomGramItems, "bloomGramItems"))) ++
+        sidecar("grams", g.select(IncrementalDedup.gramDigest), "g_digest",
+          bloomGramItems, "bloomGramItems"))) ++
       st.semantic.toSeq.flatMap(sem =>
         Seq(table("cells", sem.cells), centroids(sem))) ++
       hostArrivals.map(h => table("hosts", h))).flatten
@@ -836,7 +826,7 @@ object IncrementalCuration {
       ap.lines.flatMap(_ => sidecar("lines", "bloomLineItems", "line_digest",
         lines.get)) ++
       ap.grams.flatMap(_ => sidecar("grams", "bloomGramItems", "g_digest",
-        grams.get.select(col("g").cast("string").as("g_digest")))))
+        grams.get.select(IncrementalDedup.gramDigest))))
     core.mark("appends")
     core.survivors.select("doc_id", "text")
   }

@@ -608,8 +608,9 @@ object TextQueries {
       val withDigest = rawDocs(s, dir).select(col("doc_id"), md5(col("text")).as("digest"))
       val history = withDigest.filter(col("doc_id") % 3 === 0)
       IncrementalDedup.newOnly(withDigest, history, "digest",
-          expectedItems = 2048L, shards = 4)
-        .select("doc_id", "digest").orderBy("doc_id")
+          IncrementalDedup.buildFilterArray(history, "digest",
+            expectedItems = 2048L, shards = 4))
+        .df.select("doc_id", "digest").orderBy("doc_id")
     }),
 
     // Sequence packing (concat-and-chunk): deterministic shard + running
@@ -1211,8 +1212,9 @@ object TextQueries {
       val histD = IncrementalDedup.lineDigests(hist, "doc_id", "text")
         .select("line_digest")
       IncrementalDedup.newLinesOnly(batch, histD, "doc_id", "text",
-          expectedItems = 100000, shards = 2)
-        .select(col("id"), col("n_lines_kept"), md5(col("text_dedup")).as("dedup_md5"))
+          IncrementalDedup.buildFilterArray(histD, "line_digest",
+            expectedItems = 100000, shards = 2))
+        .df.select(col("id"), col("n_lines_kept"), md5(col("text_dedup")).as("dedup_md5"))
         .orderBy("id")
     }),
 
@@ -1239,8 +1241,11 @@ object TextQueries {
           array_join(slice(TF.tokens(col("text")), 5, 1000000), " ").as("text"))
       val grams = IncrementalDedup.spanGramTable(hist, "doc_id", "text")
       IncrementalDedup.incrSpanStats(b1.unionByName(b2), grams, "doc_id", "text",
-          k = 8, maxDf = 64, expectedItems = 1 << 20, shards = 2)
-        .orderBy("id")
+          k = 8, maxDf = 64,
+          filters = IncrementalDedup.buildFilterArray(
+            grams.select(IncrementalDedup.gramDigest), "g_digest",
+            expectedItems = 1 << 20, shards = 2))
+        .df.orderBy("id")
     }),
 
     // Incremental per-host admission cap: history (doc_id%4 != 3) already
@@ -1391,8 +1396,10 @@ object TextQueries {
       val planted = e.filter(col("vec_id") % 20 === 0)
         .select((col("vec_id") + 100000L).as("vec_id"),
           transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
-      Similarity.semDedup(e.unionByName(planted), threshold = 0.99)
-        .orderBy("vec_id")
+      val vectors = e.unionByName(planted)
+      Similarity.semDedup(vectors, threshold = 0.99,
+          centroids = Similarity.fitSemCentroids(vectors))
+        .df.orderBy("vec_id")
     }),
 
     // The composed curation run end-to-end: exact dedup → line dedup →

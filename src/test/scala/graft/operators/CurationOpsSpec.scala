@@ -13,11 +13,17 @@ class CurationOpsSpec extends SparkSpecBase {
 
   // --- IncrementalDedup -------------------------------------------------
 
+  private def newOnly(batch: org.apache.spark.sql.DataFrame,
+                      history: org.apache.spark.sql.DataFrame, expectedItems: Long,
+                      fpp: Double = 0.01, shards: Int = 1) =
+    IncrementalDedup.newOnly(batch, history, "digest",
+      IncrementalDedup.buildFilterArray(history, "digest", expectedItems, fpp, shards))
+
   test("bloom incremental dedup equals the exact anti-join") {
     val batch = docs.select($"doc_id", md5($"text").as("digest"))
     val history = batch.filter($"doc_id" % 3 === 0)
-    val got = IncrementalDedup.newOnly(batch, history, "digest", expectedItems = 1024)
-      .select("doc_id").as[Long].collect().sorted
+    val got = newOnly(batch, history, expectedItems = 1024)
+      .df.select("doc_id").as[Long].collect().sorted
     val want = batch.join(history.select("digest").distinct(), Seq("digest"), "left_anti")
       .select("doc_id").as[Long].collect().sorted
     assert(got.sameElements(want))
@@ -30,8 +36,8 @@ class CurationOpsSpec extends SparkSpecBase {
     val want = batch.join(history.select("digest").distinct(), Seq("digest"), "left_anti")
       .select("doc_id").as[Long].collect().sorted.toSeq
     for (b <- Seq(1, 4)) {
-      val got = IncrementalDedup.newOnly(batch, history, "digest",
-        expectedItems = 1024, shards = b).select("doc_id").as[Long].collect().sorted.toSeq
+      val got = newOnly(batch, history, expectedItems = 1024, shards = b)
+        .df.select("doc_id").as[Long].collect().sorted.toSeq
       assert(got == want, s"shards=$b")
     }
     // the router spreads digests across all shards (not a degenerate hash)
@@ -41,15 +47,14 @@ class CurationOpsSpec extends SparkSpecBase {
     assert(used.sorted.toSeq == Seq(0, 1, 2, 3))
   }
 
-  test("newOnlyManaged releases the filter broadcast after the action") {
+  test("newOnly releases the filter broadcast after the action") {
     val batch = docs.select($"doc_id", md5($"text").as("digest"))
     val history = batch.filter($"doc_id" % 3 === 0)
-    val pf = IncrementalDedup.newOnlyManaged(batch, history, "digest",
-      expectedItems = 1024, shards = 2)
+    val pf = newOnly(batch, history, expectedItems = 1024, shards = 2)
     assert(pf.df.count() > 0)
     pf.release() // must not throw; broadcast is destroyed
-    // a fresh run after release still works (new filter per call)
-    assert(IncrementalDedup.newOnly(batch, history, "digest", 1024).count() > 0)
+    // a fresh run after release still works (new broadcast per call)
+    assert(newOnly(batch, history, 1024).df.count() > 0)
   }
 
   test("bloom incremental dedup has no false negatives at high fpp") {
@@ -58,27 +63,9 @@ class CurationOpsSpec extends SparkSpecBase {
     val batch = docs.select($"doc_id", md5($"text").as("digest"))
     val history = batch.filter($"doc_id" % 2 === 0)
     val seen = history.select("digest").as[String].collect().toSet
-    val out = IncrementalDedup.newOnly(batch, history, "digest",
-      expectedItems = 8, fpp = 0.5).select("digest").as[String].collect()
+    val out = newOnly(batch, history, expectedItems = 8, fpp = 0.5)
+      .df.select("digest").as[String].collect()
     assert(out.forall(d => !seen.contains(d)))
-  }
-
-  test("batch loop: each batch dedups against history plus all earlier survivors") {
-    def ids(lo: Long, hi: Long) =
-      spark.range(lo, hi).select($"id".as("doc_id"),
-        concat(lit("d"), $"id").as("digest"))
-    val history = ids(0, 100)
-    val b1 = ids(80, 160) // 80..99 already in history → survivors 100..159
-    val b2 = ids(90, 190) // 90..99 in history, 100..159 in b1 survivors → 160..189
-    val out = IncrementalDedup.dedupBatches(Seq(b1, b2), history,
-      "digest", expectedItems = 512, shards = 2)
-    assert(out.length == 2)
-    assert(out(0).select("doc_id").as[Long].collect().sorted.toSeq == (100L until 160L))
-    assert(out(1).select("doc_id").as[Long].collect().sorted.toSeq == (160L until 190L),
-      "batch 2 must dedup against history ∪ batch-1 survivors")
-    // the loop released each iteration's broadcast: none of the filter
-    // broadcasts linger as referenced objects (release() destroys them —
-    // a destroyed broadcast throws on access)
   }
 
   test("incremental near-dup equals the full-corpus LSH pipeline restricted to the boundary") {
@@ -111,37 +98,6 @@ class CurationOpsSpec extends SparkSpecBase {
       .select("doc_id").as[Long].collect().toSet
     val batchIds = batch.select("doc_id").as[Long].collect().toSet
     assert(survivors == batchIds -- flagged)
-  }
-
-  test("near-dup batch loop: later batches dedup against history AND earlier survivors") {
-    def mutant(src: org.apache.spark.sql.DataFrame, idOff: Long) =
-      src.select(($"doc_id" + idOff).as("doc_id"),
-        array_join(slice(graft.functions.TextFunctions.tokens($"text"), 3, 1000000), " ").as("text"))
-    val base = docs
-    val history = base.filter($"doc_id" < 80)
-    val b1 = base.filter($"doc_id" >= 80 && $"doc_id" < 120)
-      .unionByName(mutant(base.filter($"doc_id" === 10), 9000000L)) // near-dups history
-    val b2 = base.filter($"doc_id" >= 120 && $"doc_id" < 160)
-      .unionByName(mutant(base.filter($"doc_id" === 100), 9000000L)) // near-dups a b1 survivor
-      .unionByName(mutant(base.filter($"doc_id" === 20), 9100000L))  // near-dups history
-    val out = IncrementalDedup.nearDedupBatches(Seq(b1, b2), history, "doc_id", "text")
-    val s1 = out(0).select("doc_id").as[Long].collect().toSet
-    val s2 = out(1).select("doc_id").as[Long].collect().toSet
-    // planted mutants die at their boundary
-    assert(!s1.contains(9000010L), "mutant of a history doc must not survive batch 1")
-    assert(!s2.contains(9000100L), "mutant of a batch-1 survivor must not survive batch 2")
-    assert(!s2.contains(9100020L), "mutant of a history doc must not survive batch 2")
-    // loop wiring == direct single-shot calls with manually accumulated
-    // history (the fixture also has NATURAL cross-boundary near-dups, so
-    // survivor sets are pinned by equivalence, not by id ranges)
-    val s1Want = IncrementalDedup.nearNewOnly(b1, history, "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    assert(s1 == s1Want)
-    val h2 = history.select("doc_id", "text").unionByName(out(0).select("doc_id", "text"))
-    val s2Want = IncrementalDedup.nearNewOnly(b2, h2, "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    assert(s2 == s2Want)
-    assert(s1.nonEmpty && s2.nonEmpty)
   }
 
   test("flood buckets never truncate the probe side: every batch duplicate is caught") {
@@ -328,22 +284,9 @@ class CurationOpsSpec extends SparkSpecBase {
     ).toDF("doc_id", "text")
     val histD = IncrementalDedup.lineDigests(hist, "doc_id", "text").select("line_digest")
     val out = IncrementalDedup.newLinesOnly(batch, histD, "doc_id", "text",
-        expectedItems = 1024, shards = 2)
-      .collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("text_dedup")).toMap
+        IncrementalDedup.buildFilterArray(histD, "line_digest", 1024, shards = 2))
+      .df.collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("text_dedup")).toMap
     assert(out == Map(10L -> "fresh prose"))
-  }
-
-  test("lineDedupBatches: batch 2 dedups against history plus batch-1 survivors") {
-    val h = Seq((1L, "base line")).toDF("doc_id", "text")
-    val b1 = Seq((10L, "new in b1\nbase line")).toDF("doc_id", "text")
-    val b2 = Seq((20L, "new in b1\nfresh b2"), (21L, "base line")).toDF("doc_id", "text")
-    val Seq(s1, s2) = IncrementalDedup.lineDedupBatches(
-      Seq(b1, b2), h, "doc_id", "text", expectedItems = 1024)
-    assert(s1.collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("text_dedup")).toMap
-      == Map(10L -> "new in b1")) // "base line" was in history
-    // doc 20: "new in b1" survived batch 1 → now history → dropped; doc 21 all-known → gone
-    assert(s2.collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("text_dedup")).toMap
-      == Map(20L -> "fresh b2"))
   }
 
   test("BPE-budget packing: offsets are exact prefix sums of subword lengths per shard") {
@@ -370,15 +313,6 @@ class CurationOpsSpec extends SparkSpecBase {
         graft.functions.TextFunctions.tokenCount($"text").as("n_words"))
       .filter($"n_bpe" =!= $"n_words").count()
     assert(diverges > 0, "fixture must exercise subword != word counts")
-  }
-
-  test("lineDedupBatches: replaying a batch contributes nothing (crash-replay safe)") {
-    val h = Seq((1L, "seed line")).toDF("doc_id", "text")
-    val b = Seq((10L, "fresh a\nfresh b")).toDF("doc_id", "text")
-    val Seq(s1, s2) = IncrementalDedup.lineDedupBatches(
-      Seq(b, b), h, "doc_id", "text", expectedItems = 1024)
-    assert(s1.count() == 1)
-    assert(s2.count() == 0, "every replayed line is history now — doc must drop out")
   }
 
   test("span dedup keeps first occurrence of a duplicated 3-sentence window") {
@@ -517,8 +451,10 @@ class CurationOpsSpec extends SparkSpecBase {
     val grams = IncrementalDedup.spanGramTable(hist, "doc_id", "text")
     for (b <- Seq(1, 2)) {
       val got = IncrementalDedup.incrSpanStats(batch, grams, "doc_id", "text",
-          k = 8, maxDf = 64, expectedItems = 1 << 16, shards = b)
-        .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("n_tokens"),
+          k = 8, maxDf = 64,
+          filters = IncrementalDedup.buildFilterArray(
+            grams.select(IncrementalDedup.gramDigest), "g_digest", 1 << 16, shards = b))
+        .df.collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("n_tokens"),
           r.getAs[Long]("n_spans"), r.getAs[Long]("n_cut"))).sortBy(_._1).toSeq
       assert(got == want, s"shards=$b")
     }
@@ -550,7 +486,10 @@ class CurationOpsSpec extends SparkSpecBase {
       "spanning more than eight unique tokens easily")).toDF("doc_id", "text")
     val grams = IncrementalDedup.spanGramTable(hist, "doc_id", "text")
     val row = IncrementalDedup.incrSpanStats(batch, grams, "doc_id", "text",
-        expectedItems = 1 << 16).collect()
+        k = 8, maxDf = 64,
+        filters = IncrementalDedup.buildFilterArray(
+          grams.select(IncrementalDedup.gramDigest), "g_digest", 1 << 16))
+      .df.collect()
     assert(row.length == 1 && row.head.getAs[Long]("n_cut") == 0L)
     assert(row.head.getAs[Double]("cut_ratio") == 0.0)
   }

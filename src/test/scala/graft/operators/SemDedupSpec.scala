@@ -18,8 +18,14 @@ class SemDedupSpec extends SparkSpecBase {
     embs.unionByName(planted)
   }
 
+  /** One-pass run: centroids fitted over the same vectors. */
+  private def semDedup(vectors: org.apache.spark.sql.DataFrame,
+                       maxCluster: Int = 4096) =
+    Similarity.semDedup(vectors, threshold = 0.99,
+      Similarity.fitSemCentroids(vectors), maxCluster)
+
   test("planted scaled copies are dropped, their originals kept") {
-    val out = Similarity.semDedup(withPlanted, threshold = 0.99)
+    val out = semDedup(withPlanted).df
       .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Boolean]("keep")).toMap
     val plantedIds = out.keys.filter(_ >= 100000L)
     assert(plantedIds.nonEmpty)
@@ -44,7 +50,7 @@ class SemDedupSpec extends SparkSpecBase {
     // semDedup's contract: only the first maxCluster ids per cell
     // participate in pairing (either side); beyond-cap rows are kept.
     for (cap <- Seq(1000000, 4)) {
-      val res = Similarity.semDedup(withPlanted, threshold = 0.99, maxCluster = cap)
+      val res = semDedup(withPlanted, maxCluster = cap).df
         .collect()
         .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cell"), r.getAs[Boolean]("keep")))
       val byCell = res.groupBy(_._2)
@@ -65,9 +71,9 @@ class SemDedupSpec extends SparkSpecBase {
     }
   }
 
-  test("semDedupManaged release() unpersists the assignment cache") {
+  test("semDedup release() unpersists the assignment cache") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val m = Similarity.semDedupManaged(withPlanted, threshold = 0.99)
+    val m = semDedup(withPlanted)
     m.df.count()
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.nonEmpty, "semDedup must persist the assignment subtree")
@@ -86,7 +92,7 @@ class SemDedupSpec extends SparkSpecBase {
       Similarity.assignCells(history, centroids), centroids, threshold = 0.99)
     val got = inc.df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2))).sorted.toSeq
-    val full = Similarity.semDedupManaged(all, 0.99, centroids, maxCluster = 4096)
+    val full = Similarity.semDedup(all, 0.99, centroids, maxCluster = 4096)
     val batchIds = batch.select("vec_id").as[Long].collect().toSet
     val want = full.df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2)))
@@ -103,7 +109,7 @@ class SemDedupSpec extends SparkSpecBase {
 
   test("result is invariant to input partition layout") {
     def run(df: org.apache.spark.sql.DataFrame) =
-      Similarity.semDedup(df, threshold = 0.99)
+      semDedup(df).df
         .select("vec_id", "keep").as[(Long, Boolean)].collect().sortBy(_._1).toSeq
     assert(run(withPlanted) == run(withPlanted.repartition(13)))
   }
