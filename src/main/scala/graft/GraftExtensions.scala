@@ -1,10 +1,10 @@
 package graft
 
 import graft.filter.LangIdModel
-import graft.functions.{CcnetNormalize, DeflateRatio, ExtractLinks, LangIdExpression, LuhnValid, NfcNormalize, PiiFunctions, PushFiltersThroughPinned, RepetitionRatio, RrnValid, WinnowFingerprint}
+import graft.functions.{CcnetNormalize, DeflateRatio, ExtractLinks, LuhnValid, NfcNormalize, PiiFunctions, PushFiltersThroughPinned, QualityFunctions, RepetitionRatio, RrnValid, WinnowFingerprint}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension packaging: register the engine's Catalyst expressions as
   * SQL functions without touching application code —
@@ -14,10 +14,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * Then `SELECT scrub_pii(text) FROM pages` works from pure SQL (including
   * thrift/JDBC sessions). A static kernel registers the same expression
   * builder its Column function calls, so the SQL and Column forms cannot
-  * drift. It also injects the optimizer rule
+  * drift; a pinned kernel's builder returns its [[graft.functions.Pinned]]
+  * wrapper, so SQL calls are pinned too. It also injects the optimizer rule
   * [[graft.functions.PushFiltersThroughPinned]] into the operator-optimization
   * batch, where it iterates with PushDownPredicates: filters that read no
-  * pinned expression's output sink below the pinned projections. Every
+  * pinned output sink below the pinned projections. Every
   * GraftSession.local session is built with these extensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -37,10 +38,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       RepetitionRatio.repetitionRatioExpr(2)))
     e.injectFunction((FunctionIdentifier("langid"),
       info("langid", "langid(text) - struct(lang, confidence). " +
-        "Non-deterministic (pinned so the optimizer evaluates it once per row), " +
-        "so it is allowed only in Project, Filter, Aggregate or Window: not in " +
+        "Pinned: non-deterministic at analysis, so the optimizer evaluates it once per row " +
+        "and it is allowed only in Project, Filter, Aggregate or Window: not in " +
         "ORDER BY, join conditions or generators (alias it in a subquery first)"),
-      (args: Seq[Expression]) => LangIdExpression(args.head, LangIdModel.default)))
+      QualityFunctions.langidExpr(LangIdModel.default)))
     e.injectFunction((FunctionIdentifier("winnow_fingerprint"),
       info("winnow_fingerprint", "winnow_fingerprint(text) - rolling-hash fingerprint set"),
       WinnowFingerprint.winnowFingerprintExpr(8, 16)))
@@ -51,7 +52,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("nfc_normalize", "nfc_normalize(text) - Unicode NFC form (dedup-stable bytes)"),
       NfcNormalize.nfcNormalizeExpr))
     e.injectFunction((FunctionIdentifier("ccnet_normalize"),
-      info("ccnet_normalize", "ccnet_normalize(text) - CCNet paragraph-dedup key (lowercase, accent/digit-fold, punct-strip)"),
+      info("ccnet_normalize", "ccnet_normalize(text) - CCNet paragraph-dedup key (lowercase, accent/digit-fold, punct-strip). " +
+        "Pinned like langid, with the same SQL restriction"),
       CcnetNormalize.ccnetNormalizeExpr))
     e.injectFunction((FunctionIdentifier("luhn_valid"),
       info("luhn_valid", "luhn_valid(card) - ISO/IEC 7812-1 mod-10 checksum over a card-number candidate"),

@@ -32,6 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Narrow per-row work with an ASCII fast path (no NFD pass when the input
   * has no high code point) — fits the scan stage; the produced key feeds a
   * single 8-byte hash, so the dedup shuffle never carries the text.
+  * Pinned ([[Pinned]]): a Bloom probe over the line digest stays above it.
   */
 object CcnetNormalize {
 
@@ -70,7 +71,7 @@ object CcnetNormalize {
   def normalize(u: UTF8String): UTF8String = UTF8String.fromString(normalize(u.toString))
 
   private[graft] def ccnetNormalizeExpr(args: Seq[Expression]): Expression =
-    StaticKernel.expr("ccnet_normalize", this, "normalize", StringType, Seq(StringType), args)
+    Pinned(StaticKernel.expr("ccnet_normalize", this, "normalize", StringType, Seq(StringType), args))
 
   def ccnet_normalize(c: Column): Column = StaticKernel.column(ccnetNormalizeExpr, c)
 }

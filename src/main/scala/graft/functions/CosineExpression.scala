@@ -26,7 +26,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * NULL semantics: a NULL array, a NULL element, or mismatched lengths
   * yield NULL — the declarative form's zip_with/null-propagation verdicts
   * for those inputs (mismatched lengths zip a null past the shorter side,
-  * nulling the dot fold).
+  * nulling the dot fold). Pinned ([[Pinned]]): a threshold filter over a
+  * join's `sim` stays above the projection, out of the join condition.
   */
 object CosineFunctions {
   def cosineSim(x: ArrayData, y: ArrayData): java.lang.Double = {
@@ -49,8 +50,8 @@ object CosineFunctions {
   }
 
   private[graft] def cosineExpr(args: Seq[Expression]): Expression =
-    StaticKernel.expr("cosine_sim", this, "cosineSim", DoubleType,
-      Seq(ArrayType(DoubleType), ArrayType(DoubleType)), args, nullableResult = true)
+    Pinned(StaticKernel.expr("cosine_sim", this, "cosineSim", DoubleType,
+      Seq(ArrayType(DoubleType), ArrayType(DoubleType)), args, nullableResult = true))
 
   def cosine_sim(a: Column, b: Column): Column = StaticKernel.column(cosineExpr, a, b)
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,6 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * a narrow map, and the one-digest-per-shingle form cuts the stage's CPU
   * ~an order of magnitude vs the earlier k-digests-per-shingle convention
   * (md5(s + "#" + i), which spent 16 md5 block computations per shingle).
+  * `minhash_sigs` pins it ([[Pinned]]): the short-doc sentinel filter over
+  * `sigs` then stays above the projection instead of a second pass.
   */
 case class MinHashSignatures(child: Expression, k: Int, shingleWidth: Int)
     extends UnaryExpression with CodegenFallback
@@ -187,5 +188,5 @@ object MinHashPerms {
 
 object MinHashFunctions {
   def minhash_sigs(c: Column, k: Int = 16, shingleWidth: Int = 3): Column =
-    ColumnBridge.column(MinHashSignatures(ColumnBridge.expression(c), k, shingleWidth))
+    StaticKernel.column(args => Pinned(MinHashSignatures(args.head, k, shingleWidth)), c)
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -35,10 +34,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * serialization): the first task on each executor builds them, every later
   * task reuses them. Without this, a full-size LM (2^20 bigrams) would pay
   * ~1M HashMap inserts per TASK — rivaling the scoring work the fusion
-  * saves on short tasks.
+  * saves on short tasks. `model_scores` wraps it in [[Pinned]], so the
+  * optimizer evaluates it once per row.
   */
 case class ModelScoresExpression(child: Expression, models: ModelScoresExpression.ModelRef)
-    extends UnaryExpression with CodegenFallback with PurePinned {
+    extends UnaryExpression with CodegenFallback {
   private def lm: BigramLM = models.lm
   private def qm: QualityModel = models.qm
   private def cacheKey: String = models.key
@@ -173,6 +173,5 @@ object ModelScoresExpression {
   }
 
   def model_scores(c: Column, lm: BigramLM, qm: QualityModel): Column =
-    ColumnBridge.column(ModelScoresExpression(ColumnBridge.expression(c),
-      new ModelRef(lm, qm)))
+    StaticKernel.column(args => Pinned(ModelScoresExpression(args.head, new ModelRef(lm, qm))), c)
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,7 +18,7 @@ object PiiSchema {
   * redaction from ONE detector pass (detect_pii + scrub_pii as separate
   * columns would each run the full pattern battery). The pipeline's hot path. */
 case class PiiProcessExpression(child: Expression, strict: Boolean = false)
-    extends UnaryExpression with CodegenFallback with PurePinned {
+    extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = StructType(Seq(
     StructField("text_scrubbed", StringType, nullable = false),
     StructField("n_pii", IntegerType, nullable = false)))
@@ -87,8 +86,9 @@ object PiiChecksums {
   * `detect_pii`, `scrub_pii` and `scrub_pii_strict` are static kernels
   * ([[StaticKernel]]): WholeStageCodegen calls them directly inside the
   * generated stage — no Scala-UDF serialization/encoder overhead, NULL in →
-  * NULL out. `process_pii` stays a pinned expression ([[PurePinned]]) so
-  * the optimizer evaluates it once per row.
+  * NULL out. `process_pii` stays an expression class
+  * ([[PiiProcessExpression]]) behind a [[Pinned]] wrapper, so the optimizer
+  * evaluates it once per row.
   */
 object PiiFunctions {
 
@@ -136,11 +136,13 @@ object PiiFunctions {
     StaticKernel.expr("scrub_pii", this, "scrub", StringType, Seq(StringType), args)
   private[graft] def scrubPiiStrictExpr(args: Seq[Expression]): Expression =
     StaticKernel.expr("scrub_pii_strict", this, "scrubStrict", StringType, Seq(StringType), args)
+  private[graft] def processPiiExpr(strict: Boolean)(args: Seq[Expression]): Expression =
+    Pinned(PiiProcessExpression(args.head, strict))
 
   /** Column API: detect_pii($"text") */
   def detect_pii(c: Column): Column = StaticKernel.column(detectPiiExpr, c)
   def scrub_pii(c: Column): Column = StaticKernel.column(scrubPiiExpr, c)
   def scrub_pii_strict(c: Column): Column = StaticKernel.column(scrubPiiStrictExpr, c)
-  def process_pii(c: Column): Column = ColumnBridge.column(PiiProcessExpression(ColumnBridge.expression(c)))
-  def process_pii_strict(c: Column): Column = ColumnBridge.column(PiiProcessExpression(ColumnBridge.expression(c), strict = true))
+  def process_pii(c: Column): Column = StaticKernel.column(processPiiExpr(strict = false), c)
+  def process_pii_strict(c: Column): Column = StaticKernel.column(processPiiExpr(strict = true), c)
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -51,9 +50,10 @@ object RepetitionRatio {
 
 /** langid(text) → struct(lang string, confidence double) via the fastText-
   * style hashed n-gram linear model. The model rides in the expression
-  * (serialized once per task closure, weights shared per executor). */
+  * (serialized once per task closure, weights shared per executor), so it
+  * stays an expression class; its builder pins it ([[Pinned]]). */
 case class LangIdExpression(child: Expression, model: LangIdModel)
-    extends UnaryExpression with CodegenFallback with PurePinned {
+    extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = StructType(Seq(
     StructField("lang", StringType, nullable = false),
     StructField("confidence", DoubleType, nullable = false)))
@@ -302,26 +302,17 @@ object QualitySignals {
   * `(\.\.\.|…)\z` = trimmed line ends with "..." or "…". Counts are
   * returned (not fractions) so the caller's divisions are the identical
   * int/int IEEE operations the declarative form performed. Value parity
-  * with all three standalone formulations is pinned in QualitySignalsSpec. */
-case class QualitySignalsFull(child: Expression)
-    extends UnaryExpression with CodegenFallback with PurePinned
-    with org.apache.spark.sql.graftshim.ExpectsStringInput {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", IntegerType, nullable = false),
-    StructField("n_chars", IntegerType, nullable = false),
-    StructField("n_symbols", IntegerType, nullable = false),
-    StructField("n_alpha_words", IntegerType, nullable = false),
-    StructField("rep2", DoubleType, nullable = false),
-    StructField("n_lines", IntegerType, nullable = false),
-    StructField("n_bullet", IntegerType, nullable = false),
-    StructField("n_ellipsis", IntegerType, nullable = false)))
-  override def prettyName: String = "quality_signals_full"
+  * with all three standalone formulations is pinned in QualitySignalsSpec.
+  * The quality stage's filters read many of its fields, so the builder pins
+  * it ([[Pinned]]). */
+object QualitySignalsFull {
+  /** Same pattern as the declarative `split(text, "\r?\n")`. */
+  private val LineSplit = java.util.regex.Pattern.compile("\r?\n")
 
-  override def nullSafeEval(input: Any): Any = {
-    val u = input.asInstanceOf[UTF8String]
+  def signals(u: UTF8String): InternalRow = {
     val s = u.toString
     import QualitySignals._
-    val lines = QualitySignalsFull.LineSplit.split(s, -1)
+    val lines = LineSplit.split(s, -1)
     var nBullet = 0
     var nEllipsis = 0
     var li = 0
@@ -345,13 +336,13 @@ case class QualitySignalsFull(child: Expression)
       alphaWords(u.toLowerCase.toString), RepetitionRatio.ratio(s, 2),
       lines.length, nBullet, nEllipsis)
   }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
-object QualitySignalsFull {
-  /** Same pattern as the declarative `split(text, "\r?\n")`. */
-  private val LineSplit = java.util.regex.Pattern.compile("\r?\n")
+  private[graft] def qualitySignalsFullExpr(args: Seq[Expression]): Expression =
+    Pinned(StaticKernel.expr("quality_signals_full", this, "signals", StructType(Seq(
+      "n_words" -> IntegerType, "n_chars" -> IntegerType, "n_symbols" -> IntegerType,
+      "n_alpha_words" -> IntegerType, "rep2" -> DoubleType, "n_lines" -> IntegerType,
+      "n_bullet" -> IntegerType, "n_ellipsis" -> IntegerType)
+      .map { case (n, t) => StructField(n, t, nullable = false) }), Seq(StringType), args))
 }
 
 /** Gopher within-document duplicate-shape counts (Rae et al. 2021 Table A1:
@@ -370,20 +361,9 @@ object QualitySignalsFull {
   *    and (c−1)·len duplicate characters (len in code points);
   *  - fractions are duplicate/total occurrences (or chars) — 0 when the
   *    document has no elements.
+  * Pinned ([[Pinned]]): four gates read it.
   */
-case class DupShapeSignals(child: Expression)
-    extends UnaryExpression with CodegenFallback with PurePinned {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_lines", IntegerType, nullable = false),
-    StructField("dup_lines", IntegerType, nullable = false),
-    StructField("line_chars", LongType, nullable = false),
-    StructField("dup_line_chars", LongType, nullable = false),
-    StructField("n_paras", IntegerType, nullable = false),
-    StructField("dup_paras", IntegerType, nullable = false),
-    StructField("para_chars", LongType, nullable = false),
-    StructField("dup_para_chars", LongType, nullable = false)))
-  override def prettyName: String = "dup_shape_signals"
-
+object DupShapeSignals {
   /** Space-only trim — the `trim` semantics Spark and DuckDB share (Java's
     * String.trim also strips control chars and would diverge from the
     * oracle on tab-edged lines). */
@@ -418,26 +398,33 @@ case class DupShapeSignals(child: Expression)
     (n, dups, chars, dupChars)
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  def counts(u: UTF8String): InternalRow = {
+    val s = u.toString
     val (nl, dl, lc, dlc) = dupCounts(s.split("\r?\n"))
     val (np, dp, pc, dpc) = dupCounts(s.split("(\r?\n){2,}"))
     InternalRow(nl, dl, lc, dlc, np, dp, pc, dpc)
   }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+
+  private[graft] def dupShapeSignalsExpr(args: Seq[Expression]): Expression =
+    Pinned(StaticKernel.expr("dup_shape_signals", this, "counts", StructType(Seq(
+      "n_lines" -> IntegerType, "dup_lines" -> IntegerType, "line_chars" -> LongType,
+      "dup_line_chars" -> LongType, "n_paras" -> IntegerType, "dup_paras" -> IntegerType,
+      "para_chars" -> LongType, "dup_para_chars" -> LongType)
+      .map { case (n, t) => StructField(n, t, nullable = false) }), Seq(StringType), args))
 }
 
 object QualityFunctions {
   def quality_signals(c: Column): Column = StaticKernel.column(QualitySignals.qualitySignalsExpr, c)
   def quality_signals_full(c: Column): Column =
-    ColumnBridge.column(QualitySignalsFull(ColumnBridge.expression(c)))
+    StaticKernel.column(QualitySignalsFull.qualitySignalsFullExpr, c)
   def dup_shape_signals(c: Column): Column =
-    ColumnBridge.column(DupShapeSignals(ColumnBridge.expression(c)))
+    StaticKernel.column(DupShapeSignals.dupShapeSignalsExpr, c)
   def repetition_ratio(c: Column, n: Int): Column =
     StaticKernel.column(RepetitionRatio.repetitionRatioExpr(n), c)
+  private[graft] def langidExpr(model: LangIdModel)(args: Seq[Expression]): Expression =
+    Pinned(LangIdExpression(args.head, model))
   def langid(c: Column, model: LangIdModel = LangIdModel.default): Column =
-    ColumnBridge.column(LangIdExpression(ColumnBridge.expression(c), model))
+    StaticKernel.column(langidExpr(model), c)
   def winnow_fingerprint(c: Column, k: Int = 8, w: Int = 16): Column =
     StaticKernel.column(WinnowFingerprint.winnowFingerprintExpr(k, w), c)
   def deflate_ratio(c: Column): Column = StaticKernel.column(DeflateRatio.deflateRatioExpr, c)

@@ -21,7 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
   * sorts with sort_array). Under that contract the merge count equals
   * |a ∩ b| exactly — the same value array_intersect's size produced
   * (DedupSpec pins the identity against the hash-set form). A non-long-array
-  * argument fails at analysis, not per task.
+  * argument fails at analysis, not per task. Pinned ([[Pinned]]): a Jaccard
+  * filter stays above the `_i` projection, out of the verify join's condition.
   */
 object SortedIntersectFunctions {
   def sortedIntersectCount(x: ArrayData, y: ArrayData): Int = {
@@ -41,8 +42,8 @@ object SortedIntersectFunctions {
   }
 
   private[graft] def sortedIntersectExpr(args: Seq[Expression]): Expression =
-    StaticKernel.expr("sorted_intersect_count", this, "sortedIntersectCount", IntegerType,
-      Seq(ArrayType(LongType), ArrayType(LongType)), args)
+    Pinned(StaticKernel.expr("sorted_intersect_count", this, "sortedIntersectCount", IntegerType,
+      Seq(ArrayType(LongType), ArrayType(LongType)), args))
 
   def sorted_intersect_count(a: Column, b: Column): Column =
     StaticKernel.column(sortedIntersectExpr, a, b)

@@ -187,12 +187,6 @@ object Dedup {
       // Shingle arrays are distinct-by-construction, so the identity is
       // exact (shingle_hashes emits a duplicate hash only on an xxhash
       // string collision — the same 2⁻⁶⁴ trade the hashed arrays make).
-      // The intersect stays in its own projection, so CollapseProject
-      // does not inline it into `jaccard`'s two uses. That does NOT cover a
-      // caller's `jaccard >= t` filter: the optimizer pushes it into the
-      // verify join's condition with `_i` inlined, so a filtered call
-      // evaluates the intersect twice per pair in the condition and once
-      // more in this projection for each pair that passes (q16's plan).
       .withColumn("_i", graft.functions.SortedIntersectFunctions
         .sorted_intersect_count(col("sh_a"), col("sh_b")))
       .withColumn("jaccard", col("_i").cast("double") /

@@ -198,10 +198,7 @@ object IncrementalDedup {
     cand.join(shB, "batch_id").join(shH, "hist_id")
       // |A∪B| = |A|+|B|−|A∩B| — see Dedup.jaccardVerify: a merge-walk
       // intersect count, no materialized union array (this is the dominant
-      // stage of the verify join at 400k+ candidate pairs per step). A
-      // caller's `jaccard` filter (nearNewOnly, q65) is pushed into the
-      // verify join's condition with `_i` inlined, so the walk runs twice
-      // per pair there and once more in the `_i` projection per kept pair.
+      // stage of the verify join at 400k+ candidate pairs per step).
       .withColumn("_i", graft.functions.SortedIntersectFunctions
         .sorted_intersect_count(col("sh_a"), col("sh_b")))
       .withColumn("jaccard", col("_i").cast("double") /

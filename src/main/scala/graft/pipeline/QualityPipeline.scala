@@ -1,8 +1,8 @@
 package graft.pipeline
 
 import graft.filter.LangIdModel
-import graft.functions.{PiiFunctions, QualityFunctions, TextFunctions => TF}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.{Pinned, PiiFunctions, QualityFunctions, TextFunctions => TF}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
@@ -15,12 +15,13 @@ import java.nio.file.{Files, Paths}
   * Every stage is a narrow projection (no shuffle) — the only shuffles are
   * the metrics rollups at the end. At cluster scale the same plan reads an
   * Iceberg/parquet table partitioned by crawl date and bucketed by url hash.
-  * The chain's expensive expressions are pinned non-deterministic so filter
-  * pushdown cannot duplicate them; in a GraftSession the
-  * PushFiltersThroughPinned rule still sinks every filter that reads none of
-  * their outputs. So scan predicates (crawl-date pruning, host allowlists)
-  * applied after [[run]] reach the scan, and `run(...).filter(col("keep"))`
-  * drops pages before the PII stage. (No Iceberg runtime ships with this
+  * The chain's expensive expressions and `drop_reasons` are pinned
+  * ([[graft.functions.Pinned]]), so pushdown cannot duplicate them; in a
+  * GraftSession the PushFiltersThroughPinned rule still sinks every filter
+  * that reads none of their outputs. So scan predicates (crawl-date pruning,
+  * host allowlists) applied after [[run]] reach the scan, and
+  * `run(...).filter(col("keep"))` drops pages right above the `drop_reasons`
+  * projection, before the PII stage. (No Iceberg runtime ships with this
   * build — parquet directories stand in with identical layout.)
   */
 object QualityPipeline {
@@ -229,7 +230,7 @@ object QualityPipeline {
       } else Nil)
     val reasons = array_compact(array(reasonCols: _*))
     withDup
-      .withColumn("drop_reasons", reasons)
+      .withColumn("drop_reasons", Pinned.column(reasons))
       .withColumn("keep", size(col("drop_reasons")) === 0)
       .drop("lsig", "dsig")
   }
@@ -240,12 +241,8 @@ object QualityPipeline {
   def perplexityStage(df: DataFrame, lm: org.apache.spark.broadcast.Broadcast[graft.filter.BigramLM],
                       maxPerplexity: Double): DataFrame = {
     val pplUdf = udf((t: String) => lm.value.perplexity(t))
-    df.withColumn("perplexity", pplUdf(col("text")))
-      .withColumn("drop_reasons",
-        when(col("perplexity") > maxPerplexity,
-          array_union(col("drop_reasons"), array(lit("high_perplexity"))))
-          .otherwise(col("drop_reasons")))
-      .withColumn("keep", size(col("drop_reasons")) === 0)
+    val scored = df.withColumn("perplexity", pplUdf(col("text")))
+    gate(scored, col("perplexity") > maxPerplexity, "high_perplexity")
   }
 
   /** Optional stage 3c: trained quality classifier (fastText-style logistic
@@ -256,12 +253,8 @@ object QualityPipeline {
                       model: org.apache.spark.broadcast.Broadcast[graft.filter.QualityModel],
                       minScore: Double): DataFrame = {
     val scoreOf = udf((t: String) => model.value.score(t))
-    df.withColumn("quality_score", scoreOf(col("text")))
-      .withColumn("drop_reasons",
-        when(col("quality_score") < minScore,
-          array_union(col("drop_reasons"), array(lit("low_quality_score"))))
-          .otherwise(col("drop_reasons")))
-      .withColumn("keep", size(col("drop_reasons")) === 0)
+    val scored = df.withColumn("quality_score", scoreOf(col("text")))
+    gate(scored, col("quality_score") < minScore, "low_quality_score")
   }
 
   /** Stages 3b+3c FUSED: both trained-model scores from ONE tokenization
@@ -274,21 +267,15 @@ object QualityPipeline {
     * projection, no shuffle. */
   def modelScoresStage(df: DataFrame, lm: graft.filter.BigramLM,
                        qm: graft.filter.QualityModel,
-                       maxPerplexity: Double, minScore: Double): DataFrame =
-    df.withColumn("_ms",
+                       maxPerplexity: Double, minScore: Double): DataFrame = {
+    val scored = df.withColumn("_ms",
         graft.functions.ModelScoresExpression.model_scores(col("text"), lm, qm))
       .withColumn("perplexity", col("_ms.perplexity"))
-      .withColumn("drop_reasons",
-        when(col("perplexity") > maxPerplexity,
-          array_union(col("drop_reasons"), array(lit("high_perplexity"))))
-          .otherwise(col("drop_reasons")))
       .withColumn("quality_score", col("_ms.quality"))
-      .withColumn("drop_reasons",
-        when(col("quality_score") < minScore,
-          array_union(col("drop_reasons"), array(lit("low_quality_score"))))
-          .otherwise(col("drop_reasons")))
-      .withColumn("keep", size(col("drop_reasons")) === 0)
+    gate(gate(scored, col("perplexity") > maxPerplexity, "high_perplexity"),
+      col("quality_score") < minScore, "low_quality_score")
       .drop("_ms")
+  }
 
   /** Optional stage 3d: host-trust gate from the link graph — the stated
     * consumer of [[graft.operators.LinkGraph.hostRank]]. Pages on hosts
@@ -299,13 +286,18 @@ object QualityPipeline {
     * tables are threshold-pruned in practice — so it ships BROADCAST: the
     * corpus never shuffles (a plain host join would shuffle the corpus on
     * its most skewed key). */
-  def hostRankStage(df: DataFrame, hostRanks: DataFrame, minRank: Long): DataFrame =
-    df.join(broadcast(hostRanks.select(col("host"), col("rank").as("host_rank"))),
+  def hostRankStage(df: DataFrame, hostRanks: DataFrame, minRank: Long): DataFrame = {
+    val ranked = df.join(broadcast(hostRanks.select(col("host"), col("rank").as("host_rank"))),
         Seq("host"), "left")
       .withColumn("host_rank", coalesce(col("host_rank"), lit(minRank)))
-      .withColumn("drop_reasons",
-        when(col("host_rank") < minRank,
-          array_union(col("drop_reasons"), array(lit("low_host_rank"))))
+    gate(ranked, col("host_rank") < minRank, "low_host_rank")
+  }
+
+  /** A later stage's drop gate: appends `reason` to `drop_reasons` where
+    * `cond` holds, and recomputes `keep`. */
+  private def gate(df: DataFrame, cond: Column, reason: String): DataFrame =
+    df.withColumn("drop_reasons",
+        when(cond, array_union(col("drop_reasons"), array(lit(reason))))
           .otherwise(col("drop_reasons")))
       .withColumn("keep", size(col("drop_reasons")) === 0)
 

@@ -56,10 +56,6 @@ object CurationStream {
     * acknowledge, not discover. */
   final case class Config(
       curation: Curation.Config = Curation.Config(),
-      expectedHistoryDigests: Long = 1 << 20,
-      bloomShards: Int = 1,
-      expectedHistoryLines: Long = -1L,
-      expectedHistoryGrams: Long = -1L,
       hostCapN: Option[Int] = None,
       skipSemantic: Boolean = false)
 
@@ -175,10 +171,6 @@ object CurationStream {
       }
     val survivors = IncrementalCuration.stepLake(spark, stateRoot, batch,
       batchEmbeddings = None, cfg = cfg.curation,
-      expectedHistoryDigests = cfg.expectedHistoryDigests,
-      bloomShards = cfg.bloomShards,
-      expectedHistoryLines = cfg.expectedHistoryLines,
-      expectedHistoryGrams = cfg.expectedHistoryGrams,
       hostCapN = cfg.hostCapN,
       atVersion = Some(pinnedVersion))
     appendOut(survivors, outDir, streamId, batchId)

@@ -196,6 +196,21 @@ class PlanSpec extends SparkSpecBase {
       "signature pass leaked back into the verify plan — bands no longer materialized once")
   }
 
+  test("q16/q29/q65: the similarity threshold stays out of the verify join — one kernel call per pair") {
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    for ((name, kernel) <- Seq("q16_dup_pairs" -> "sortedIntersectCount",
+        "q29_embed_neardup" -> "cosineSim", "q65_incr_neardup" -> "sortedIntersectCount")) {
+      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.optimizedPlan
+      val joins = plan.collect { case j: Join => j }
+      assert(joins.nonEmpty && joins.forall(_.condition.forall(PlanInvariant.kernelCalls(_).isEmpty)),
+        s"$name: a kernel entered a join condition:\n$plan")
+      val calls = plan.flatMap(_.expressions.flatMap(PlanInvariant.kernelCalls))
+        .collect { case s: StaticInvoke if s.functionName == kernel => s }
+      assert(calls.size == 1, s"$name: ${calls.size} calls of $kernel:\n$plan")
+    }
+  }
+
   test("q66: incremental semdedup joins only on cell ids — no cartesian, no nested loop") {
     val p = executedPlan("q66_incr_semdedup")
     assert(!p.contains("CartesianProduct"), s"all-pairs plan regressed:\n$p")

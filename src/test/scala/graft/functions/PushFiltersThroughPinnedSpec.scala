@@ -5,6 +5,7 @@ import graft.filter.{BigramLM, QualityClassifier}
 import graft.pipeline.{QualityPipeline, SyntheticPages}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, Literal, Rand, Size}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 
@@ -25,18 +26,33 @@ class PushFiltersThroughPinnedSpec extends SparkSpecBase {
     plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[PiiProcessExpression])))
 
   /** The keep conjunct: the attribute itself, or its definition
-    * size(drop_reasons) = 0 once pushdown has inlined it. */
+    * size(drop_reasons) = 0 once pushdown has substituted it. The pinned
+    * drop_reasons array stays an attribute there. */
   private def isKeep(e: Expression): Boolean = e match {
     case a: AttributeReference => a.name == "keep"
-    case EqualTo(Size(reasons, _), Literal(0, _)) => reasons.toString.contains("too_few_words")
+    case EqualTo(Size(a: AttributeReference, _), Literal(0, _)) => a.name == "drop_reasons"
     case _ => false
   }
 
-  /** Pinned expressions in the optimized plan, by class, with multiplicity. */
+  /** Pinned children in the optimized plan, by class (a static kernel by
+    * the object that holds it; the drop-reasons chain as `drop_reasons`),
+    * with multiplicity. */
   private def pinnedCounts(df: DataFrame): Map[String, Int] =
     df.queryExecution.optimizedPlan
-      .flatMap(_.expressions.flatMap(_.collect { case p: PurePinned => p.getClass.getSimpleName }))
+      .flatMap(_.expressions.flatMap(_.collect {
+        case Pinned(s: StaticInvoke) => s.staticObject.getSimpleName.stripSuffix("$")
+        case Pinned(e) if e.exists(_ == Literal("too_few_words")) => "drop_reasons"
+        case Pinned(e) => e.getClass.getSimpleName
+      }))
       .groupBy(identity).map { case (k, v) => k -> v.size }
+
+  /** The pinned kernels, once the drop-reasons chain is found pinned
+    * exactly once. */
+  private def pinnedKernels(df: DataFrame): Map[String, Int] = {
+    val counts = pinnedCounts(df)
+    assert(counts.get("drop_reasons").contains(1), df.queryExecution.optimizedPlan.toString)
+    counts - "drop_reasons"
+  }
 
   test("a GraftSession serves the SQL PII functions and carries the pushdown rule") {
     val scrubbed = spark.sql(
@@ -99,7 +115,7 @@ class PushFiltersThroughPinnedSpec extends SparkSpecBase {
   test("no pinned expression is duplicated by the keep filter (gopher gates, model scores)") {
     val gated = QualityPipeline.run(pages, QualityPipeline.Config(gopherDupGates = true))
       .filter(col("keep"))
-    assert(pinnedCounts(gated) == Map("QualitySignalsFull" -> 1, "LangIdExpression" -> 1,
+    assert(pinnedKernels(gated) == Map("QualitySignalsFull" -> 1, "LangIdExpression" -> 1,
       "DupShapeSignals" -> 1, "PiiProcessExpression" -> 1),
       gated.queryExecution.optimizedPlan.toString)
 
@@ -112,7 +128,7 @@ class PushFiltersThroughPinnedSpec extends SparkSpecBase {
         QualityPipeline.qualityStage(QualityPipeline.langIdStage(QualityPipeline.extract(pages))),
         lm, qm, maxPerplexity = 1e9, minScore = 0.0)
       .filter(col("keep"))
-    assert(pinnedCounts(scored) == Map("QualitySignalsFull" -> 1, "LangIdExpression" -> 1,
+    assert(pinnedKernels(scored) == Map("QualitySignalsFull" -> 1, "LangIdExpression" -> 1,
       "ModelScoresExpression" -> 1), scored.queryExecution.optimizedPlan.toString)
   }
 }

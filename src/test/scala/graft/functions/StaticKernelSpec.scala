@@ -59,6 +59,18 @@ class StaticKernelSpec extends SparkSpecBase {
     (QualityFunctions.quality_signals(col("text")), "quality_signals(text)",
       StructType(Seq("n_words", "n_chars", "n_symbols", "n_alpha_words")
         .map(StructField(_, IntegerType, nullable = false))), true),
+    (QualityFunctions.quality_signals_full(col("text")), "quality_signals_full(text)",
+      StructType(Seq("n_words", "n_chars", "n_symbols", "n_alpha_words")
+        .map(StructField(_, IntegerType, nullable = false)) ++
+        Seq(StructField("rep2", DoubleType, nullable = false)) ++
+        Seq("n_lines", "n_bullet", "n_ellipsis")
+          .map(StructField(_, IntegerType, nullable = false))), true),
+    (QualityFunctions.dup_shape_signals(col("text")), "dup_shape_signals(text)",
+      StructType(Seq("n_lines" -> IntegerType, "dup_lines" -> IntegerType,
+        "line_chars" -> LongType, "dup_line_chars" -> LongType,
+        "n_paras" -> IntegerType, "dup_paras" -> IntegerType,
+        "para_chars" -> LongType, "dup_para_chars" -> LongType)
+        .map { case (n, t) => StructField(n, t, nullable = false) }), true),
     (FixMojibake.fix_mojibake(col("text")), "fix_mojibake(text)", StringType, true),
     (ExtractLinks.extract_links(col("html")), "extract_links(html)",
       ArrayType(StringType, containsNull = false), true),
@@ -105,6 +117,25 @@ class StaticKernelSpec extends SparkSpecBase {
       val nullRow = generated.last.get(1)
       if (nullable) assert(nullRow == null, s"$name(NULL) must be NULL")
       else assert(nullRow == Seq.empty, s"$name(NULL) must be the empty array")
+    }
+  }
+
+  /** The kernels wrapped in [[Pinned]]: the only non-deterministic ones. */
+  private val pinnedNames = Set("sorted_intersect_count(a, b)", "cosine_sim(x, y)",
+    "cosine_sim(f, y)", "ccnet_normalize(text)", "quality_signals_full(text)",
+    "dup_shape_signals(text)")
+
+  test("pinned kernels are non-deterministic in the optimized plan; the others stay deterministic") {
+    def projected(c: Column) = parquet.select(c).queryExecution.optimizedPlan
+      .collectFirst { case p: org.apache.spark.sql.catalyst.plans.logical.Project => p }
+      .get.projectList.head
+    for ((kernel, name, _, _) <- kernels)
+      assert(projected(kernel).deterministic == !pinnedNames(name), s"$name: ${projected(kernel)}")
+    val text = col("text")
+    for (c <- Seq(PiiFunctions.process_pii(text), PiiFunctions.process_pii_strict(text),
+                  QualityFunctions.langid(text), MinHashFunctions.minhash_sigs(text))) {
+      val p = projected(c)
+      assert(!p.deterministic && p.collectFirst { case k: Pinned => k }.nonEmpty, p.toString)
     }
   }
 

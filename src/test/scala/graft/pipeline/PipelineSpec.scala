@@ -32,8 +32,8 @@ class PipelineSpec extends SparkSpecBase {
     assert("process_pii".r.findAllIn(plan).length == 1, plan)
     // the keep filter is the Filter with keep as a conjunct: the attribute
     // itself, or its definition size(drop_reasons) = 0 once the optimizer
-    // inlines it into the pushed-down filter. An inferred isnotnull filter
-    // matches neither.
+    // substitutes it into the pushed-down filter (the pinned drop_reasons
+    // stays an attribute). An inferred isnotnull filter matches neither.
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(a, b) => conjuncts(a) ++ conjuncts(b)
       case other => Seq(other)
@@ -41,14 +41,44 @@ class PipelineSpec extends SparkSpecBase {
     val keepFilters = optimized.collect {
       case f: Filter if conjuncts(f.condition).exists {
         case a: AttributeReference => a.name == "keep"
-        case EqualTo(Size(reasons, _), Literal(0, _)) =>
-          reasons.toString.contains("too_few_words")
+        case EqualTo(Size(reasons: AttributeReference, _), Literal(0, _)) =>
+          reasons.name == "drop_reasons"
         case _ => false
       } => f
     }
     assert(keepFilters.nonEmpty, s"no keep filter in the plan:\n$plan")
     assert(keepFilters.forall(f => !f.child.toString.contains("process_pii")),
       s"keep filter must evaluate below (in tree order) the detector:\n$plan")
+  }
+
+  test("run/runFromHtml(...).filter(keep): one drop_reasons chain, the keep filter right above it, each kernel once per path") {
+    import graft.functions.Pinned
+    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, EqualTo, Literal, Size}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    val pages = SyntheticPages.fromDocuments(spark, sfDir)
+    for ((name, kept) <- Seq(
+        "run" -> QualityPipeline.run(pages).filter(col("keep")),
+        "runFromHtml" -> QualityPipeline.runFromHtml(pages.drop("text")).filter(col("keep")))) {
+      val (n, plans, violations) = graft.PlanInvariant.check(spark)(kept.count())
+      assert(n > 0 && plans > 0, name)
+      assert(violations.isEmpty, s"$name:\n${violations.mkString("\n")}")
+      val optimized = kept.queryExecution.optimizedPlan
+      // each copy of the chain holds its first reason's literal once
+      val chains = optimized.flatMap(_.expressions.flatMap(_.collect {
+        case l @ Literal(_, _) if l == Literal("too_few_words") => l }))
+      assert(chains.size == 1, s"$name builds drop_reasons ${chains.size} times:\n$optimized")
+      // the keep filter reads the pinned attribute, directly above the
+      // projection that defines it
+      val keepFilters = optimized.collect {
+        case Filter(EqualTo(Size(a: AttributeReference, _), Literal(0, _)), p: Project)
+            if a.name == "drop_reasons" => p
+      }
+      assert(keepFilters.size == 1 && keepFilters.head.projectList.exists {
+        case Alias(Pinned(_), "drop_reasons") => true
+        case _ => false
+      }, s"$name:\n$optimized")
+      assert(!keepFilters.head.toString.contains("process_pii"), s"$name:\n$optimized")
+    }
   }
 
   test("quality stage: Gopher line-shape gates fire on bullet/teaser noise") {

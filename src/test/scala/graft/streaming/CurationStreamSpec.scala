@@ -56,10 +56,7 @@ class CurationStreamSpec extends SparkSpecBase {
   private def ids(df: DataFrame): Set[Long] =
     df.select("doc_id").as[Long].collect().toSet
 
-  private val specCfg = CurationStream.Config(
-    expectedHistoryDigests = 1 << 10,
-    expectedHistoryLines = 1 << 14,
-    expectedHistoryGrams = 1 << 17)
+  private val specCfg = CurationStream.Config()
 
   test("streamed drops equal the sequential stepLake loop; restart drains nothing") {
     val rootS = initRoot(); val rootR = initRoot()
