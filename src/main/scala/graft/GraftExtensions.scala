@@ -1,7 +1,7 @@
 package graft
 
 import graft.filter.LangIdModel
-import graft.functions.{CcnetNormalize, DeflateRatio, ExtractLinks, LuhnValid, NfcNormalize, PiiFunctions, PushFiltersThroughPinned, QualityFunctions, RepetitionRatio, RrnValid, WinnowFingerprint}
+import graft.functions.{CcnetNormalize, DeflateRatio, ExtractLinks, LangId, LuhnValid, NfcNormalize, PiiFunctions, PushFiltersThroughPinned, RepetitionRatio, RrnValid, WinnowFingerprint}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -41,7 +41,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "Pinned: non-deterministic at analysis, so the optimizer evaluates it once per row " +
         "and it is allowed only in Project, Filter, Aggregate or Window: not in " +
         "ORDER BY, join conditions or generators (alias it in a subquery first)"),
-      QualityFunctions.langidExpr(LangIdModel.default)))
+      LangId.langidExpr(LangIdModel.default)))
     e.injectFunction((FunctionIdentifier("winnow_fingerprint"),
       info("winnow_fingerprint", "winnow_fingerprint(text) - rolling-hash fingerprint set"),
       WinnowFingerprint.winnowFingerprintExpr(8, 16)))

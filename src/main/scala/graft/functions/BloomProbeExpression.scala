@@ -2,15 +2,11 @@ package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.{BooleanType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Sharded-Bloom membership probe as a native codegen'd expression:
+/** Sharded-Bloom membership probe as a static kernel:
   * `might_contain_sharded(digest)` against a broadcast array of B Bloom
   * filters, the hash-sharded form of Spark's built-in `might_contain`
   * ([[graft.operators.IncrementalDedup]] builds the array; one filter per
@@ -18,54 +14,25 @@ import org.apache.spark.util.sketch.BloomFilter
   * array / task-serialization limits at 10¹²-key scale).
   *
   * This sits on EVERY row of every incremental batch (the exact / line /
-  * span dedup prefilters), which is why it is an expression rather than a
+  * span dedup prefilters), which is why it is a kernel rather than a
   * Scala UDF: a UDF pays the InternalRow→Row encoder round-trip per row
   * and surfaces as a codegen barrier; this compiles to one static JVM call
   * inside the scan's WholeStageCodegen (PlanSpec pins the absence of
   * ScalaUDF nodes in the q51/q83 plans).
   *
+  * The digest is read as a string: a column of another type (a `bigint`
+  * hash) is cast to its string form at analysis, the form
+  * [[graft.operators.IncrementalDedup.buildFilterArray]] keys every type
+  * on, so build and probe agree whatever the digest's type.
+  *
   * NULL digests probe to FALSE (not NULL) — the prefilter splits a batch
   * into `filter(probe)` / `filter(!probe)` branches and a NULL verdict
   * would silently drop the row from both.
   *
-  * The expression holds only the lightweight [[Broadcast]] handle; the
-  * filter array ships once per executor via the broadcast machinery, never
-  * with the task binary.
+  * The kernel's object parameter is only the lightweight [[Broadcast]]
+  * handle; the filter array ships once per executor via the broadcast
+  * machinery, never with the task binary.
   */
-case class BloomMightContainSharded(child: Expression,
-                                    bf: Broadcast[Array[BloomFilter]])
-    extends UnaryExpression
-    // analysis-time type check: a non-string digest (e.g. the LongType gram
-    // column) would otherwise launch and die per-task with ClassCastException
-    with org.apache.spark.sql.graftshim.ExpectsStringInput {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "might_contain_sharded"
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) false
-    else BloomMightContainSharded.probe(bf.value, v.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bfRef = ctx.addReferenceObj("bloomBroadcast", bf,
-      classOf[Broadcast[Array[BloomFilter]]].getName)
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        boolean ${ev.value} = !${c.isNull} &&
-          graft.functions.BloomMightContainSharded.probe(
-            (org.apache.spark.util.sketch.BloomFilter[]) $bfRef.value(), ${c.value});
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object BloomMightContainSharded {
 
   /** Spark's xxhash64() default seed — the probe key below MUST equal the
@@ -87,8 +54,12 @@ object BloomMightContainSharded {
       .mightContainLong(k)
   }
 
+  /** The kernel: a NULL digest probes to false. */
+  def mightContain(d: UTF8String, bf: Broadcast[Array[BloomFilter]]): Boolean =
+    d != null && probe(bf.value, d)
+
   def might_contain_sharded(digest: Column,
                             bf: Broadcast[Array[BloomFilter]]): Column =
-    ColumnBridge.column(
-      BloomMightContainSharded(ColumnBridge.expression(digest), bf))
+    StaticKernel.column(args => StaticKernel.expr("might_contain_sharded", this, "mightContain",
+      BooleanType, Seq(StringType), args, Seq(bf), nullSafe = false), digest)
 }

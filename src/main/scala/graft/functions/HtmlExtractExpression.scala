@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
@@ -31,29 +29,22 @@ import scala.collection.mutable.ArrayBuffer
   * Output: final-good block texts joined with '\n'; entity-decoded,
   * whitespace collapsed to single spaces, space-trimmed per block. One
   * O(|html|) scan per row, zero dependencies — a narrow codegen-stage
-  * expression that runs at scan parallelism (no shuffle).
+  * kernel that runs at scan parallelism (no shuffle).
   */
-case class JusTextExtract(
-    child: Expression,
-    lengthLow: Int = 70,
-    lengthHigh: Int = 200,
-    maxLinkDensity: Double = 0.2,
-    stopwordsLow: Double = 0.0,
-    stopwordsHigh: Double = 0.0,
-    stopwords: Set[String] = Set.empty)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "justext_extract"
+object JusTextExtract {
+  final val Bad = 0; final val Short = 1; final val NearGood = 2; final val Good = 3
 
-  override def nullSafeEval(input: Any): Any = {
-    val html = input.asInstanceOf[UTF8String].toString
-    val blocks = JusTextExtract.segment(html)
-    val classes = JusTextExtract.classify(
-      blocks, lengthLow, lengthHigh, maxLinkDensity, stopwordsLow, stopwordsHigh, stopwords)
+  /** jusText's length and link-density thresholds. */
+  final val LengthLow = 70; final val LengthHigh = 200; final val MaxLinkDensity = 0.2
+
+  def extract(u: UTF8String, stopwordsLow: Double, stopwordsHigh: Double,
+              stopwords: Set[String]): UTF8String = {
+    val blocks = segment(u.toString)
+    val classes = classify(blocks, stopwordsLow, stopwordsHigh, stopwords)
     val sb = new java.lang.StringBuilder
     var i = 0
     while (i < blocks.length) {
-      if (classes(i) == JusTextExtract.Good) {
+      if (classes(i) == Good) {
         if (sb.length > 0) sb.append('\n')
         sb.append(blocks(i).text)
       }
@@ -61,12 +52,6 @@ case class JusTextExtract(
     }
     UTF8String.fromString(sb.toString)
   }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object JusTextExtract {
-  final val Bad = 0; final val Short = 1; final val NearGood = 2; final val Good = 3
 
   final case class Block(text: String, linkChars: Int) {
     def chars: Int = text.length
@@ -243,8 +228,7 @@ object JusTextExtract {
 
   /** jusText classification: context-free pass then the context-sensitive
     * revision of short/near-good blocks (boundaries count as bad). */
-  def classify(blocks: ArrayBuffer[Block], lengthLow: Int, lengthHigh: Int,
-               maxLinkDensity: Double, swLow: Double, swHigh: Double,
+  def classify(blocks: ArrayBuffer[Block], swLow: Double, swHigh: Double,
                stopwords: Set[String]): Array[Int] = {
     val n = blocks.length
     val cf = new Array[Int](n)
@@ -252,12 +236,12 @@ object JusTextExtract {
     while (i < n) {
       val b = blocks(i)
       cf(i) =
-        if (b.linkDensity > maxLinkDensity) Bad
+        if (b.linkDensity > MaxLinkDensity) Bad
         else if (b.text.indexOf('©') >= 0) Bad
-        else if (b.chars < lengthLow) { if (b.linkChars > 0) Bad else Short }
+        else if (b.chars < LengthLow) { if (b.linkChars > 0) Bad else Short }
         else {
           val density = if (stopwords.isEmpty) 1.0 else stopwordDensity(b.text, stopwords)
-          if (density >= swHigh) { if (b.chars > lengthHigh) Good else NearGood }
+          if (density >= swHigh) { if (b.chars > LengthHigh) Good else NearGood }
           else if (density >= swLow) NearGood
           else Bad
         }
@@ -320,15 +304,19 @@ object JusTextExtract {
 }
 
 object HtmlFunctions {
+  private def justextExpr(swLow: Double, swHigh: Double, stopwords: Set[String])(
+      args: Seq[Expression]): Expression =
+    StaticKernel.expr("justext_extract", JusTextExtract, "extract", StringType, Seq(StringType),
+      args, Seq(swLow, swHigh, stopwords))
+
   /** Language-independent jusText extraction (length + link density only —
     * the pre-langid crawl default). */
   def justext_extract(c: Column): Column =
-    ColumnBridge.column(JusTextExtract(ColumnBridge.expression(c)))
+    StaticKernel.column(justextExpr(0.0, 0.0, Set.empty), c)
 
   /** Stopword-sharpened variant (per-language list + the paper's density
     * thresholds). */
   def justext_extract(c: Column, stopwords: Set[String],
                       swLow: Double = 0.30, swHigh: Double = 0.32): Column =
-    ColumnBridge.column(JusTextExtract(ColumnBridge.expression(c),
-      stopwordsLow = swLow, stopwordsHigh = swHigh, stopwords = stopwords))
+    StaticKernel.column(justextExpr(swLow, swHigh, stopwords), c)
 }

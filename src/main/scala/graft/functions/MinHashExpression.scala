@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,15 +21,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * `minhash_sigs` pins it ([[Pinned]]): the short-doc sentinel filter over
   * `sigs` then stays above the projection instead of a second pass.
   */
-case class MinHashSignatures(child: Expression, k: Int, shingleWidth: Int)
-    extends UnaryExpression with CodegenFallback
-    with org.apache.spark.sql.graftshim.ExpectsStringInput {
-  require(k >= 1 && shingleWidth >= 1)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sigs"
+object MinHashSignatures {
+  /** Same pattern Spark's split uses; compiled once per JVM. */
+  private[functions] val Ws = java.util.regex.Pattern.compile("\\s+")
 
-  override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
+  /** The kernel's parameters with their permutation constants, built once
+    * per deserialized instance. Equality is the parameters'. */
+  final case class Params(k: Int, shingleWidth: Int) {
+    require(k >= 1 && shingleWidth >= 1)
+    @transient lazy val as: Array[Long] = Array.tabulate(k)(MinHashPerms.a)
+    @transient lazy val bs: Array[Long] = Array.tabulate(k)(MinHashPerms.b)
+  }
+
+  def signatures(u: UTF8String, params: Params): ArrayData = {
+    val k = params.k
+    val shingleWidth = params.shingleWidth
+    val as = params.as
+    val bs = params.bs
+    val text = u.toString
     // Tokenize EXACTLY like the long form / SQL oracle, i.e. Spark's
     // split(lower(trim(text)), "\s+"): trim strips only ' ' (not \t/\n like
     // JVM String.trim), and split keeps leading/trailing empty tokens
@@ -46,7 +53,7 @@ case class MinHashSignatures(child: Expression, k: Int, shingleWidth: Int)
     // default-locale toLowerCase (Spark's slow path) — Locale.ROOT there
     // would diverge under e.g. a tr-TR JVM (İ dotting rules), and a bare
     // toLowerCase() would diverge on ASCII under the same locale
-    val toks = MinHashSignatures.Ws.split(
+    val toks = Ws.split(
       MinHashPerms.lowerLikeSpark(text.substring(s, e)), -1)
     val sigs = Array.fill(k)(Long.MaxValue)
     if (toks.length >= shingleWidth) {
@@ -101,17 +108,6 @@ case class MinHashSignatures(child: Expression, k: Int, shingleWidth: Int)
     }
     ArrayData.toArrayData(sigs)
   }
-
-  @transient private lazy val as: Array[Long] = Array.tabulate(k)(MinHashPerms.a)
-  @transient private lazy val bs: Array[Long] = Array.tabulate(k)(MinHashPerms.b)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object MinHashSignatures {
-  /** Same pattern Spark's split uses; compiled once per JVM. */
-  private[functions] val Ws = java.util.regex.Pattern.compile("\\s+")
 }
 
 /** The MinHash permutation family h_i(s) = (a_i · hash60(s) + b_i) mod P,
@@ -188,5 +184,7 @@ object MinHashPerms {
 
 object MinHashFunctions {
   def minhash_sigs(c: Column, k: Int = 16, shingleWidth: Int = 3): Column =
-    StaticKernel.column(args => Pinned(MinHashSignatures(args.head, k, shingleWidth)), c)
+    StaticKernel.column(args => Pinned(StaticKernel.expr("minhash_sigs", MinHashSignatures,
+      "signatures", ArrayType(LongType, containsNull = false), Seq(StringType), args,
+      Seq(MinHashSignatures.Params(k, shingleWidth)))), c)
 }

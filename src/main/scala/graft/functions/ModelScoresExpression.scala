@@ -3,8 +3,6 @@ package graft.functions
 import graft.filter.{BigramLM, QualityClassifier, QualityModel}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * stage — ~40% of pipeline CPU in round 2). Here one `\s+` split feeds both
   * scorers. On top of that, `BigramLM.prob`'s hot lookup is a Scala
   * `Map[(String, String), Long]` — every probe allocates a Tuple2 and pays
-  * generic hashing; this expression rebuilds the tables as
+  * generic hashing; this kernel rebuilds the tables as
   * java.util.HashMaps with a composite "w1 w2" key (tokens cannot contain
   * spaces, so the key never aliases): zero allocation per probe beyond one
   * string concat.
@@ -27,34 +25,43 @@ import org.apache.spark.unsafe.types.UTF8String
   * operation — same interpolation order, same 2000-token feature cap, same
   * mean-normalized sigmoid.
   *
-  * Distribution shape: the model bytes ride the expression → task binary →
+  * Distribution shape: the models ride the kernel's object parameter, a
+  * [[ModelScoresExpression.ModelRef]], into the task binary →
   * TorrentBroadcast (shipped once per executor), but the task binary is
   * DESERIALIZED per task — so the fast tables live in an EXECUTOR-SINGLETON
-  * cache keyed by `cacheKey` (a driver-generated UUID that survives task
-  * serialization): the first task on each executor builds them, every later
-  * task reuses them. Without this, a full-size LM (2^20 bigrams) would pay
-  * ~1M HashMap inserts per TASK — rivaling the scoring work the fusion
+  * cache keyed by the ref's `key` (a driver-generated UUID that survives
+  * task serialization): the first task on each executor builds them, every
+  * later task reuses them. Without this, a full-size LM (2^20 bigrams) would
+  * pay ~1M HashMap inserts per TASK — rivaling the scoring work the fusion
   * saves on short tasks. `model_scores` wraps it in [[Pinned]], so the
   * optimizer evaluates it once per row.
   */
-case class ModelScoresExpression(child: Expression, models: ModelScoresExpression.ModelRef)
-    extends UnaryExpression with CodegenFallback {
-  private def lm: BigramLM = models.lm
-  private def qm: QualityModel = models.qm
-  private def cacheKey: String = models.key
-  override def dataType: DataType = StructType(Seq(
-    StructField("perplexity", DoubleType, nullable = false),
-    StructField("quality", DoubleType, nullable = false)))
-  override def prettyName: String = "model_scores"
+object ModelScoresExpression {
+  /** Holder keeping the MODELS out of the expression's structural
+    * equality: Catalyst hashes/compares expressions during analysis and
+    * optimization (ExpressionSet, canonicalization), and a synthesized
+    * case-class equals over a 2^20-entry model Map would make PLANNING cost
+    * O(model size) per comparison. Equality/hashCode key on the driver-
+    * generated UUID only — two refs are the same model iff they were
+    * created by the same `model_scores` call, which is exactly the
+    * granularity the executor-side table cache uses. */
+  final class ModelRef(val lm: BigramLM, val qm: QualityModel,
+                       val key: String = java.util.UUID.randomUUID().toString)
+      extends Serializable {
+    override def equals(o: Any): Boolean = o match {
+      case r: ModelRef => r.key == key
+      case _ => false
+    }
+    override def hashCode: Int = key.hashCode
+    override def toString: String = s"ModelRef($key)"
 
-  // Executor-singleton fast tables: resolved once per instance (transient
-  // lazy), BUILT once per executor JVM (companion cache keyed by cacheKey —
-  // read-only after construction, safe under concurrent tasks).
-  @transient private lazy val t: ModelScoresExpression.FastTables =
-    ModelScoresExpression.tablesFor(cacheKey, lm)
+    /** The fast tables: resolved once per deserialized ref, BUILT once per
+      * executor JVM ([[tablesFor]]). */
+    @transient lazy val tables: FastTables = tablesFor(key, lm)
+  }
 
   /** Exact replica of BigramLM.prob over the fast tables. */
-  private def prob(w1: String, w2: String): Double = {
+  private def prob(lm: BigramLM, t: FastTables, w1: String, w2: String): Double = {
     val c1 = t.uniT.getOrDefault(w1, 0L)
     val pcont = {
       val cc = t.contT.getOrDefault(w2, 0)
@@ -68,12 +75,15 @@ case class ModelScoresExpression(child: Expression, models: ModelScoresExpressio
     }
   }
 
-  override def nullSafeEval(input: Any): Any = {
+  def scores(u: UTF8String, models: ModelRef): InternalRow = {
+    val lm = models.lm
+    val qm = models.qm
+    val t = models.tables
     // ONE tokenization feeds both scorers. Parity: BigramLM.tokenize is
     // trim→lower→split→nonEmpty filter; QualityClassifier.features is
     // lower→trim→split (no filter) — identical token sets for every input
     // (post-trim `\s+` splits produce no interior/leading empties).
-    val toks = input.asInstanceOf[UTF8String].toString
+    val toks = u.toString
       .trim.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
 
     val ppl =
@@ -82,7 +92,7 @@ case class ModelScoresExpression(child: Expression, models: ModelScoresExpressio
         var lp = 0.0
         var i = 1
         while (i < toks.length) {
-          lp += math.log(math.max(prob(toks(i - 1), toks(i)), 1e-12))
+          lp += math.log(math.max(prob(lm, t, toks(i - 1), toks(i)), 1e-12))
           i += 1
         }
         math.exp(-lp / (toks.length - 1))
@@ -116,30 +126,6 @@ case class ModelScoresExpression(child: Expression, models: ModelScoresExpressio
     InternalRow(ppl, quality)
   }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object ModelScoresExpression {
-  /** Holder keeping the MODELS out of the expression's structural
-    * equality: Catalyst hashes/compares expressions during analysis and
-    * optimization (ExpressionSet, canonicalization), and a synthesized
-    * case-class equals over a 2^20-entry model Map would make PLANNING cost
-    * O(model size) per comparison. Equality/hashCode key on the driver-
-    * generated UUID only — two refs are the same model iff they were
-    * created by the same `model_scores` call, which is exactly the
-    * granularity the executor-side table cache uses. */
-  final class ModelRef(val lm: BigramLM, val qm: QualityModel,
-                       val key: String = java.util.UUID.randomUUID().toString)
-      extends Serializable {
-    override def equals(o: Any): Boolean = o match {
-      case r: ModelRef => r.key == key
-      case _ => false
-    }
-    override def hashCode: Int = key.hashCode
-    override def toString: String = s"ModelRef($key)"
-  }
-
   final case class FastTables(uniT: java.util.HashMap[String, Long],
                               bigT: java.util.HashMap[String, Long],
                               contT: java.util.HashMap[String, Int],
@@ -151,7 +137,7 @@ object ModelScoresExpression {
   // models just rebuild on the next task — correctness is unaffected).
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, FastTables]()
 
-  private[functions] def tablesFor(key: String, lm: BigramLM): FastTables = {
+  private def tablesFor(key: String, lm: BigramLM): FastTables = {
     val hit = cache.get(key)
     if (hit != null) hit
     else {
@@ -173,5 +159,8 @@ object ModelScoresExpression {
   }
 
   def model_scores(c: Column, lm: BigramLM, qm: QualityModel): Column =
-    StaticKernel.column(args => Pinned(ModelScoresExpression(args.head, new ModelRef(lm, qm))), c)
+    StaticKernel.column(args => Pinned(StaticKernel.expr("model_scores", this, "scores",
+      StructType(Seq(StructField("perplexity", DoubleType, nullable = false),
+        StructField("quality", DoubleType, nullable = false))),
+      Seq(StringType), args, Seq(new ModelRef(lm, qm)))), c)
 }

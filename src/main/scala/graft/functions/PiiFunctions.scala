@@ -3,7 +3,7 @@ package graft.functions
 import graft.core.{PiiCategories, PiiDetector}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -16,39 +16,23 @@ object PiiSchema {
 
 /** process_pii(text) → struct(text_scrubbed string, n_pii int): detection and
   * redaction from ONE detector pass (detect_pii + scrub_pii as separate
-  * columns would each run the full pattern battery). The pipeline's hot path. */
+  * columns would each run the full pattern battery). The pipeline's hot path.
+  *
+  * It stays an expression class, unlike every other per-row kernel
+  * ([[StaticKernel]]): perfbench's trace counts the detector's input rows by
+  * finding this class in executed plans. Its generated code is one call of
+  * [[PiiFunctions.process]], so its projection stays inside
+  * WholeStageCodegen. */
 case class PiiProcessExpression(child: Expression, strict: Boolean = false)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression {
   override def dataType: DataType = StructType(Seq(
     StructField("text_scrubbed", StringType, nullable = false),
     StructField("n_pii", IntegerType, nullable = false)))
   override def prettyName: String = if (strict) "process_pii_strict" else "process_pii"
-  override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
-    val (res, spans) = PiiDetector.detectWithSpans(text)
-    if (strict) {
-      // checksum-gated fused path: one detector pass, spans filtered by the
-      // Luhn/RRN gates. n_pii keeps the SAME counting rule as plain mode —
-      // distinct (category, value) pairs — restricted to surviving spans,
-      // so toggling strict changes n_pii ONLY on rows where a gate actually
-      // dropped a value (a repeated email still counts once in both modes).
-      val kept = spans.filter(PiiChecksums.redact)
-      val seen = scala.collection.mutable.HashSet.empty[(Int, String)]
-      var n = 0
-      kept.foreach(s => if (seen.add((s.cat, s.value))) n += 1)
-      val scrubbed = if (kept.isEmpty) text else PiiDetector.scrubSpans(text, kept)
-      InternalRow(UTF8String.fromString(scrubbed), n)
-    } else {
-      var n = 0
-      var i = 0
-      while (i < PiiCategories.size) {
-        if (res.cats(i) != null) n += res.cats(i).length
-        i += 1
-      }
-      val scrubbed = if (spans.isEmpty) text else PiiDetector.scrubSpans(text, spans)
-      InternalRow(UTF8String.fromString(scrubbed), n)
-    }
-  }
+  override def nullSafeEval(input: Any): Any =
+    PiiFunctions.process(input.asInstanceOf[UTF8String], strict)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.PiiFunctions.process($c, $strict)")
   override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }
 
@@ -87,8 +71,9 @@ object PiiChecksums {
   * ([[StaticKernel]]): WholeStageCodegen calls them directly inside the
   * generated stage — no Scala-UDF serialization/encoder overhead, NULL in →
   * NULL out. `process_pii` stays an expression class
-  * ([[PiiProcessExpression]]) behind a [[Pinned]] wrapper, so the optimizer
-  * evaluates it once per row.
+  * ([[PiiProcessExpression]], so perfbench's trace can find the detector in
+  * executed plans) behind a [[Pinned]] wrapper, so the optimizer evaluates
+  * it once per row.
   */
 object PiiFunctions {
 
@@ -128,6 +113,34 @@ object PiiFunctions {
     val text = u.toString
     val spans = PiiDetector.detectWithSpans(text)._2
     UTF8String.fromString(PiiDetector.scrubSpans(text, spans.filter(PiiChecksums.redact)))
+  }
+
+  /** process_pii's value ([[PiiProcessExpression]]). */
+  def process(u: UTF8String, strict: Boolean): InternalRow = {
+    val text = u.toString
+    val (res, spans) = PiiDetector.detectWithSpans(text)
+    if (strict) {
+      // checksum-gated fused path: one detector pass, spans filtered by the
+      // Luhn/RRN gates. n_pii keeps the SAME counting rule as plain mode —
+      // distinct (category, value) pairs — restricted to surviving spans,
+      // so toggling strict changes n_pii ONLY on rows where a gate actually
+      // dropped a value (a repeated email still counts once in both modes).
+      val kept = spans.filter(PiiChecksums.redact)
+      val seen = scala.collection.mutable.HashSet.empty[(Int, String)]
+      var n = 0
+      kept.foreach(s => if (seen.add((s.cat, s.value))) n += 1)
+      val scrubbed = if (kept.isEmpty) text else PiiDetector.scrubSpans(text, kept)
+      InternalRow(UTF8String.fromString(scrubbed), n)
+    } else {
+      var n = 0
+      var i = 0
+      while (i < PiiCategories.size) {
+        if (res.cats(i) != null) n += res.cats(i).length
+        i += 1
+      }
+      val scrubbed = if (spans.isEmpty) text else PiiDetector.scrubSpans(text, spans)
+      InternalRow(UTF8String.fromString(scrubbed), n)
+    }
   }
 
   private[graft] def detectPiiExpr(args: Seq[Expression]): Expression =

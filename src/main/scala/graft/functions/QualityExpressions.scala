@@ -3,8 +3,7 @@ package graft.functions
 import graft.filter.LangIdModel
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -49,21 +48,19 @@ object RepetitionRatio {
 }
 
 /** langid(text) → struct(lang string, confidence double) via the fastText-
-  * style hashed n-gram linear model. The model rides in the expression
-  * (serialized once per task closure, weights shared per executor), so it
-  * stays an expression class; its builder pins it ([[Pinned]]). */
-case class LangIdExpression(child: Expression, model: LangIdModel)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StructType(Seq(
-    StructField("lang", StringType, nullable = false),
-    StructField("confidence", DoubleType, nullable = false)))
-  override def prettyName: String = "langid"
-  override def nullSafeEval(input: Any): Any = {
-    val (lang, conf) = model.classify(input.asInstanceOf[UTF8String].toString)
+  * style hashed n-gram linear model. The model is the kernel's object
+  * parameter: it rides the task binary to each executor; its builder pins it
+  * ([[Pinned]]). */
+object LangId {
+  def classify(u: UTF8String, model: LangIdModel): InternalRow = {
+    val (lang, conf) = model.classify(u.toString)
     InternalRow(UTF8String.fromString(lang), conf)
   }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+
+  private[graft] def langidExpr(model: LangIdModel)(args: Seq[Expression]): Expression =
+    Pinned(StaticKernel.expr("langid", this, "classify", StructType(Seq(
+      StructField("lang", StringType, nullable = false),
+      StructField("confidence", DoubleType, nullable = false))), Seq(StringType), args, Seq(model)))
 }
 
 /** Winnowing document fingerprints (Schleimer et al., MOSS): rolling
@@ -421,10 +418,8 @@ object QualityFunctions {
     StaticKernel.column(DupShapeSignals.dupShapeSignalsExpr, c)
   def repetition_ratio(c: Column, n: Int): Column =
     StaticKernel.column(RepetitionRatio.repetitionRatioExpr(n), c)
-  private[graft] def langidExpr(model: LangIdModel)(args: Seq[Expression]): Expression =
-    Pinned(LangIdExpression(args.head, model))
   def langid(c: Column, model: LangIdModel = LangIdModel.default): Column =
-    StaticKernel.column(langidExpr(model), c)
+    StaticKernel.column(LangId.langidExpr(model), c)
   def winnow_fingerprint(c: Column, k: Int = 8, w: Int = 16): Column =
     StaticKernel.column(WinnowFingerprint.winnowFingerprintExpr(k, w), c)
   def deflate_ratio(c: Column): Column = StaticKernel.column(DeflateRatio.deflateRatioExpr, c)

@@ -1,16 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** sign_lsh_buckets(embedding) → array<long> of `nTables` sign-LSH bucket
-  * ids, one pass per row: for table t, bit b of the bucket is set iff
-  * embedding · plane(t,b) > 0, with planes drawn from the same seeded
-  * Gaussian as `Similarity.hyperplanes(nPlanes, dim, seedBase + t)`
+/** sign_lsh_buckets(embedding array<float>) → array<long> of `nTables`
+  * sign-LSH bucket ids, one pass per row: for table t, bit b of the bucket
+  * is set iff embedding · plane(t,b) > 0, with planes drawn from the same
+  * seeded Gaussian as `Similarity.hyperplanes(nPlanes, dim, seedBase + t)`
   * (value-identical to the composed `Similarity.lshBucket` columns — pinned
   * by DedupSpec).
   *
@@ -18,39 +15,43 @@ import org.apache.spark.sql.types._
   * `aggregate(zip_with(...))` expressions — ~100 closure evaluations per row
   * and a plan tree that dominates small-batch wall time. Here all dot
   * products run in one fused loop over the vector: O(nTables·nPlanes·dim)
-  * multiply-adds with zero allocation beyond the output array.
+  * multiply-adds with zero allocation beyond the output array. The input
+  * is declared `array<float>`, so a wrong-typed embedding fails or is cast
+  * at analysis instead of being read at the wrong element width.
   */
-case class SignLshBuckets(child: Expression, nTables: Int, nPlanes: Int,
-                          dim: Int, seedBase: Long)
-    extends UnaryExpression with CodegenFallback {
-  require(nTables >= 1 && nPlanes >= 1 && nPlanes <= 63 && dim >= 1)
+object SignLshBuckets {
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "sign_lsh_buckets"
+  /** The kernel's parameters with their hyperplanes, built once per
+    * deserialized instance. Equality is the parameters'. */
+  final case class Planes(nTables: Int, nPlanes: Int, dim: Int, seedBase: Long) {
+    require(nTables >= 1 && nPlanes >= 1 && nPlanes <= 63 && dim >= 1)
 
-  // [table][plane * dim + d] — flat for cache-friendly fused dots
-  @transient private lazy val planes: Array[Array[Double]] =
-    Array.tabulate(nTables) { t =>
-      val ps = graft.operators.Similarity.hyperplanes(nPlanes, dim, seedBase + t)
-      val flat = new Array[Double](nPlanes * dim)
-      var b = 0
-      while (b < nPlanes) {
-        System.arraycopy(ps(b), 0, flat, b * dim, dim)
-        b += 1
+    // [table][plane * dim + d] — flat for cache-friendly fused dots
+    @transient lazy val flat: Array[Array[Double]] =
+      Array.tabulate(nTables) { t =>
+        val ps = graft.operators.Similarity.hyperplanes(nPlanes, dim, seedBase + t)
+        val flat = new Array[Double](nPlanes * dim)
+        var b = 0
+        while (b < nPlanes) {
+          System.arraycopy(ps(b), 0, flat, b * dim, dim)
+          b += 1
+        }
+        flat
       }
-      flat
-    }
+  }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def buckets(arr: ArrayData, planes: Planes): ArrayData = {
+    val dim = planes.dim
+    val nPlanes = planes.nPlanes
     val n = math.min(arr.numElements(), dim)
     val v = new Array[Double](dim) // truncate/zero-pad to the plane dimension
     var i = 0
     while (i < n) { v(i) = arr.getFloat(i).toDouble; i += 1 }
-    val out = new Array[Long](nTables)
+    val tables = planes.flat
+    val out = new Array[Long](tables.length)
     var t = 0
-    while (t < nTables) {
-      val flat = planes(t)
+    while (t < out.length) {
+      val flat = tables(t)
       var bucket = 0L
       var b = 0
       while (b < nPlanes) {
@@ -66,13 +67,12 @@ case class SignLshBuckets(child: Expression, nTables: Int, nPlanes: Int,
     }
     ArrayData.toArrayData(out)
   }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object SignLshFunctions {
   def sign_lsh_buckets(c: Column, nTables: Int, nPlanes: Int, dim: Int,
                        seedBase: Long = 1000L): Column =
-    ColumnBridge.column(SignLshBuckets(ColumnBridge.expression(c), nTables, nPlanes, dim, seedBase))
+    StaticKernel.column(args => StaticKernel.expr("sign_lsh_buckets", SignLshBuckets, "buckets",
+      ArrayType(LongType, containsNull = false), Seq(ArrayType(FloatType)), args,
+      Seq(SignLshBuckets.Planes(nTables, nPlanes, dim, seedBase))), c)
 }

@@ -67,7 +67,7 @@ object Dedup {
         .cast("long")).as("sig"))
   }
 
-  /** Production signature path: one-pass per-row MinHash expression — no
+  /** Production signature path: one-pass per-row MinHash kernel — no
     * explode, no shuffle (vs the long-form `minhashSignatures`, which is kept
     * as the SQL-oracle-checkable formulation). Value-identical hashes; docs
     * with fewer than `shingleWidth` tokens get all-Long.MaxValue signatures

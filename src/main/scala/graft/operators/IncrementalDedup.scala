@@ -64,9 +64,9 @@ object IncrementalDedup {
   /** Lazy prefiltered result + explicit broadcast release hook. */
   final case class Prefiltered(df: DataFrame, release: () => Unit)
 
-  /** Broadcast `filters` and return the codegen'd probe of `digestCol`
-    * against them with the broadcast's release hook. A codegen'd probe, not
-    * a Scala UDF: it runs on every row of every incoming batch, and the
+  /** Broadcast `filters` and return the `might_contain_sharded` static
+    * kernel over `digestCol` against them, with the broadcast's release
+    * hook. A codegen'd kernel, not a Scala UDF: it runs on every row of every incoming batch, and the
     * UDF's per-row encoder round-trip is a real tax at 10⁹-row batches
     * (PlanSpec pins zero ScalaUDF nodes here). */
   private def bloomProbe(df: DataFrame, digestCol: String,
@@ -301,15 +301,19 @@ object IncrementalDedup {
     // of the digest string through putString (guide §2.3, narrower types):
     // the old path re-encoded every digest to UTF-8 and Murmur-hashed
     // 20-32 bytes per insert/probe; the long key is hashed once here by
-    // codegen and probed allocation-free. The probe side
-    // ([[graft.functions.BloomMightContainSharded.probe]]) derives the
+    // codegen and probed allocation-free. The probe side (the
+    // `might_contain_sharded` kernel,
+    // [[graft.functions.BloomMightContainSharded.probe]]) derives the
     // IDENTICAL key via XXH64.hashUTF8String(digest, 42) — Spark's
     // xxhash64() with its fixed default seed — so false negatives remain
     // impossible by construction; only the (filter-internal) false-positive
-    // pattern changes, which the verify join removes either way. Null
-    // digests are excluded to match the probe's NULL→false bypass.
+    // pattern changes, which the verify join removes either way. The key
+    // is taken over the digest's STRING form, as the probe reads it (a
+    // numeric digest column reaches the kernel cast to string): hashing a
+    // bigint as a long here would never match the probe. Null digests are
+    // excluded to match the probe's NULL→false bypass.
     history.where(col(digestCol).isNotNull)
-      .select(xxhash64(col(digestCol)).as("k")).as[Long]
+      .select(xxhash64(col(digestCol).cast("string")).as("k")).as[Long]
       .rdd.treeAggregate(Array.fill(b)(BloomFilter.create(perShard, fpp)))(
         (fs, k) => { fs(shardOf(k, b)).putLong(k); fs },
         (a, x) => { a.indices.foreach(i => a(i).mergeInPlace(x(i))); a })

@@ -90,7 +90,7 @@ object Curation {
   /** [[neardupStage]] with the signature table supplied — the incremental
     * step computes signatures ONCE and shares them between the
     * within-batch stage and the cross-history band probe
-    * ([[IncrementalCuration]]): the MinHash expression (one md5 per
+    * ([[IncrementalCuration]]): the MinHash kernel (one md5 per
     * shingle) is the CPU-dominant pass over the batch, and the separate
     * formulation re-ran it per stage. `sigs` must be exactly
     * `Dedup.minhashSignaturesFast(df, "doc_id", "text")` rows. */

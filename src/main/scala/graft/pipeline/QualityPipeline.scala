@@ -258,7 +258,7 @@ object QualityPipeline {
   }
 
   /** Stages 3b+3c FUSED: both trained-model scores from ONE tokenization
-    * pass (`model_scores` expression; the separate stages each re-tokenize
+    * pass (`model_scores` kernel; the separate stages each re-tokenize
     * every document and pay tuple-keyed Scala-map lookups per bigram). Column
     * contract and values are IDENTICAL to
     * `classifierStage(perplexityStage(df, lm, maxPpl), qm, minScore)` —

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{BpeEncodeExpression, JusTextExtract, MinHashSignatures, Pinned, SignLshBuckets}
+import graft.functions.Pinned
 import org.apache.spark.graftshim.ListenerBus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -14,14 +14,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * most once per row. Predicate pushdown substitutes aliases with no cost
   * guard; a pushed copy of a kernel shows up here as a second call on the
   * path. The non-cheap kernels are the static kernels (a `StaticInvoke` of
-  * a graft object), every [[Pinned]] child, and the BPE, MinHash, sign-LSH
-  * and jusText expressions. Calls that one projection repeats count once:
+  * a graft object) and every [[Pinned]] child. Calls that one projection repeats count once:
   * subexpression elimination evaluates them once per row. */
 object PlanInvariant {
 
   private def isKernel(e: Expression): Boolean = e match {
     case s: StaticInvoke => s.staticObject.getName.startsWith("graft.")
-    case _: BpeEncodeExpression | _: MinHashSignatures | _: SignLshBuckets | _: JusTextExtract => true
     case _ => false
   }
 

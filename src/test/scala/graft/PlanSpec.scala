@@ -61,7 +61,7 @@ class PlanSpec extends SparkSpecBase {
     val finalSection = if (idx >= 0) p.substring(0, idx) else p
     assert(!finalSection.contains("Exchange hashpartitioning"),
       s"q14 must be a narrow map (no agg shuffle):\n$finalSection")
-    assert(finalSection.contains("minhash_sigs"), "per-row expression missing")
+    assert(finalSection.contains("MinHashSignatures.signatures"), "per-row signature kernel missing")
   }
 
   test("q37: sampling is a scan-level filter — no join, no agg shuffle") {
@@ -159,8 +159,8 @@ class PlanSpec extends SparkSpecBase {
         case node => node.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum
       }.sum
       assert(nUdf == 0, s"$q: expected zero ScalaUDF nodes, found $nUdf")
-      assert(df.queryExecution.optimizedPlan.toString.contains("might_contain_sharded"),
-        s"$q: the native probe expression is missing from the plan")
+      assert(df.queryExecution.optimizedPlan.toString.contains("BloomMightContainSharded.mightContain"),
+        s"$q: the native probe kernel is missing from the plan")
     }
   }
 
@@ -189,10 +189,10 @@ class PlanSpec extends SparkSpecBase {
     // localCheckpoints (IncrementalDedup.nearCrossPairs) — the verify plan
     // reads the stored tables (ExistingRDD scans) instead of re-running the
     // md5-per-shingle signature pass per plan consumer; the per-row
-    // signature expression itself is plan-pinned in the q14/q16 guards
+    // signature kernel itself is plan-pinned in the q14/q16 guards
     assert(p.contains("Scan ExistingRDD"),
       s"materialized band/candidate scan missing:\n$p")
-    assert(!p.contains("minhash_sigs"),
+    assert(!p.contains("MinHashSignatures.signatures"),
       "signature pass leaked back into the verify plan — bands no longer materialized once")
   }
 

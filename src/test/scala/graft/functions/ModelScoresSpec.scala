@@ -3,6 +3,7 @@ package graft.functions
 import graft.SparkSpecBase
 import graft.filter.{BigramLM, QualityClassifier}
 import graft.pipeline.QualityPipeline
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
 
 /** Fused model_scores expression: EXACT (==) value parity with the separate
@@ -69,7 +70,7 @@ class ModelScoresSpec extends SparkSpecBase {
       .queryExecution.optimizedPlan
     val n = plan.collect { case node =>
       node.expressions.map(_.collect {
-        case e: ModelScoresExpression => e }.size).sum
+        case s: StaticInvoke if s.staticObject == ModelScoresExpression.getClass => s }.size).sum
     }.sum
     assert(n == 1, s"model_scores must appear exactly once in the plan, found $n")
   }

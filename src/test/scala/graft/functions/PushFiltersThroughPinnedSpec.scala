@@ -115,7 +115,7 @@ class PushFiltersThroughPinnedSpec extends SparkSpecBase {
   test("no pinned expression is duplicated by the keep filter (gopher gates, model scores)") {
     val gated = QualityPipeline.run(pages, QualityPipeline.Config(gopherDupGates = true))
       .filter(col("keep"))
-    assert(pinnedKernels(gated) == Map("QualitySignalsFull" -> 1, "LangIdExpression" -> 1,
+    assert(pinnedKernels(gated) == Map("QualitySignalsFull" -> 1, "LangId" -> 1,
       "DupShapeSignals" -> 1, "PiiProcessExpression" -> 1),
       gated.queryExecution.optimizedPlan.toString)
 
@@ -128,7 +128,7 @@ class PushFiltersThroughPinnedSpec extends SparkSpecBase {
         QualityPipeline.qualityStage(QualityPipeline.langIdStage(QualityPipeline.extract(pages))),
         lm, qm, maxPerplexity = 1e9, minScore = 0.0)
       .filter(col("keep"))
-    assert(pinnedKernels(scored) == Map("QualitySignalsFull" -> 1, "LangIdExpression" -> 1,
+    assert(pinnedKernels(scored) == Map("QualitySignalsFull" -> 1, "LangId" -> 1,
       "ModelScoresExpression" -> 1), scored.queryExecution.optimizedPlan.toString)
   }
 }

@@ -68,6 +68,22 @@ class IncrementalDedupSpec extends SparkSpecBase {
       assert(run(IncrementalDedup.seenOnly(digests, history, "digest", fs))(ids) == want, src)
   }
 
+  test("newOnly / seenOnly over a bigint digest equal the exact anti / semi joins") {
+    // the probe reads a digest as a string; the build must key a bigint
+    // digest on the same form, or every probe misses (duplicates admitted,
+    // seen rows lost)
+    val longDigests = docs.select($"doc_id", xxhash64($"text").as("digest"))
+    val history = longDigests.filter($"doc_id" % 3 === 0)
+    val anti = ids(longDigests.join(history.select("digest"), Seq("digest"), "left_anti"))
+    val semi = ids(longDigests.join(history.select("digest"), Seq("digest"), "left_semi"))
+    assert(anti.nonEmpty && semi.nonEmpty)
+    for ((src, fs) <- bothSources(history.filter($"doc_id" < 300),
+                                  history.filter($"doc_id" >= 300), "digest", 1 << 12)) {
+      assert(run(IncrementalDedup.newOnly(longDigests, history, "digest", fs))(ids) == anti, src)
+      assert(run(IncrementalDedup.seenOnly(longDigests, history, "digest", fs))(ids) == semi, src)
+    }
+  }
+
   test("newLinesOnly: built and merged-sidecar filters both equal the exact anti-join") {
     // every doc ends in a boilerplate footer variant; the even-id half is
     // history, split at doc 300 into two batches
