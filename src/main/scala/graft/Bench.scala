@@ -442,13 +442,8 @@ object Bench {
         // punctuation) and the full chain runs at full width.
         val pages = if (c4) pages0.withColumn("text", concat(col("text"), lit(".")))
                     else pages0
-        val cfg = QualityPipeline.Config(c4LineFilter = c4)
-        val extracted = QualityPipeline.extract(pages)
-        val lf = if (c4) QualityPipeline.lineFilterStage(extracted, cfg) else extracted
-        QualityPipeline.piiStage(
-          QualityPipeline.modelScoresStage(
-            QualityPipeline.qualityStage(QualityPipeline.langIdStage(lf), cfg),
-            lm, qm, maxPerplexity = 1e9, minScore = 0.0))
+        QualityPipeline.run(pages, QualityPipeline.Config(c4LineFilter = c4),
+            modelGate = Some(QualityPipeline.ModelGate(lm, qm, maxPerplexity = 1e9, minScore = 0.0)))
           .select("url", "keep", "n_pii", "text_scrubbed")
       }
       force(fullDf(c4 = false)) // warm-up

@@ -1,7 +1,7 @@
 package graft.eval
 
 import graft.core.{PiiCategories, PyCompat}
-import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import PyCompat.pyRound
 
@@ -59,11 +59,6 @@ object Report {
       .select(col("difficulty"), col("z.cat").as("cat"), col("z.tp").as("tp"),
         col("z.fp").as("fp"), col("z.fn").as("fn"), col("z.he").as("he"), col("z.hp").as("hp"))
       .cache()
-
-    def clsCells(grouped: Array[Row]): Map[String, (Long, Long, Long, Long)] =
-      grouped.map { r =>
-        r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-      }.toMap
 
     val catAgg = exploded.groupBy("cat").agg(
       sum(col("tp").cast("long")), sum(col("fp").cast("long")), sum(col("fn").cast("long")),

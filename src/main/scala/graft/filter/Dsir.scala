@@ -1,7 +1,10 @@
 package graft.filter
 
+import graft.functions.StaticKernel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** DSIR — Data Selection with Importance Resampling (Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling"): select
@@ -18,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    (order-independent integer sums → the model is bit-deterministic under
   *    any partitioning, same discipline as [[QualityClassifier.fit]]);
   *  - the model is a `dim`-sized log-ratio vector (512 KB at 2¹⁶) that rides
-  *    the task-closure broadcast;
+  *    the scoring kernel's task-binary broadcast;
   *  - scoring is a narrow per-row pass (one tokenization, feature hashing
   *    shared with the quality classifier);
   *  - resampling without replacement = Gumbel top-k (Vieira 2014): key =
@@ -81,12 +84,14 @@ object Dsir {
     DsirModel(dim, ratio)
   }
 
-  /** Per-row log importance weight (broadcast-model scalar scoring — no
-    * shuffle). */
-  def logWeights(df: DataFrame, textCol: Column, model: DsirModel): Column = {
-    val m = model
-    udf((t: String) => m.logWeight(t)).apply(textCol)
-  }
+  /** dsir_log_weight(text): per-row log importance weight, a static
+    * kernel with the model as its object parameter (task-binary broadcast;
+    * the model's equality is its array's identity) — no shuffle. */
+  def logWeights(textCol: Column, model: DsirModel): Column =
+    StaticKernel.column(args => StaticKernel.expr("dsir_log_weight", this, "logWeight",
+      DoubleType, Seq(StringType), args, Seq(model)), textCol)
+
+  def logWeight(t: UTF8String, model: DsirModel): Double = model.logWeight(t.toString)
 
   /** Gumbel top-k resampling without replacement: keep the k documents with
     * the largest `log w + Gumbel` key. Noise comes from murmur3 of
@@ -103,7 +108,7 @@ object Dsir {
     val u = (pmod(hash(idCol, lit(seed)), lit(1 << 30)).cast("double") + lit(0.5)) /
       lit((1 << 30).toDouble)
     val gumbel = -log(-log(u))
-    df.withColumn("log_weight", logWeights(df, textCol, model))
+    df.withColumn("log_weight", logWeights(textCol, model))
       .withColumn("_dsir_gumbel_key", col("log_weight") + gumbel)
       .orderBy(desc("_dsir_gumbel_key"), idCol)
       .limit(k)

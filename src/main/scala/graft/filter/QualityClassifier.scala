@@ -1,7 +1,10 @@
 package graft.filter
 
+import graft.functions.StaticKernel
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.sql.types.{DoubleType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import scala.util.hashing.MurmurHash3
 
 /** fastText-style supervised quality classifier: binary logistic regression
@@ -41,6 +44,15 @@ final case class QualityModel(dim: Int, weights: Array[Float], bias: Float)
 object QualityClassifier {
 
   @inline private[graft] def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
+
+  /** quality_score(text): `model.score` per row, a static kernel with the
+    * model as its object parameter (the model's equality is its weight
+    * array's identity, so planning never compares weights). */
+  def score(text: Column, model: QualityModel): Column =
+    StaticKernel.column(args => StaticKernel.expr("quality_score", this, "scoreText",
+      DoubleType, Seq(StringType), args, Seq(model)), text)
+
+  def scoreText(t: UTF8String, model: QualityModel): Double = model.score(t.toString)
 
   /** Deterministic weak-supervision corpus — ONE definition shared by the
     * q55 query (whose model the golden pins) and the held-out accuracy gate

@@ -28,10 +28,6 @@ object TextFunctions {
     * DuckDB equivalent: CAST(('0x'||substr(md5(s),1,15)) AS UBIGINT). */
   def hash60(c: Column): Column = conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Salted variant for minhash permutations: hash60(s + "#" + i). */
-  def hash60Salted(c: Column, salt: Column): Column =
-    hash60(concat(c, lit("#"), salt.cast("string")))
-
   /** Word k-grams (space-joined) of the lowered token array; `distinct`
     * toggles set semantics (shingles) vs multiset (repetition counting).
     * Empty array when fewer than k tokens. */
@@ -63,22 +59,6 @@ object TextFunctions {
     * characters removed — robust to whitespace/punctuation reflow. */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(text), "[^a-z0-9가-힣]", ""))
-
-  /** Minimal HTML → text extraction for crawl pages without a pre-extracted
-    * text column: drop script/style blocks, strip tags, decode the common
-    * entities, collapse whitespace. Pure codegen'd regexp chain — a real
-    * deployment swaps in a DOM-aware extractor behind the same column
-    * contract (string html → string text). */
-  def htmlToText(html: Column): Column = {
-    val noScript = regexp_replace(html, "(?is)<(script|style)[^>]*>.*?</\\1>", " ")
-    val noTags = regexp_replace(noScript, "(?s)<[^>]*>", " ")
-    val entities = Seq("&amp;" -> "&", "&lt;" -> "<", "&gt;" -> ">",
-      "&quot;" -> "\"", "&#39;" -> "'", "&nbsp;" -> " ")
-    val decoded = entities.foldLeft(noTags) { case (c, (e, r)) =>
-      regexp_replace(c, java.util.regex.Pattern.quote(e), r)
-    }
-    trim(regexp_replace(decoded, "\\s+", " "))
-  }
 
   // --- Gopher/C4-style quality signals ---------------------------------
 

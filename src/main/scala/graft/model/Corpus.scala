@@ -42,8 +42,3 @@ final case class PiiStruct(
     nl(IP주소), nl(전화번호), nl(계좌번호), nl(카드번호), nl(생년월일), nl(기타_고유식별정보))
   @inline private def nl(s: Seq[String]): List[String] = if (s == null) null else s.toList
 }
-
-object PiiStruct {
-  def fromArray(a: Array[List[String]]): PiiStruct = PiiStruct(
-    a(0), a(1), a(2), a(3), a(4), a(5), a(6), a(7), a(8), a(9), a(10), a(11))
-}

@@ -1,8 +1,11 @@
 package graft.operators
 
+import graft.functions.{Pinned, StaticKernel}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType}
 
 /** Embedding similarity search over an `array<float>` column.
   *
@@ -112,47 +115,66 @@ object Similarity {
     centroids
   }
 
+  private def sqDist(v: Array[Float], ctr: Array[Double]): Double = {
+    var d = 0.0; var i = 0
+    while (i < ctr.length) { val x = v(i) - ctr(i); d += x * x; i += 1 }
+    d
+  }
+
   private def nearestCentroid(v: Array[Float], centroids: Array[Array[Double]]): Int = {
     var best = 0; var bestD = Double.MaxValue
     var c = 0
     while (c < centroids.length) {
-      var d = 0.0; var i = 0
-      val ctr = centroids(c)
-      while (i < ctr.length) { val x = v(i) - ctr(i); d += x * x; i += 1 }
+      val d = sqDist(v, centroids(c))
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
     best
   }
 
-  private def nearestCells(v: Array[Float], centroids: Array[Array[Double]], nProbe: Int): Seq[Int] = {
-    centroids.indices.map { c =>
-      var d = 0.0; var i = 0
-      val ctr = centroids(c)
-      while (i < ctr.length) { val x = v(i) - ctr(i); d += x * x; i += 1 }
-      c -> d
-    }.sortBy(_._2).take(nProbe).map(_._1)
+  /** Centroids as a kernel parameter: a holder with identity equality, so
+    * planning never compares centroid arrays. */
+  final class Centroids(val values: Array[Array[Double]]) extends Serializable
+
+  /** Kernel: the id of the centroid nearest to `v` (squared L2). */
+  def nearestCell(v: ArrayData, c: Centroids): Int = nearestCentroid(v.toFloatArray(), c.values)
+
+  /** Kernel: the ids of the `nProbe` centroids nearest to `v`, nearest
+    * first (ties by id). */
+  def nearestCells(v: ArrayData, c: Centroids, nProbe: Int): ArrayData = {
+    val f = v.toFloatArray()
+    ArrayData.toArrayData(c.values.indices.map(i => i -> sqDist(f, c.values(i)))
+      .sortBy(_._2).take(nProbe).map(_._1).toArray)
   }
+
+  /** nearest_cell(embedding array<float>) → int. */
+  private[graft] def cellOf(v: Column, c: Centroids): Column =
+    StaticKernel.column(args => StaticKernel.expr("nearest_cell", this, "nearestCell",
+      IntegerType, Seq(ArrayType(FloatType)), args, Seq(c)), v)
+
+  /** nearest_cells(embedding array<float>) → array<int> of `nProbe` ids. */
+  private[graft] def cellsOf(v: Column, c: Centroids, nProbe: Int): Column =
+    StaticKernel.column(args => StaticKernel.expr("nearest_cells", this, "nearestCells",
+      ArrayType(IntegerType, containsNull = false), Seq(ArrayType(FloatType)), args,
+      Seq(c, nProbe)), v)
 
   /** IVF ANN: corpus assigned to its nearest cell (one narrow pass); each
     * query probes its nProbe nearest cells; scoring joins on cell id. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nCells: Int = 16, nProbe: Int = 4, sampleSize: Int = 2048): DataFrame = {
-    val spark = corpus.sparkSession
     // ordered take: a bare limit() samples in partition order, which would
     // make centroid init — and so every cell assignment — depend on input
     // layout (same discipline as semDedup's sample)
     val sample = corpus.select(col("vec_id"), col("embedding"))
       .orderBy("vec_id").limit(sampleSize)
       .collect().map(_.getSeq[Float](1).toArray)
-    val centroids = ivfCentroids(sample, nCells)
-    val bc = spark.sparkContext.broadcast(centroids)
-    val cellUdf = udf((v: Seq[Float]) => nearestCentroid(v.toArray, bc.value))
-    val probeUdf = udf((v: Seq[Float]) => nearestCells(v.toArray, bc.value, nProbe))
+    val centroids = new Centroids(ivfCentroids(sample, nCells))
+    // pinned: the join's inferred isnotnull(cell) would otherwise be
+    // pushed below this projection as a second kernel call
     val c = corpus.select(col("vec_id").as("cand_id"), col("embedding"),
-      cellUdf(col("embedding")).as("cell"))
+      Pinned.column(cellOf(col("embedding"), centroids)).as("cell"))
     val q = broadcast(queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      explode(probeUdf(col("embedding"))).as("cell")))
+      explode(cellsOf(col("embedding"), centroids, nProbe)).as("cell")))
     val scored = c.join(q, "cell")
       .withColumn("sim", cosine(col("q_emb"), col("embedding")))
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("cand_id").asc)
@@ -276,13 +298,13 @@ object Similarity {
   /** Normalized cell assignments under a FROZEN quantizer: (id, u, cell) —
     * the standard SemDeDup intermediate a deployment persists to the lake
     * (bucketed by cell) so later batches join against it without
-    * recomputation. Centroids ride the udf closure (task binary → one
-    * torrent-broadcast copy per executor, no explicit lifecycle). */
-  def assignCells(vectors: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
-    val cellUdf = udf((v: Seq[Double]) =>
-      nearestCentroid(v.map(_.toFloat).toArray, centroids))
-    l2normalize(vectors).select(col("id"), col("u"), cellUdf(col("u")).as("cell"))
-  }
+    * recomputation. Centroids ride the `nearest_cell` kernel's object
+    * parameter (task binary → one torrent-broadcast copy per executor, no
+    * explicit lifecycle); the kernel reads `u` narrowed to float, as the
+    * centroid fit reads its sample. */
+  def assignCells(vectors: DataFrame, centroids: Array[Array[Double]]): DataFrame =
+    l2normalize(vectors).select(col("id"), col("u"),
+      cellOf(col("u").cast("array<float>"), new Centroids(centroids)).as("cell"))
 
   /** The deterministic drop rule over an assignment table: vector b is
     * dropped iff some vector a with a.id < b.id shares its cell at cosine

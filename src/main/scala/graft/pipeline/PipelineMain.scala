@@ -2,11 +2,13 @@ package graft.pipeline
 
 import graft.GraftSession
 import graft.sources.PageLake
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The spark-submit entry for the full quality-filter + PII-scrub pipeline:
   *
-  *   pages → extract → langid → quality → scrub
+  *   pages → [[QualityPipeline.run]] (extract → langid → quality
+  *         → optional model gate → scrub)
   *         → checkpointed result stage (exact resume after failure)
   *         → kept-pages lake (date-partitioned parquet)
   *         → lineage + per-host metrics tables
@@ -15,36 +17,45 @@ import org.apache.spark.sql.functions._
   * under spark-submit with the input path pointing at the crawl lake; here
   * pages are synthesized deterministically from the driver fixtures.
   *
-  * Optional model stages (both fit their models from the input corpus
-  * upstream of the scoring pass, broadcast-scored, no shuffle):
-  *   SPARK_GRAFT_MAX_PPL=<double>     insert the KN-perplexity filter
-  *   SPARK_GRAFT_MIN_QUALITY=<double> insert the trained classifier filter
+  * Optional model gate ([[QualityPipeline.ModelGate]]; both models are fit
+  * from the input corpus upstream of the one fused scoring pass, no
+  * shuffle). Setting either variable fits both models; a threshold that is
+  * not set is neutral (+∞ / −∞) and never drops a page:
+  *   SPARK_GRAFT_MAX_PPL=<double>     drop pages above this KN perplexity
+  *   SPARK_GRAFT_MIN_QUALITY=<double> drop pages under this classifier score
   */
 object PipelineMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/graft_pipeline_out")
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-pipeline")
-    import spark.implicits._
+    run(spark, sfDir, outDir, sys.env.get("SPARK_GRAFT_MAX_PPL").map(_.toDouble),
+      sys.env.get("SPARK_GRAFT_MIN_QUALITY").map(_.toDouble))
+    spark.stop()
+  }
 
+  /** Runs the pipeline over `sfDir` into `outDir` and prints the summary
+    * line; returns the checkpointed result stage. The checkpoint is keyed
+    * on the input and on the gate's thresholds, so a rerun with another
+    * gate recomputes it. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          maxPpl: Option[Double], minQ: Option[Double]): DataFrame = {
+    import spark.implicits._
     val pages = SyntheticPages.fromDocuments(spark, sfDir)
-    var scored = QualityPipeline.qualityStage(
-      QualityPipeline.langIdStage(QualityPipeline.extract(pages)))
-    for (maxPpl <- sys.env.get("SPARK_GRAFT_MAX_PPL").map(_.toDouble)) {
-      val lm = spark.sparkContext.broadcast(
-        graft.filter.BigramLM.fit(pages.select("text").as[String]))
-      scored = QualityPipeline.perplexityStage(scored, lm, maxPpl)
-    }
-    for (minQ <- sys.env.get("SPARK_GRAFT_MIN_QUALITY").map(_.toDouble)) {
+    // lazy: a resumed checkpoint fits no model
+    lazy val modelGate = if (maxPpl.isEmpty && minQ.isEmpty) None else {
+      val lm = graft.filter.BigramLM.fit(pages.select("text").as[String])
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val model = spark.sparkContext.broadcast(graft.filter.QualityClassifier.fit(
+      val qm = graft.filter.QualityClassifier.fit(
         graft.filter.QualityClassifier.weakLabels(docs, col("doc_id"), col("text"))
-          .select(col("text").as("_1"), col("y").as("_2")).as[(String, Double)]))
-      scored = QualityPipeline.classifierStage(scored, model, minQ)
+          .select(col("text").as("_1"), col("y").as("_2")).as[(String, Double)])
+      Some(QualityPipeline.ModelGate(lm, qm, maxPpl.getOrElse(Double.PositiveInfinity),
+        minQ.getOrElse(Double.NegativeInfinity)))
     }
+    val gateKey = s"|max_ppl=${maxPpl.getOrElse("")}|min_quality=${minQ.getOrElse("")}"
     val result = QualityPipeline.checkpointStage(spark,
-      QualityPipeline.piiStage(scored),
-      outDir, "scored", QualityPipeline.inputFingerprint(sfDir))
+      QualityPipeline.run(pages, modelGate = modelGate),
+      outDir, "scored", QualityPipeline.inputFingerprint(sfDir) + gateKey)
 
     // kept pages → partitioned lake (the pipeline's product)
     PageLake.write(
@@ -65,6 +76,6 @@ object PipelineMain {
       sum(when(col("n_pii") > 0, 1L).otherwise(0L)), sum(col("n_pii"))).head()
     println(s"pages=${s.getLong(0)} kept=${s.getLong(1)} " +
       s"pii_pages=${s.getLong(2)} pii_items=${s.getLong(3)} out=$outDir")
-    spark.stop()
+    result
   }
 }

@@ -235,45 +235,25 @@ object QualityPipeline {
       .drop("lsig", "dsig")
   }
 
-  /** Optional stage 3b: Kneser-Ney perplexity scoring against a broadcast
-    * bigram LM (fit on a sample upstream); documents above the threshold get
-    * a drop reason. Broadcast-model scalar scoring — no shuffle. */
-  def perplexityStage(df: DataFrame, lm: org.apache.spark.broadcast.Broadcast[graft.filter.BigramLM],
-                      maxPerplexity: Double): DataFrame = {
-    val pplUdf = udf((t: String) => lm.value.perplexity(t))
-    val scored = df.withColumn("perplexity", pplUdf(col("text")))
-    gate(scored, col("perplexity") > maxPerplexity, "high_perplexity")
-  }
+  /** [[run]]'s trained-model gate: `lm` and `qm` are fit upstream (on a
+    * sample, or on the input corpus); pages above `maxPerplexity` or under
+    * `minScore` get a drop reason, so +∞ / −∞ never drops a page. */
+  final case class ModelGate(lm: graft.filter.BigramLM, qm: graft.filter.QualityModel,
+                             maxPerplexity: Double, minScore: Double)
 
-  /** Optional stage 3c: trained quality classifier (fastText-style logistic
-    * model, fit DISTRIBUTED upstream via QualityClassifier.fit) — broadcast-
-    * weights scalar scoring, no shuffle; documents under `minScore` get a
-    * drop reason. The model-based filter stage of CCNet/DCLM-style pipelines. */
-  def classifierStage(df: DataFrame,
-                      model: org.apache.spark.broadcast.Broadcast[graft.filter.QualityModel],
-                      minScore: Double): DataFrame = {
-    val scoreOf = udf((t: String) => model.value.score(t))
-    val scored = df.withColumn("quality_score", scoreOf(col("text")))
-    gate(scored, col("quality_score") < minScore, "low_quality_score")
-  }
-
-  /** Stages 3b+3c FUSED: both trained-model scores from ONE tokenization
-    * pass (`model_scores` kernel; the separate stages each re-tokenize
-    * every document and pay tuple-keyed Scala-map lookups per bigram). Column
-    * contract and values are IDENTICAL to
-    * `classifierStage(perplexityStage(df, lm, maxPpl), qm, minScore)` —
-    * parity is spec-pinned with exact equality. Models ride the expression
-    * (task-binary broadcast, one copy per executor); still a narrow
-    * projection, no shuffle. */
-  def modelScoresStage(df: DataFrame, lm: graft.filter.BigramLM,
-                       qm: graft.filter.QualityModel,
-                       maxPerplexity: Double, minScore: Double): DataFrame = {
+  /** Optional stage 3b: both trained-model scores from ONE tokenization
+    * pass (`model_scores` kernel): Kneser-Ney perplexity against a bigram
+    * LM (drop reason `high_perplexity`) and the fastText-style quality
+    * classifier of CCNet/DCLM-style pipelines (`low_quality_score`). The
+    * models ride the expression (task-binary broadcast, one copy per
+    * executor); a narrow projection, no shuffle. */
+  private[graft] def modelScoresStage(df: DataFrame, g: ModelGate): DataFrame = {
     val scored = df.withColumn("_ms",
-        graft.functions.ModelScoresExpression.model_scores(col("text"), lm, qm))
+        graft.functions.ModelScoresExpression.model_scores(col("text"), g.lm, g.qm))
       .withColumn("perplexity", col("_ms.perplexity"))
       .withColumn("quality_score", col("_ms.quality"))
-    gate(gate(scored, col("perplexity") > maxPerplexity, "high_perplexity"),
-      col("quality_score") < minScore, "low_quality_score")
+    gate(gate(scored, col("perplexity") > g.maxPerplexity, "high_perplexity"),
+      col("quality_score") < g.minScore, "low_quality_score")
       .drop("_ms")
   }
 
@@ -313,15 +293,18 @@ object QualityPipeline {
       .withColumn("text_scrubbed", col("pp.text_scrubbed"))
       .drop("pp")
 
-  /** Full chain (the C4 line-filter stage joins when `cfg.c4LineFilter`;
-    * the host-rank gate joins when a rank table is passed). */
+  /** Full chain (the C4 line-filter stage joins when `cfg.c4LineFilter`,
+    * the model gate when one is passed, the host-rank gate when a rank
+    * table is passed). */
   def run(pages: DataFrame, cfg: Config = Config(),
           model: LangIdModel = LangIdModel.default,
-          hostRanks: Option[DataFrame] = None): DataFrame = {
+          hostRanks: Option[DataFrame] = None,
+          modelGate: Option[ModelGate] = None): DataFrame = {
     val base = extract(pages)
     val lf = if (cfg.c4LineFilter) lineFilterStage(base, cfg) else base
     val quality = qualityStage(langIdStage(lf, model), cfg)
-    val ranked = hostRanks.fold(quality)(hostRankStage(quality, _, cfg.minHostRank))
+    val gated = modelGate.fold(quality)(modelScoresStage(quality, _))
+    val ranked = hostRanks.fold(gated)(hostRankStage(gated, _, cfg.minHostRank))
     piiStage(ranked, cfg.strictScrub)
   }
 

@@ -670,13 +670,11 @@ object TextQueries {
       val labeled = QualityClassifier.weakLabels(d, col("doc_id"), col("text"))
         .select(col("text").as("_1"), col("y").as("_2")).as[(String, Double)]
       val model = QualityClassifier.fit(labeled, epochs = 60)
-      val bm = s.sparkContext.broadcast(model)
-      val scoreOf = udf((t: String) => bm.value.score(t))
       // Score ONCE, derive quality + keep from the column: CollapseProject
-      // keeps the non-cheap UDF un-duplicated across the two projections
-      // (SPARK-36718), so every row pays one feature-hash + dot product —
-      // not two (the r2 form evaluated scoreOf twice per row).
-      d.select(col("doc_id"), scoreOf(col("text")).as("_q"))
+      // does not inline a non-cheap expression (the score kernel's static
+      // call) into two references (SPARK-36718), so every row pays one
+      // feature-hash + dot product, not two.
+      d.select(col("doc_id"), QualityClassifier.score(col("text"), model).as("_q"))
         .select(col("doc_id"), round(col("_q"), 3).as("quality"),
           (col("_q") >= 0.5).as("keep"))
         .orderBy("doc_id")

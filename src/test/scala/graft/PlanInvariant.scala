@@ -3,7 +3,7 @@ package graft
 import graft.functions.Pinned
 import org.apache.spark.graftshim.ListenerBus
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.execution.QueryExecution
@@ -15,7 +15,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * guard; a pushed copy of a kernel shows up here as a second call on the
   * path. The non-cheap kernels are the static kernels (a `StaticInvoke` of
   * a graft object) and every [[Pinned]] child. Calls that one projection repeats count once:
-  * subexpression elimination evaluates them once per row. */
+  * subexpression elimination evaluates them once per row. A plan must also
+  * hold no Scala UDF: every per-row kernel is a static kernel. */
 object PlanInvariant {
 
   private def isKernel(e: Expression): Boolean = e match {
@@ -32,7 +33,8 @@ object PlanInvariant {
   }
 
   /** Every kernel call that a path of `plan` (or of one of its subqueries)
-    * holds more than once, described with the node where it repeats. */
+    * holds more than once, described with the node where it repeats, and
+    * every Scala UDF, with the node that calls it. */
   def violations(plan: LogicalPlan): Seq[String] = {
     def walk(node: LogicalPlan, seen: Map[Expression, Int]): Seq[String] = {
       val calls = node.expressions.flatMap(kernelCalls).map(_.canonicalized)
@@ -42,7 +44,11 @@ object PlanInvariant {
         .map(k => s"${counts(k)}× $k on the path to ${node.nodeName}") ++
         node.children.flatMap(walk(_, counts))
     }
-    (plan +: plan.subqueriesAll).flatMap(walk(_, Map.empty)).distinct
+    val plans = plan +: plan.subqueriesAll
+    val udfs = plans.flatMap(_.flatMap(node => node.expressions.flatMap(_.collect {
+      case u: ScalaUDF => s"Scala UDF ${u.udfName.getOrElse(u.function.getClass.getName)} in ${node.nodeName}"
+    })))
+    (plans.flatMap(walk(_, Map.empty)) ++ udfs).distinct
   }
 
   /** Checks the optimized plan of every action a session runs, including

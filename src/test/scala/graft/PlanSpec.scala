@@ -140,26 +140,25 @@ class PlanSpec extends SparkSpecBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("q55: the classifier UDF is evaluated once per row, not per derived column") {
-    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+  test("q55: the classifier kernel is evaluated once per row, not per derived column") {
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
     val df = SparkEntry.queries("q55_quality_classifier")(spark, sfDir)
-    val nUdf = df.queryExecution.optimizedPlan.collect {
-      case node => node.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum
+    val nScore = df.queryExecution.optimizedPlan.collect {
+      case node => node.expressions.map(_.collect {
+        case s: StaticInvoke if s.staticObject == graft.filter.QualityClassifier.getClass &&
+          s.functionName == "scoreText" => s }.size).sum
     }.sum
-    assert(nUdf == 1, s"scoreOf must appear exactly once in the optimized plan, found $nUdf")
+    assert(nScore == 1, s"quality_score must appear exactly once in the optimized plan, found $nScore")
   }
 
   test("q51/q83/q91: the Bloom probe is a codegen'd expression, zero ScalaUDF nodes") {
-    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
     // the probe sits on every row of every incremental batch; a Scala UDF
     // there pays a per-row encoder round-trip and breaks WholeStageCodegen
     for (q <- Seq("q51_bloom_dedup", "q83_incr_linededup", "q91_incr_spandedup")) {
-      val df = SparkEntry.queries(q)(spark, sfDir)
-      val nUdf = df.queryExecution.optimizedPlan.collect {
-        case node => node.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum
-      }.sum
-      assert(nUdf == 0, s"$q: expected zero ScalaUDF nodes, found $nUdf")
-      assert(df.queryExecution.optimizedPlan.toString.contains("BloomMightContainSharded.mightContain"),
+      val plan = SparkEntry.queries(q)(spark, sfDir).queryExecution.optimizedPlan
+      val violations = PlanInvariant.violations(plan)
+      assert(violations.isEmpty, s"$q:\n${violations.mkString("\n")}")
+      assert(plan.toString.contains("BloomMightContainSharded.mightContain"),
         s"$q: the native probe kernel is missing from the plan")
     }
   }

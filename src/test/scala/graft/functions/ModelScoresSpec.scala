@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 
 /** Fused model_scores expression: EXACT (==) value parity with the separate
   * BigramLM.perplexity / QualityModel.score paths, and stage-level parity of
-  * modelScoresStage with classifierStage∘perplexityStage. */
+  * modelScoresStage with those scorers and its gate rule applied per row on
+  * the driver. */
 class ModelScoresSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -35,7 +36,7 @@ class ModelScoresSpec extends SparkSpecBase {
     }
   }
 
-  test("fused stage equals the composed perplexity+classifier stages") {
+  test("fused stage equals the driver-side scorers under the same gate rule") {
     val pages = graft.pipeline.SyntheticPages.fromDocuments(spark, sfDir)
     val base = QualityPipeline.qualityStage(
       QualityPipeline.langIdStage(QualityPipeline.extract(pages)))
@@ -47,26 +48,32 @@ class ModelScoresSpec extends SparkSpecBase {
       .select(col("ms.perplexity").as("p"), col("ms.quality").as("q"))
     val Array(maxPpl, minQ) = scored.stat
       .approxQuantile(Array("p", "q"), Array(0.5), 0.001).map(_.head)
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("url"), col("perplexity"), col("quality_score"),
-        array_join(col("drop_reasons"), ",").as("reasons"), col("keep"))
-      .collect().map(_.toString).sorted.toSeq
-    val composed = canon(QualityPipeline.classifierStage(
-      QualityPipeline.perplexityStage(base,
-        spark.sparkContext.broadcast(lm), maxPpl),
-      spark.sparkContext.broadcast(qm), minQ))
-    val fused = canon(QualityPipeline.modelScoresStage(base, lm, qm, maxPpl, minQ))
-    assert(fused == composed)
+    val fused = QualityPipeline.modelScoresStage(base.withColumn("reasons0",
+        col("drop_reasons")), QualityPipeline.ModelGate(lm, qm, maxPpl, minQ))
+      .select(col("url"), col("text"), col("reasons0"), col("perplexity"),
+        col("quality_score"), col("drop_reasons"), col("keep"))
+      .collect()
+    for (r <- fused) {
+      val t = r.getString(1)
+      val (ppl, q) = (lm.perplexity(t), qm.score(t))
+      // gate: append the reason where the threshold is crossed (set union)
+      val withPpl =
+        if (ppl > maxPpl) (r.getSeq[String](2) :+ "high_perplexity").distinct else r.getSeq[String](2)
+      val reasons = if (q < minQ) (withPpl :+ "low_quality_score").distinct else withPpl
+      assert((r.getDouble(3), r.getDouble(4)) == ((ppl, q)), r.getString(0))
+      assert(r.getSeq[String](5) == reasons, r.getString(0))
+      assert(r.getBoolean(6) == reasons.isEmpty, r.getString(0))
+    }
     // thresholds actually bite on this corpus (the parity is non-trivial)
-    assert(composed.exists(_.contains("high_perplexity")) ||
-      composed.exists(_.contains("low_quality_score")), "pick thresholds that fire")
+    assert(fused.exists(_.getSeq[String](5).contains("high_perplexity")) &&
+      fused.exists(_.getSeq[String](5).contains("low_quality_score")), "pick thresholds that fire")
   }
 
   test("model_scores struct is evaluated once per row in the fused stage plan") {
     val pages = graft.pipeline.SyntheticPages.fromDocuments(spark, sfDir)
     val base = QualityPipeline.qualityStage(
       QualityPipeline.langIdStage(QualityPipeline.extract(pages)))
-    val plan = QualityPipeline.modelScoresStage(base, lm, qm, 5000.0, 0.5)
+    val plan = QualityPipeline.modelScoresStage(base, QualityPipeline.ModelGate(lm, qm, 5000.0, 0.5))
       .queryExecution.optimizedPlan
     val n = plan.collect { case node =>
       node.expressions.map(_.collect {

@@ -126,7 +126,7 @@ class PushFiltersThroughPinnedSpec extends SparkSpecBase {
     val qm = QualityClassifier.fit(texts.zip(Seq(1.0, 0.0, 1.0)).toDS(), dim = 1 << 10, epochs = 2)
     val scored = QualityPipeline.modelScoresStage(
         QualityPipeline.qualityStage(QualityPipeline.langIdStage(QualityPipeline.extract(pages))),
-        lm, qm, maxPerplexity = 1e9, minScore = 0.0)
+        QualityPipeline.ModelGate(lm, qm, maxPerplexity = 1e9, minScore = 0.0))
       .filter(col("keep"))
     assert(pinnedKernels(scored) == Map("QualitySignalsFull" -> 1, "LangId" -> 1,
       "ModelScoresExpression" -> 1), scored.queryExecution.optimizedPlan.toString)

@@ -2,8 +2,8 @@ package graft.functions
 
 import graft.SparkSpecBase
 import graft.core.PiiCategories
-import graft.filter.{BigramLM, QualityModel}
-import graft.operators.BpeVocab
+import graft.filter.{BigramLM, Dsir, DsirModel, QualityClassifier, QualityModel}
+import graft.operators.{BpeVocab, Similarity}
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
@@ -14,7 +14,8 @@ import org.apache.spark.util.sketch.BloomFilter
 
 /** The per-row kernel surface: every kernel built through [[StaticKernel]],
   * and [[PiiProcessExpression]], keeps the column name, data type and
-  * nullability it had as a hand-written expression class, plans its
+  * nullability it had as a hand-written expression class (a kernel that
+  * replaced a Scala UDF: NULL in, NULL out), plans its
   * projection inside a WholeStageCodegen stage over a multi-file parquet
   * scan (so object parameters — models, stopword sets, a broadcast — go
   * through task serialization), computes the same values generated and
@@ -49,6 +50,9 @@ class StaticKernelSpec extends SparkSpecBase {
     Map("quick" -> 1, "brown" -> 1, "fox" -> 1), Map("the" -> 1, "quick" -> 1, "brown" -> 1),
     totalUnigrams = 10L, bigramTypes = 3L, discount = 0.75)
   private val qm = QualityModel(8, Array.tabulate(8)(i => i * 0.25f - 1f), 0.1f)
+  private val dsir = DsirModel(8, Array.tabulate(8)(i => i * 0.5 - 1.0))
+  /** One-dimensional centroids: the shortest embedding row has one element. */
+  private val cells = new Similarity.Centroids(Array(Array(0.0), Array(2.0), Array(1.25)))
   private val bpe = BpeVocab.Model(Seq(BpeVocab.Merge(0, "t", "h", 2L),
     BpeVocab.Merge(1, "th", "e</w>", 2L), BpeVocab.Merge(2, "q", "u", 1L)))
   /** One filter holding row 1's text: it probes true, row 2 false, NULL false. */
@@ -119,6 +123,11 @@ class StaticKernelSpec extends SparkSpecBase {
       ArrayType(StringType, containsNull = false), true),
     (MinHashFunctions.minhash_sigs(col("text")), "minhash_sigs(text)", longs, true),
     (SignLshFunctions.sign_lsh_buckets(col("f"), 3, 4, 2), "sign_lsh_buckets(f)", longs, true),
+    (Similarity.cellOf(col("f"), cells), "nearest_cell(f)", IntegerType, true),
+    (Similarity.cellsOf(col("f"), cells, 2), "nearest_cells(f)",
+      ArrayType(IntegerType, containsNull = false), true),
+    (Dsir.logWeights(col("text"), dsir), "dsir_log_weight(text)", DoubleType, true),
+    (QualityClassifier.score(col("text"), qm), "quality_score(text)", DoubleType, true),
     (HtmlFunctions.justext_extract(col("html")), "justext_extract(html)", StringType, true),
     (HtmlFunctions.justext_extract(col("html"), JusTextStopwords.en), "justext_extract(html)",
       StringType, true),

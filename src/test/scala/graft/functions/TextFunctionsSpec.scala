@@ -38,16 +38,6 @@ class TextFunctionsSpec extends SparkSpecBase {
     assert(got(2).nonEmpty)
   }
 
-  test("htmlToText strips tags/scripts, decodes entities, collapses whitespace") {
-    val html =
-      """<html><head><style>body { color: red; }</style>
-        |<script>var x = "<b>ignored</b>";</script></head>
-        |<body><h1>Title &amp; More</h1>
-        |<p>Hello <b>world</b>, 1 &lt; 2 &gt; 0,&nbsp;&quot;quoted&quot;.</p></body></html>""".stripMargin
-    val got = Seq(html).toDF("h").select(TextFunctions.htmlToText($"h")).as[String].head()
-    assert(got == "Title & More Hello world , 1 < 2 > 0, \"quoted\".")
-  }
-
   test("hash60 matches the DuckDB-portable definition") {
     // first 15 hex digits of md5("abc") = 900150983cd24fb → 648541476951500027... verified in DuckDB
     val got = Seq("abc").toDF("t").select(TextFunctions.hash60($"t")).as[Long].head()

@@ -187,15 +187,18 @@ class LakeIncrementalSpec extends SparkSpecBase {
   }
 
   test("a lake step's plans evaluate each kernel at most once per row") {
-    val root = tmp()
-    IncrementalCuration.initLake(history, None, root, withLineDedup = true,
-      withSpanDedup = true)
-    val (survivors, plans, violations) = graft.PlanInvariant.check(spark) {
-      ids(IncrementalCuration.stepLake(spark, root, batch))
+    // the text stages, then the semantic stage (cell assignment) too
+    for (emb <- Seq(None, Some(histEmb))) {
+      val root = tmp()
+      IncrementalCuration.initLake(history, emb, root, withLineDedup = true,
+        withSpanDedup = true)
+      val (survivors, plans, violations) = graft.PlanInvariant.check(spark) {
+        ids(IncrementalCuration.stepLake(spark, root, batch, emb.map(_ => batchEmb)))
+      }
+      assert(plans > 0)
+      assert(violations.isEmpty, violations.mkString("\n"))
+      assert(!survivors.contains(9000007L) && survivors.exists(id => id >= 200 && id < 280))
     }
-    assert(plans > 0)
-    assert(violations.isEmpty, violations.mkString("\n"))
-    assert(!survivors.contains(9000007L) && survivors.exists(id => id >= 200 && id < 280))
   }
 
   test("a later step dedups against lake state accumulated by earlier steps") {

@@ -383,16 +383,19 @@ class PipelineSpec extends SparkSpecBase {
   test("perplexity stage drops gibberish, keeps in-domain text") {
     import spark.implicits._
     val texts = spark.read.parquet(s"$sfDir/documents.parquet").select("text").as[String]
-    val lm = spark.sparkContext.broadcast(graft.filter.BigramLM.fit(texts, maxVocab = 4096))
-    val base = QualityPipeline.qualityStage(QualityPipeline.langIdStage(
-      QualityPipeline.extract(SyntheticPages.fromDocuments(spark, sfDir))))
+    // the classifier threshold is left neutral: its model never drops a page
+    val gate = Some(QualityPipeline.ModelGate(graft.filter.BigramLM.fit(texts, maxVocab = 4096),
+      graft.filter.QualityModel(1, Array(0f), 0f), maxPerplexity = 500,
+      minScore = Double.NegativeInfinity))
+    val pages = SyntheticPages.fromDocuments(spark, sfDir)
     // in-domain pages survive a loose threshold
-    val scored = QualityPipeline.perplexityStage(base, lm, maxPerplexity = 500).cache()
+    val scored = QualityPipeline.run(pages, modelGate = gate).cache()
     assert(scored.filter(array_contains(col("drop_reasons"), "high_perplexity")).count() == 0)
+    assert(scored.filter(array_contains(col("drop_reasons"), "low_quality_score")).count() == 0)
     // gibberish page gets dropped under the same threshold
-    val gib = base.limit(1).withColumn("text",
+    val gib = pages.limit(1).withColumn("text",
       lit("zzq qqx wvk jjy pzf mmr ttb zzq qqx wvk jjy pzf"))
-    val dropped = QualityPipeline.perplexityStage(gib, lm, maxPerplexity = 500)
+    val dropped = QualityPipeline.run(gib, modelGate = gate)
     assert(dropped.filter(array_contains(col("drop_reasons"), "high_perplexity")).count() == 1)
   }
 
@@ -405,16 +408,30 @@ class PipelineSpec extends SparkSpecBase {
         concat(lit(spamText), lit(" #"), $"doc_id".cast("string")).as("text"),
         lit(0.0).as("y")))
       .select($"text".as("_1"), $"y".as("_2")).as[(String, Double)]
-    val model = spark.sparkContext.broadcast(
-      graft.filter.QualityClassifier.fit(labeled, epochs = 40))
-    val base = QualityPipeline.qualityStage(QualityPipeline.langIdStage(
-      QualityPipeline.extract(SyntheticPages.fromDocuments(spark, sfDir))))
-    val scored = QualityPipeline.classifierStage(base, model, minScore = 0.5).cache()
+    // the perplexity threshold is left neutral: its model never drops a page
+    val gate = Some(QualityPipeline.ModelGate(
+      graft.filter.BigramLM(Map.empty, Map.empty, Map.empty, Map.empty, 0L, 0L, 0.75),
+      graft.filter.QualityClassifier.fit(labeled, epochs = 40),
+      maxPerplexity = Double.PositiveInfinity, minScore = 0.5))
+    val pages = SyntheticPages.fromDocuments(spark, sfDir)
+    val scored = QualityPipeline.run(pages, modelGate = gate).cache()
     assert(scored.filter(array_contains(col("drop_reasons"), "low_quality_score")).count() == 0)
-    val spam = base.limit(1).withColumn("text", lit(spamText + " #buy"))
-    val droppedSpam = QualityPipeline.classifierStage(spam, model, minScore = 0.5)
+    assert(scored.filter(array_contains(col("drop_reasons"), "high_perplexity")).count() == 0)
+    val spam = pages.limit(1).withColumn("text", lit(spamText + " #buy"))
+    val droppedSpam = QualityPipeline.run(spam, modelGate = gate)
     assert(droppedSpam.filter(array_contains(col("drop_reasons"), "low_quality_score")).count() == 1)
     assert(droppedSpam.filter(col("keep")).count() == 0)
+  }
+
+  test("PipelineMain reruns the scored stage when the model gate changes") {
+    val out = java.nio.file.Files.createTempDirectory("pipemain").toString
+    val kept = (maxPpl: Option[Double]) =>
+      PipelineMain.run(spark, sfDir, out, maxPpl, None).filter(col("keep")).count()
+    val ungated = kept(None)
+    // the same input into the same outDir: a stale checkpoint keyed on the
+    // input alone would be served here and skip the gate
+    assert(kept(Some(0.0)) < ungated)
+    assert(kept(None) == ungated)
   }
 
   test("observe() metrics accumulate during the main action (no extra pass)") {
