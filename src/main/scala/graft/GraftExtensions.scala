@@ -1,6 +1,5 @@
 package graft
 
-import graft.filter.LangIdModel
 import graft.functions.{CcnetNormalize, DeflateRatio, ExtractLinks, LangId, LuhnValid, NfcNormalize, PiiFunctions, PushFiltersThroughPinned, RepetitionRatio, RrnValid, WinnowFingerprint}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -41,7 +40,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "Pinned: non-deterministic at analysis, so the optimizer evaluates it once per row " +
         "and it is allowed only in Project, Filter, Aggregate or Window: not in " +
         "ORDER BY, join conditions or generators (alias it in a subquery first)"),
-      LangId.langidExpr(LangIdModel.default)))
+      LangId.langidExpr))
     e.injectFunction((FunctionIdentifier("winnow_fingerprint"),
       info("winnow_fingerprint", "winnow_fingerprint(text) - rolling-hash fingerprint set"),
       WinnowFingerprint.winnowFingerprintExpr(8, 16)))

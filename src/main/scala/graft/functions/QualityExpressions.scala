@@ -48,19 +48,19 @@ object RepetitionRatio {
 }
 
 /** langid(text) → struct(lang string, confidence double) via the fastText-
-  * style hashed n-gram linear model. The model is the kernel's object
-  * parameter: it rides the task binary to each executor; its builder pins it
-  * ([[Pinned]]). */
+  * style hashed n-gram linear model. The kernel reads the built-in
+  * [[LangIdModel.default]], which each executor JVM fits once on first use,
+  * so no model rides the task binary; its builder pins it ([[Pinned]]). */
 object LangId {
-  def classify(u: UTF8String, model: LangIdModel): InternalRow = {
-    val (lang, conf) = model.classify(u.toString)
+  def classify(u: UTF8String): InternalRow = {
+    val (lang, conf) = LangIdModel.default.classify(u.toString)
     InternalRow(UTF8String.fromString(lang), conf)
   }
 
-  private[graft] def langidExpr(model: LangIdModel)(args: Seq[Expression]): Expression =
+  private[graft] def langidExpr(args: Seq[Expression]): Expression =
     Pinned(StaticKernel.expr("langid", this, "classify", StructType(Seq(
       StructField("lang", StringType, nullable = false),
-      StructField("confidence", DoubleType, nullable = false))), Seq(StringType), args, Seq(model)))
+      StructField("confidence", DoubleType, nullable = false))), Seq(StringType), args))
 }
 
 /** Winnowing document fingerprints (Schleimer et al., MOSS): rolling
@@ -418,8 +418,7 @@ object QualityFunctions {
     StaticKernel.column(DupShapeSignals.dupShapeSignalsExpr, c)
   def repetition_ratio(c: Column, n: Int): Column =
     StaticKernel.column(RepetitionRatio.repetitionRatioExpr(n), c)
-  def langid(c: Column, model: LangIdModel = LangIdModel.default): Column =
-    StaticKernel.column(LangId.langidExpr(model), c)
+  def langid(c: Column): Column = StaticKernel.column(LangId.langidExpr, c)
   def winnow_fingerprint(c: Column, k: Int = 8, w: Int = 16): Column =
     StaticKernel.column(WinnowFingerprint.winnowFingerprintExpr(k, w), c)
   def deflate_ratio(c: Column): Column = StaticKernel.column(DeflateRatio.deflateRatioExpr, c)

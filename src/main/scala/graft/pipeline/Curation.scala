@@ -34,14 +34,8 @@ import org.apache.spark.sql.functions._
 object Curation {
 
   final case class Config(
-      substringK: Int = 8,
-      substringMaxDf: Long = 64,
       maxCutRatio: Double = 0.5,
-      neardupThreshold: Double = 0.5,
-      semThreshold: Double = 0.99,
-      packBudget: Int = 256,
-      packShards: Int = 8,
-      quality: QualityPipeline.Config = QualityPipeline.Config())
+      neardupThreshold: Double = 0.5)
 
   /** Lake-scan front end: a (doc_id, text) corpus off a [[graft.sources.PageLake]]
     * page table. doc_id = 60-bit url hash — stable across runs and layouts,
@@ -105,12 +99,17 @@ object Curation {
     df.join(dropIds, Seq("doc_id"), "left_anti")
   }
 
+  // Exact-substring gate (Lee et al. 2022): token 8-grams; a gram with more
+  // than 64 occurrences is cut at every one of them
+  private val SubstringK = 8
+  private[pipeline] val SubstringMaxDf = 64L
+
   /** Exact-substring gate (Lee et al. 2022 stats form): drop documents
     * whose duplicated-span coverage exceeds `maxCutRatio` — pages that are
     * mostly cross-corpus duplicated token spans (mirrors, quote farms). */
   def substringStage(df: DataFrame, cfg: Config): DataFrame = {
     val keep = ExactSubstring.stats(df, "doc_id", "text",
-        k = cfg.substringK, maxDf = cfg.substringMaxDf)
+        k = SubstringK, maxDf = SubstringMaxDf)
       .filter(col("cut_ratio") <= cfg.maxCutRatio)
       .select(col("id").as("doc_id"))
     df.join(keep, Seq("doc_id"), "left_semi")
@@ -119,20 +118,19 @@ object Curation {
   /** Heuristic quality gates (langid + Gopher/C4 signals): the
     * QualityPipeline stage chain's keep decision, applied to the corpus.
     * All-narrow per-row work. */
-  def qualityStage(df: DataFrame, cfg: Config): DataFrame =
-    QualityPipeline.qualityStage(QualityPipeline.langIdStage(df), cfg.quality)
+  def qualityStage(df: DataFrame): DataFrame =
+    QualityPipeline.qualityStage(QualityPipeline.langIdStage(df))
       .filter(col("keep"))
       .select("doc_id", "text")
 
   /** Sequence packing over the survivors: the curated corpus laid out as
-    * budget-sized training sequences. Emits the packing table (one row per
-    * doc with its shard/offset/sequence assignment). */
-  def packStage(df: DataFrame, cfg: Config): DataFrame =
+    * 256-token training sequences over 8 shards. Emits the packing table
+    * (one row per doc with its shard/offset/sequence assignment). */
+  def packStage(df: DataFrame): DataFrame =
     Packing.packSequences(
       df.select(col("doc_id"),
         graft.functions.TextFunctions.tokenCount(col("text")).as("n_tokens")),
-      col("doc_id"), col("n_tokens"), budget = cfg.packBudget,
-      nShards = cfg.packShards)
+      col("doc_id"), col("n_tokens"), budget = 256, nShards = 8)
 
   /** The ordered survivor-bearing stage chain on (doc_id, text). */
   def stages(cfg: Config = Config()): Seq[(String, DataFrame => DataFrame)] = Seq(
@@ -140,7 +138,7 @@ object Curation {
     "lines" -> lineStage,
     "neardup" -> (df => neardupStage(df, cfg.neardupThreshold)),
     "substring" -> (df => substringStage(df, cfg)),
-    "quality" -> (df => qualityStage(df, cfg)))
+    "quality" -> qualityStage)
 
   /** Per-stage survivor counts of the lazy chain plus the packed-sequence
     * count — the q64 surface. Output: (stage_no, stage, n). */
@@ -160,11 +158,15 @@ object Curation {
       counts += ((i, name, cur.count()))
       i += 1
     }
-    val nSeqs = packStage(cur, cfg)
+    val nSeqs = packStage(cur)
       .select("shard", "seq_id").distinct().count()
     counts += ((i, "pack", nSeqs))
     counts.result().toDF("stage_no", "stage", "n")
   }
+
+  /** SemDeDup's cosine-similarity bar (Abbas et al. 2023): a vector this
+    * close to an earlier-id one in its cell is a duplicate. */
+  private[pipeline] val SemThreshold = 0.99
 
   /** Checkpointed production runner: each stage writes
     * `outDir/stage=<name>` with a fingerprint of the PREVIOUS stage's
@@ -220,7 +222,7 @@ object Curation {
         // embeddings for surviving docs only; docs without a vector are kept
         val vectors =
           embs.join(cur.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-        val sem = Similarity.semDedup(vectors, cfg.semThreshold,
+        val sem = Similarity.semDedup(vectors, SemThreshold,
           Similarity.fitSemCentroids(vectors))
         release = sem.release
         cur.join(
@@ -234,7 +236,7 @@ object Curation {
         .select(col("doc_id"), col("pp.text_scrubbed").as("text"),
           col("pp.n_pii").as("n_pii"))
     }
-    step("pack")(packStage(cur.select("doc_id", "text"), cfg))
+    step("pack")(packStage(cur.select("doc_id", "text")))
     out.result()
   }
 }

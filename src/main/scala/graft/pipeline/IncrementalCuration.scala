@@ -45,7 +45,10 @@ object IncrementalCuration {
     * band table, the frozen semantic quantizer and its assignment table
     * (None when the corpus has no embeddings), and — when paragraph dedup
     * is on — the seen-line digest table (the persisted form of Dolma's
-    * seen-paragraphs Bloom filter; stored digest-bucketed at scale). */
+    * seen-paragraphs Bloom filter; stored digest-bucketed at scale). It
+    * holds no Bloom filters: [[step]] builds each one from its table at
+    * fpp 0.01 in one shard; the lake form ([[initLake]]) persists them,
+    * sized at 4x the bootstrap count. */
   final case class State(
       docs: DataFrame,
       bands: DataFrame,
@@ -75,10 +78,10 @@ object IncrementalCuration {
                             cells: DataFrame)
 
   /** Bootstrap state from an ALREADY-CURATED corpus (the output of the
-    * full [[Curation]] run). */
+    * full [[Curation]] run). The semantic quantizer has 16 cells
+    * ([[Similarity.fitSemCentroids]]). */
   def init(corpus: DataFrame,
            embeddings: Option[DataFrame],
-           nCells: Int = 16,
            withLineDedup: Boolean = false,
            withSpanDedup: Boolean = false,
            spanK: Int = 8): State = {
@@ -88,7 +91,7 @@ object IncrementalCuration {
     // lake); later steps read them repeatedly and must not re-derive them
     val bands = IncrementalDedup.bandTable(docs, "doc_id", "text").localCheckpoint()
     val sem = embeddings.map { e =>
-      val centroids = Similarity.fitSemCentroids(e, nCells)
+      val centroids = Similarity.fitSemCentroids(e)
       SemState(centroids, Similarity.assignCells(e, centroids).localCheckpoint())
     }
     val lines =
@@ -112,7 +115,6 @@ object IncrementalCuration {
            batchEmbeddings: Option[DataFrame] = None,
            cfg: Curation.Config = Curation.Config(),
            expectedHistoryDigests: Long = 1 << 20,
-           bloomShards: Int = 1,
            // line-grain history is ~30x the doc count — sizing its filter
            // with the doc-grain hint would saturate it (fpp → 1, every
            // line a suspect); default 32x the doc hint, override when the
@@ -136,9 +138,14 @@ object IncrementalCuration {
            // verify join + quality chain], state appends) — the bench's
            // stage profile; no extra materialization is introduced for it.
            onStage: (String, Double) => Unit = (_, _) => ()): (DataFrame, State) = {
-    val core = stepCore(state, batch, batchEmbeddings, cfg,
-      expectedHistoryDigests, bloomShards, expectedHistoryLines,
-      expectedHistoryGrams, hostCapN, onStage)
+    val items = Map(
+      "docs" -> expectedHistoryDigests,
+      "lines" -> (if (expectedHistoryLines > 0) expectedHistoryLines
+                  else 32L * expectedHistoryDigests),
+      "grams" -> (if (expectedHistoryGrams > 0) expectedHistoryGrams
+                  else 512L * expectedHistoryDigests))
+    val core = stepCore(state, batch, batchEmbeddings, cfg, hostCapN, onStage,
+      (name, hist, key) => IncrementalDedup.buildFilterArray(hist, key, items(name)))
     val survivors = core.survivors
     // append survivors to every state table, each appended piece
     // materialized ONCE at birth like the init tables (at scale:
@@ -196,19 +203,14 @@ object IncrementalCuration {
   private def stepCore(state: State, batch: DataFrame,
                        batchEmbeddings: Option[DataFrame],
                        cfg: Curation.Config,
-                       expectedHistoryDigests: Long,
-                       bloomShards: Int,
-                       expectedHistoryLines: Long,
-                       expectedHistoryGrams: Long,
                        hostCapN: Option[Int],
                        onStage: (String, Double) => Unit,
-                       // persisted-sidecar filters ([[stepLake]]): when
-                       // present, the exact / line / span stages probe
-                       // these instead of re-scanning history to build
-                       // fresh ones
-                       docsFilters: Option[Array[org.apache.spark.util.sketch.BloomFilter]] = None,
-                       lineFilters: Option[Array[org.apache.spark.util.sketch.BloomFilter]] = None,
-                       gramFilters: Option[Array[org.apache.spark.util.sketch.BloomFilter]] = None)
+                       // the Bloom prefilter of history table "docs",
+                       // "lines" or "grams", given its key frame and key
+                       // column: [[step]] builds it from that frame,
+                       // [[stepLake]] reads the table's persisted sidecar
+                       filters: (String, DataFrame, String) =>
+                         Array[org.apache.spark.util.sketch.BloomFilter])
       : CoreResult = {
     var tMark = System.nanoTime()
     def mark(name: String): Unit = {
@@ -216,26 +218,19 @@ object IncrementalCuration {
       onStage(name, (now - tMark) / 1e9)
       tMark = now
     }
-    val lineItems =
-      if (expectedHistoryLines > 0) expectedHistoryLines
-      else 32L * expectedHistoryDigests
-    val gramItems =
-      if (expectedHistoryGrams > 0) expectedHistoryGrams
-      else 512L * expectedHistoryDigests
     // 0. collapse within-batch exact dups, digest the rest
     val b0 = Curation.exactStage(
         batch.select(col("doc_id").cast("long").as("doc_id"), col("text")))
       .withColumn("digest", md5(col("text")))
 
     // 1. exact vs history (Bloom prefilter; broadcast released after the
-    //    step materializes). Sidecar filters, when supplied, skip the
-    //    per-step history scan the build would pay; the digest frame is
-    //    the state's narrow materialized projection when present (deriving
-    //    it from `docs` re-reads and re-hashes the full history text).
+    //    step materializes). Sidecar filters skip the per-step history scan
+    //    a build would pay; the digest frame is the state's narrow
+    //    materialized projection when present (deriving it from `docs`
+    //    re-reads and re-hashes the full history text).
     val histDigests = state.digests.getOrElse(state.docs.select("digest"))
     val pf = IncrementalDedup.newOnly(b0, histDigests, "digest",
-      docsFilters.getOrElse(IncrementalDedup.buildFilterArray(
-        histDigests, "digest", expectedHistoryDigests, shards = bloomShards)))
+      filters("docs", histDigests, "digest"))
     val b1 = pf.df.localCheckpoint()
     pf.release()
     mark("exact")
@@ -251,8 +246,7 @@ object IncrementalCuration {
           .ccnetDedupLines(b1, "doc_id", "text")
           .select(col("id").as("doc_id"), col("text_dedup").as("text"))
         val pfL = IncrementalDedup.newLinesOnly(within, ld, "doc_id", "text",
-          lineFilters.getOrElse(IncrementalDedup.buildFilterArray(
-            ld, "line_digest", lineItems, shards = bloomShards)))
+          filters("lines", ld, "line_digest"))
         val out = pfL.df.select(col("id").as("doc_id"),
           col("text_dedup").as("text")).localCheckpoint()
         pfL.release()
@@ -307,10 +301,8 @@ object IncrementalCuration {
         // k comes from the STATE (what the gram table was built with) —
         // probing with an independent cfg knob would silently never match
         val pfS = IncrementalDedup.incrSpanStats(b2, g, "doc_id", "text",
-          k = state.spanK, maxDf = cfg.substringMaxDf,
-          filters = gramFilters.getOrElse(IncrementalDedup.buildFilterArray(
-            g.select(IncrementalDedup.gramDigest), "g_digest", gramItems,
-            shards = bloomShards)))
+          k = state.spanK, maxDf = Curation.SubstringMaxDf,
+          filters = filters("grams", g.select(IncrementalDedup.gramDigest), "g_digest"))
         val keep = pfS.df.filter(col("cut_ratio") <= cfg.maxCutRatio)
           .select(col("id").as("doc_id"))
         val out = b2.join(keep, Seq("doc_id"), "left_semi").localCheckpoint()
@@ -325,14 +317,14 @@ object IncrementalCuration {
     //    batch doc must not kill its high-quality semantic neighbor and
     //    then die itself at quality (verdicts would become
     //    batch-composition dependent)
-    val b3 = Curation.qualityStage(b2s.select("doc_id", "text"), cfg)
+    val b3 = Curation.qualityStage(b2s.select("doc_id", "text"))
 
     // 4. semantic vs history (frozen cells), when both sides have vectors
     val b4 = (state.semantic, batchEmbeddings) match {
       case (Some(sem), Some(be)) =>
         val inc = Similarity.semDedupIncremental(
           be.join(b3.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
-          sem.cells, sem.centroids, cfg.semThreshold)
+          sem.cells, sem.centroids, Curation.SemThreshold)
         val out = b3.join(
           inc.df.filter(!col("keep")).select(col("vec_id").as("doc_id")),
           Seq("doc_id"), "left_anti").localCheckpoint()
@@ -523,25 +515,21 @@ object IncrementalCuration {
     * [[StateLake]] table, the frozen centroids and the (spanK, buckets)
     * config alongside. `hostArrivals` (optional) seeds the per-host
     * admission counters ([[graft.operators.IncrementalSelect.hostCapInit]]
-    * shape: host, n_seen). */
+    * shape: host, n_seen).
+    *
+    * Each digest table (docs, lines, grams) also gets a Bloom sidecar,
+    * sized at 4x its bootstrap count with fpp 0.01 in one shard. The sizing
+    * is FIXED for the table's lifetime (per-batch contributions must share
+    * bit-array sizes to merge) and recorded in the meta file; outgrowing it
+    * degrades fpp (more verify-join suspects), never correctness. */
   def initLake(corpus: DataFrame, embeddings: Option[DataFrame],
-               root: String, nCells: Int = 16,
+               root: String,
                withLineDedup: Boolean = false,
                withSpanDedup: Boolean = false, spanK: Int = 8,
                nBuckets: Int = 16,
-               hostArrivals: Option[DataFrame] = None,
-               // Bloom sidecar sizing — FIXED for the table's lifetime
-               // (per-batch contributions must share bit-array sizes to
-               // merge). 0 = 4x the bootstrap count: headroom for growth;
-               // outgrowing it degrades fpp (more verify-join suspects),
-               // never correctness. At real scale pass the target corpus
-               // size.
-               bloomDocsItems: Long = 0L, bloomLineItems: Long = 0L,
-               bloomGramItems: Long = 0L,
-               bloomFpp: Double = 0.01, bloomShards: Int = 1): Unit = {
+               hostArrivals: Option[DataFrame] = None): Unit = {
     val spark = corpus.sparkSession
-    val st = init(corpus, embeddings, nCells, withLineDedup, withSpanDedup,
-      spanK)
+    val st = init(corpus, embeddings, withLineDedup, withSpanDedup, spanK)
     // every table and Bloom sidecar is an independent batch-0 commit: one
     // concurrent wave ([[StateLake.commitAll]]). A sidecar commit returns
     // its fixed sizing for the meta file.
@@ -549,11 +537,10 @@ object IncrementalCuration {
               annotations: => Map[String, String] = Map.empty)
         : () => Option[(String, String)] = () => {
       appendTable(root, name, piece, nBuckets, 0, annotations); None }
-    def sidecar(name: String, piece: DataFrame, key: String, items: Long,
+    def sidecar(name: String, piece: DataFrame, key: String,
                 metaKey: String): () => Option[(String, String)] = () => {
-      // 0 = 4x the bootstrap count
-      val n = if (items > 0) items else 4L * piece.count()
-      writeSidecar(root, name, piece, key, n, bloomFpp, bloomShards, 0)
+      val n = 4L * piece.count()
+      writeSidecar(root, name, piece, key, n, 0)
       Some(metaKey -> n.toString)
     }
     // the centroids ride the same wave (a plain write, read only after
@@ -572,19 +559,17 @@ object IncrementalCuration {
       Seq(table("docs", st.docs, maxIdAnnotation(st.docs)),
         table("bands", st.bands),
         sidecar("docs", st.digests.getOrElse(st.docs.select("digest")),
-          "digest", bloomDocsItems, "bloomDocsItems")) ++
+          "digest", "bloomDocsItems")) ++
       st.lines.toSeq.flatMap(l => Seq(table("lines", l),
-        sidecar("lines", l, "line_digest", bloomLineItems, "bloomLineItems"))) ++
+        sidecar("lines", l, "line_digest", "bloomLineItems"))) ++
       st.grams.toSeq.flatMap(g => Seq(table("grams", g),
         sidecar("grams", g.select(IncrementalDedup.gramDigest), "g_digest",
-          bloomGramItems, "bloomGramItems"))) ++
+          "bloomGramItems"))) ++
       st.semantic.toSeq.flatMap(sem =>
         Seq(table("cells", sem.cells), centroids(sem))) ++
       hostArrivals.map(h => table("hosts", h))).flatten
     writeMeta(spark, root, Map(
-      "spanK" -> spanK.toString, "buckets" -> nBuckets.toString,
-      "bloomFpp" -> bloomFpp.toString,
-      "bloomShards" -> bloomShards.toString) ++ sized)
+      "spanK" -> spanK.toString, "buckets" -> nBuckets.toString) ++ sized)
   }
 
   /** Append `piece` as batch `batchId` of state table `name`, clustered by
@@ -597,12 +582,12 @@ object IncrementalCuration {
 
   /** Write the Bloom contribution of `piece`'s `key` column as batch
     * `batchId` of table `name`'s sidecar, with the table's fixed sizing
-    * (bit-compatible with every other batch's, for the reader's merge). */
+    * (`items` at fpp 0.01 in one shard: bit-compatible with every other
+    * batch's, for the reader's merge). */
   private def writeSidecar(root: String, name: String, piece: DataFrame,
-                           key: String, items: Long, fpp: Double, shards: Int,
-                           batchId: Int): Unit =
+                           key: String, items: Long, batchId: Int): Unit =
     StateLake.writeBloom(piece.sparkSession, IncrementalDedup.buildFilterArray(
-      piece, key, items, fpp, shards), s"$root/${name}_bloom", batchId)
+      piece, key, items), s"$root/${name}_bloom", batchId)
 
   /** The lake state as plain (lazy) DataFrames — [[State]] re-assembled
     * from the persisted tables as of `upTo` (default: everything
@@ -669,14 +654,17 @@ object IncrementalCuration {
     * rows as a fresh batch, and return zero survivors (they all look like
     * exact dups of themselves) — pinned, the replay recomputes the
     * identical survivor set from the same pre-batch state while every
-    * append skips idempotently. */
+    * append skips idempotently.
+    *
+    * The exact, line and span stages probe the digest tables' Bloom
+    * sidecars, whose sizing [[initLake]] fixed, so `expectedHistoryDigests`
+    * and `expectedHistoryLines` are ignored; they remain only until the
+    * bench's call site stops passing them. */
   def stepLake(spark: SparkSession, root: String, batch: DataFrame,
                batchEmbeddings: Option[DataFrame] = None,
                cfg: Curation.Config = Curation.Config(),
                expectedHistoryDigests: Long = 1 << 20,
-               bloomShards: Int = 1,
                expectedHistoryLines: Long = -1L,
-               expectedHistoryGrams: Long = -1L,
                hostCapN: Option[Int] = None,
                onStage: (String, Double) => Unit = (_, _) => (),
                atVersion: Option[Int] = None): DataFrame = {
@@ -685,12 +673,13 @@ object IncrementalCuration {
     val stateVersion = atVersion.getOrElse(lakeStateVersion(spark, root))
     val batchId = stateVersion + 1
     val present = tableDirs(spark, root).toSet
-    val docsFilters = meta.get("bloomDocsItems").map(_ =>
-      StateLake.readBloom(spark, s"$root/docs_bloom", stateVersion))
-    val lineFilters = meta.get("bloomLineItems").map(_ =>
-      StateLake.readBloom(spark, s"$root/lines_bloom", stateVersion))
-    val gramFilters = meta.get("bloomGramItems").map(_ =>
-      StateLake.readBloom(spark, s"$root/grams_bloom", stateVersion))
+    // each digest table's sidecar as of the state version (its meta key
+    // records the sizing initLake gave it)
+    val filters = Seq("docs" -> "bloomDocsItems", "lines" -> "bloomLineItems",
+        "grams" -> "bloomGramItems").collect {
+      case (t, k) if meta.contains(k) =>
+        t -> StateLake.readBloom(spark, s"$root/${t}_bloom", stateVersion)
+    }.toMap
 
     // Bucket-pruned probe-table reads: keys derived from the RAW batch.
     // SOUNDNESS per table — pruning is only legal when the stage's actual
@@ -781,11 +770,8 @@ object IncrementalCuration {
         }).select(cols.map(col): _*)
     }
 
-    val core = stepCore(state, batch, batchEmbeddings, cfg,
-      expectedHistoryDigests, bloomShards, expectedHistoryLines,
-      expectedHistoryGrams, hostCapN, onStage,
-      docsFilters = docsFilters, lineFilters = lineFilters,
-      gramFilters = gramFilters)
+    val core = stepCore(state, batch, batchEmbeddings, cfg, hostCapN, onStage,
+      (name, _, _) => filters(name))
     val ap = appendPieces(core.survivors, batchEmbeddings, state, Some(core.sigs))
     // A semantic lake must advance its cells table EVERY batch, even when
     // the batch carries no vectors (the streaming driver never does): the
@@ -808,12 +794,10 @@ object IncrementalCuration {
       () => appendTable(root, name, piece, nBuckets, batchId, annotations)
     // sidecar contributions: filters over JUST the appended digests, with
     // the table's fixed sizing (bit-compat for the reader's merge)
-    val sFpp = meta.get("bloomFpp").map(_.toDouble).getOrElse(0.01)
-    val sShards = meta.get("bloomShards").map(_.toInt).getOrElse(1)
     def sidecar(name: String, metaKey: String, key: String,
                 piece: => DataFrame): Option[() => Unit] =
       meta.get(metaKey).map(items => () =>
-        writeSidecar(root, name, piece, key, items.toLong, sFpp, sShards, batchId))
+        writeSidecar(root, name, piece, key, items.toLong, batchId))
     // every table and sidecar commit is independent: one concurrent wave
     StateLake.commitAll(
       Seq(table("docs", ap.docs, maxIdAnnotation(core.survivors)),

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import graft.filter.LangIdModel
 import graft.functions.{Pinned, PiiFunctions, QualityFunctions, TextFunctions => TF}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,34 +25,20 @@ import java.nio.file.{Files, Paths}
   */
 object QualityPipeline {
 
+  /** The pipeline's switches, each the one way into a behaviour that is off
+    * by default. The thresholds are constants of the method (the Gopher and
+    * C4 numbers next to [[qualityStage]]), not settings. */
   final case class Config(
-      minWords: Int = 10,
-      maxWords: Int = 200000,
-      minMeanWordLen: Double = 2.0,
-      maxMeanWordLen: Double = 12.0,
-      maxSymbolRatio: Double = 0.1,
-      minAlphaWordRatio: Double = 0.5,
-      maxRepetitionRatio: Double = 0.2,
-      minLangConfidence: Double = 0.0,
-      maxBulletLineFrac: Double = 0.9,
-      maxEllipsisLineFrac: Double = 0.3,
-      allowedLangs: Seq[String] = Nil, // empty = all
       // C4 line filter (Raffel et al. 2020 §2.2): OFF by default — it
       // REWRITES text (drops non-sentence lines), so the byte-identity
       // invariant holds only for pages whose every line is prose
       c4LineFilter: Boolean = false,
-      c4MinWordsPerLine: Int = 3,
-      c4MinLinesKept: Int = 5,
       // Gopher duplicate-shape gates (Rae et al. 2021 Table A1): pages that
       // repeat whole lines/paragraphs verbatim. OFF by default — single-line
       // prose (the fixture shape all existing goldens pin) can never trip
       // them, but the extra per-row pass isn't free, so it's opt-in like
       // the C4 line filter. Thresholds are the paper's.
       gopherDupGates: Boolean = false,
-      maxDupLineFrac: Double = 0.30,
-      maxDupParaFrac: Double = 0.30,
-      maxDupLineCharFrac: Double = 0.20,
-      maxDupParaCharFrac: Double = 0.20,
       // Checksum-gated scrub (Luhn for cards, mod-11 for RRNs): card/RRN
       // regex hits failing their checksum are NOT redacted (the regex
       // layer's random-number false positives) and don't count in n_pii.
@@ -66,12 +51,7 @@ object QualityPipeline {
       // density (jusText's full mode — kills keyword-stuffed link-free
       // boilerplate the length/link signals can't see). OFF by default:
       // it rewrites extracted text for listed-language pages.
-      justextByLang: Boolean = false,
-      // Host-rank gate ([[hostRankStage]], active only when `run` is given
-      // a rank table): pages on hosts whose link-graph PageRank
-      // ([[graft.operators.LinkGraph.hostRank]] fixed-point Longs) falls
-      // below this bar get a drop reason. 0 = no gate.
-      minHostRank: Long = 0L)
+      justextByLang: Boolean = false)
 
   /** Optional stage 0a: populate `text` from the raw `html` payload for
     * pages that arrive without a pre-extracted text column — jusText
@@ -101,9 +81,7 @@ object QualityPipeline {
     * exactly CCNet's "process, identify, reprocess per language" discipline.
     * Pages that arrived WITH text keep it verbatim, as in
     * [[htmlExtractStage]]. */
-  def htmlExtractByLangStage(pages: DataFrame,
-      lists: Map[String, Set[String]] = graft.functions.JusTextStopwords.lists,
-      model: LangIdModel = LangIdModel.default): DataFrame = {
+  def htmlExtractByLangStage(pages: DataFrame): DataFrame = {
     val htmlStr = expr("make_valid_utf8(cast(html as string))")
     val textless = col("text").isNull || col("text") === ""
     val draft = pages.withColumn("_jt_draft",
@@ -115,13 +93,13 @@ object QualityPipeline {
       // langid is the most expensive narrow op in the chain
       .withColumn("_jt_lang",
         when(textless,
-          QualityFunctions.langid(col("_jt_draft"), model).getField("lang")))
+          QualityFunctions.langid(col("_jt_draft")).getField("lang")))
     // deterministic when-chain over the (small, driver-side) language list
-    val sharpened = lists.toSeq.sortBy(_._1).foldLeft(col("_jt_draft")) {
-      case (acc, (lang, sw)) =>
+    val sharpened = graft.functions.JusTextStopwords.lists.toSeq.sortBy(_._1)
+      .foldLeft(col("_jt_draft")) { case (acc, (lang, sw)) =>
         when(textless && col("_jt_lang") === lang,
           graft.functions.HtmlFunctions.justext_extract(htmlStr, sw)).otherwise(acc)
-    }
+      }
     draft.withColumn("text", sharpened).drop("_jt_draft", "_jt_lang")
   }
 
@@ -140,22 +118,45 @@ object QualityPipeline {
       col("warc_ts"), col("text"), col("lang"))
 
   /** Stage 2: language identification (fastText-style hashed n-gram model). */
-  def langIdStage(df: DataFrame, model: LangIdModel = LangIdModel.default): DataFrame =
-    df.withColumn("lid", QualityFunctions.langid(col("text"), model))
+  def langIdStage(df: DataFrame): DataFrame =
+    df.withColumn("lid", QualityFunctions.langid(col("text")))
       .withColumn("lang_pred", col("lid.lang"))
       .withColumn("lang_conf", col("lid.confidence"))
       .drop("lid")
 
+  // Gopher (Rae et al. 2021 Table A1) page gates, as [[qualityStage]]
+  // applies them: word count, mean word length, symbol-to-word ratio,
+  // alphabetic-word share, top word-2gram share, bullet-started and
+  // ellipsis-ended line fractions
+  private val MinWords = 10
+  private val MaxWords = 200000
+  private val MinMeanWordLen = 2.0
+  private val MaxMeanWordLen = 12.0
+  private val MaxSymbolRatio = 0.1
+  private val MinAlphaWordRatio = 0.5
+  private val MaxRepetitionRatio = 0.2
+  private val MaxBulletLineFrac = 0.9
+  private val MaxEllipsisLineFrac = 0.3
+  // C4 (Raffel et al. 2020 §2.2): a kept line carries ≥ 3 words; a page
+  // keeps ≥ 5 such sentences
+  private val C4MinWordsPerLine = 3
+  private val C4MinLinesKept = 5
+  // Gopher duplicate-shape gates (Rae et al. 2021 Table A1)
+  private val MaxDupLineFrac = 0.30
+  private val MaxDupParaFrac = 0.30
+  private val MaxDupLineCharFrac = 0.20
+  private val MaxDupParaCharFrac = 0.20
+
   /** Optional stage 2b (C4 §2.2, `cfg.c4LineFilter`): keep only lines that
-    * end in terminal punctuation and carry ≥ `c4MinWordsPerLine` words —
+    * end in terminal punctuation and carry ≥ 3 words —
     * nav menus, cookie banners, button labels die here; the page is
     * rebuilt from the surviving lines and `n_lines_kept` carries C4's
     * sentence count forward for the page-level gate in [[qualityStage]].
     * Pure narrow per-row work, same core expression as the standalone
     * operator (q62). */
-  def lineFilterStage(df: DataFrame, cfg: Config = Config()): DataFrame =
+  def lineFilterStage(df: DataFrame): DataFrame =
     df.withColumn("_c4", graft.operators.ExactSubstring
-        .c4KeptLines(col("text"), cfg.c4MinWordsPerLine))
+        .c4KeptLines(col("text"), C4MinWordsPerLine))
       .withColumn("n_lines_kept", size(col("_c4.kept")))
       .withColumn("text", array_join(col("_c4.kept"), "\n"))
       .drop("_c4")
@@ -192,23 +193,20 @@ object QualityPipeline {
         withSignals.withColumn("dsig", QualityFunctions.dup_shape_signals(col("text")))
       else withSignals
     val reasonCols = Seq(
-      when(col("n_words") < cfg.minWords, lit("too_few_words")),
-      when(col("n_words") > cfg.maxWords, lit("too_many_words")),
-      when(col("mean_word_len") < cfg.minMeanWordLen ||
-        col("mean_word_len") > cfg.maxMeanWordLen, lit("word_len_out_of_range")),
-      when(col("symbol_ratio") > cfg.maxSymbolRatio, lit("symbol_heavy")),
-      when(col("alpha_word_ratio") < cfg.minAlphaWordRatio, lit("non_alpha")),
-      when(col("repetition_ratio") > cfg.maxRepetitionRatio, lit("repetitive")),
-      when(col("lsig.frac_bullet") > cfg.maxBulletLineFrac, lit("bullet_heavy")),
-      when(col("lsig.frac_ellipsis") > cfg.maxEllipsisLineFrac, lit("ellipsis_heavy")),
-      when(lit(cfg.allowedLangs.nonEmpty) &&
-        !col("lang_pred").isin(cfg.allowedLangs: _*), lit("lang_filtered")),
-      when(col("lang_conf") < cfg.minLangConfidence, lit("lang_low_conf"))) ++
-      // C4's page gate (< c4MinLinesKept surviving sentences): only when
+      when(col("n_words") < MinWords, lit("too_few_words")),
+      when(col("n_words") > MaxWords, lit("too_many_words")),
+      when(col("mean_word_len") < MinMeanWordLen ||
+        col("mean_word_len") > MaxMeanWordLen, lit("word_len_out_of_range")),
+      when(col("symbol_ratio") > MaxSymbolRatio, lit("symbol_heavy")),
+      when(col("alpha_word_ratio") < MinAlphaWordRatio, lit("non_alpha")),
+      when(col("repetition_ratio") > MaxRepetitionRatio, lit("repetitive")),
+      when(col("lsig.frac_bullet") > MaxBulletLineFrac, lit("bullet_heavy")),
+      when(col("lsig.frac_ellipsis") > MaxEllipsisLineFrac, lit("ellipsis_heavy"))) ++
+      // C4's page gate (< C4MinLinesKept surviving sentences): only when
       // the line-filter stage ran — plan-time schema check, the column
       // exists iff it did
       (if (df.columns.contains("n_lines_kept"))
-        Seq(when(col("n_lines_kept") < cfg.c4MinLinesKept, lit("too_few_sentences")))
+        Seq(when(col("n_lines_kept") < C4MinLinesKept, lit("too_few_sentences")))
       else Nil) ++
       // Gopher dup-shape gates. 0-element documents (empty/whitespace text)
       // must gate as fraction 0, and the division needs an explicit guard:
@@ -221,12 +219,12 @@ object QualityPipeline {
             col(s"dsig.$num").cast("double") / col(s"dsig.$den"))
             .otherwise(lit(0.0))
         Seq(
-          when(frac("dup_lines", "n_lines") > cfg.maxDupLineFrac, lit("dup_lines")),
-          when(frac("dup_paras", "n_paras") > cfg.maxDupParaFrac, lit("dup_paras")),
+          when(frac("dup_lines", "n_lines") > MaxDupLineFrac, lit("dup_lines")),
+          when(frac("dup_paras", "n_paras") > MaxDupParaFrac, lit("dup_paras")),
           when(frac("dup_line_chars", "line_chars") >
-            cfg.maxDupLineCharFrac, lit("dup_line_chars")),
+            MaxDupLineCharFrac, lit("dup_line_chars")),
           when(frac("dup_para_chars", "para_chars") >
-            cfg.maxDupParaCharFrac, lit("dup_para_chars")))
+            MaxDupParaCharFrac, lit("dup_para_chars")))
       } else Nil)
     val reasons = array_compact(array(reasonCols: _*))
     withDup
@@ -257,8 +255,9 @@ object QualityPipeline {
       .drop("_ms")
   }
 
-  /** Optional stage 3d: host-trust gate from the link graph — the stated
-    * consumer of [[graft.operators.LinkGraph.hostRank]]. Pages on hosts
+  /** Host-trust gate from the link graph — the stated consumer of
+    * [[graft.operators.LinkGraph.hostRank]], applied to [[run]]'s output
+    * (q92). It recomputes `keep`, so apply it before filtering. Pages on hosts
     * ranked below `minRank` get a drop reason; hosts ABSENT from the rank
     * table (outside the crawl's link graph) are treated as exactly
     * `minRank` — unknown is neutral, never auto-dropped. The rank table is
@@ -294,32 +293,26 @@ object QualityPipeline {
       .drop("pp")
 
   /** Full chain (the C4 line-filter stage joins when `cfg.c4LineFilter`,
-    * the model gate when one is passed, the host-rank gate when a rank
-    * table is passed). */
+    * the model gate when one is passed). */
   def run(pages: DataFrame, cfg: Config = Config(),
-          model: LangIdModel = LangIdModel.default,
-          hostRanks: Option[DataFrame] = None,
           modelGate: Option[ModelGate] = None): DataFrame = {
     val base = extract(pages)
-    val lf = if (cfg.c4LineFilter) lineFilterStage(base, cfg) else base
-    val quality = qualityStage(langIdStage(lf, model), cfg)
-    val gated = modelGate.fold(quality)(modelScoresStage(quality, _))
-    val ranked = hostRanks.fold(gated)(hostRankStage(gated, _, cfg.minHostRank))
-    piiStage(ranked, cfg.strictScrub)
+    val lf = if (cfg.c4LineFilter) lineFilterStage(base) else base
+    val quality = qualityStage(langIdStage(lf), cfg)
+    piiStage(modelGate.fold(quality)(modelScoresStage(quality, _)), cfg.strictScrub)
   }
 
   /** Full chain from RAW HTML pages (url, warc_ts, html, lang [, text]):
     * extraction (per-language when `cfg.justextByLang`) + mojibake repair in
     * front of [[run]]. Pages may arrive without a text column at all. */
-  def runFromHtml(pages: DataFrame, cfg: Config = Config(),
-                  model: LangIdModel = LangIdModel.default): DataFrame = {
+  def runFromHtml(pages: DataFrame, cfg: Config = Config()): DataFrame = {
     val withText =
       if (pages.columns.contains("text")) pages
       else pages.withColumn("text", lit(""))
     val extracted =
-      if (cfg.justextByLang) htmlExtractByLangStage(withText, model = model)
+      if (cfg.justextByLang) htmlExtractByLangStage(withText)
       else htmlExtractStage(withText)
-    run(mojibakeStage(extracted), cfg, model)
+    run(mojibakeStage(extracted), cfg)
   }
 
   /** Zero-extra-pass metrics: `observe` accumulates named aggregates while

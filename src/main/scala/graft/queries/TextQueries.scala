@@ -1520,7 +1520,7 @@ object TextQueries {
           .select(col("id").as("doc_id"), col("text_dedup").as("text"))
         val s3 = Curation.neardupStage(s2, cfg.neardupThreshold)
         val s4 = Curation.substringStage(s3, cfg)
-        Curation.qualityStage(s4, cfg)
+        Curation.qualityStage(s4)
       }
       val d = docs(s, dir).select("doc_id", "text")
       val history = chain(d.filter(col("doc_id") % 3 === 0)).localCheckpoint()

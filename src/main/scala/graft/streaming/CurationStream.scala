@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.pipeline.{Curation, IncrementalCuration}
+import graft.pipeline.IncrementalCuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
@@ -42,12 +42,13 @@ import org.apache.spark.sql.streaming.Trigger
   * Scale shape: identical to the batch step — each micro-batch pays
   * batch-scale work against bucket-pruned, Bloom-prefiltered history
   * reads; the stream adds only the marker I/O (two renames and one tiny
-  * listing file per batch). `maxFilesPerTrigger` bounds micro-batch size
-  * so one giant crawl drop cannot blow a single step.
+  * listing file per batch). [[PageStream.MaxFilesPerTrigger]] bounds
+  * micro-batch size so one giant crawl drop cannot blow a single step.
   */
 object CurationStream {
 
-  /** Tunables forwarded to [[IncrementalCuration.stepLake]] per batch.
+  /** Options forwarded to [[IncrementalCuration.stepLake]] per batch,
+    * which curates at the default [[graft.pipeline.Curation.Config]].
     * `skipSemantic` is the explicit opt-in required to stream into a
     * semantic-enabled lake: the stream carries no embeddings, so semantic
     * dedup never runs for streamed batches AND streamed survivors never
@@ -55,7 +56,6 @@ object CurationStream {
     * cannot dedup against them) — a degradation the caller must
     * acknowledge, not discover. */
   final case class Config(
-      curation: Curation.Config = Curation.Config(),
       hostCapN: Option[Int] = None,
       skipSemantic: Boolean = false)
 
@@ -65,12 +65,11 @@ object CurationStream {
     * (every curated arrival must be counted or a later capped step
     * over-admits — [[IncrementalCuration]]'s host contract). */
   def readDocs(spark: SparkSession, path: String,
-               maxFilesPerTrigger: Int = 64,
                withHost: Boolean = false): DataFrame =
     spark.readStream
       .schema(if (withHost) "doc_id LONG, text STRING, host STRING"
               else "doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", PageStream.MaxFilesPerTrigger)
       .parquet(path)
 
   /** Drain every crawl drop currently in `inDir` through the incremental
@@ -80,7 +79,6 @@ object CurationStream {
   def runAvailable(spark: SparkSession, inDir: String, stateRoot: String,
                    outDir: String, checkpointDir: String,
                    cfg: Config = Config(),
-                   maxFilesPerTrigger: Int = 64,
                    withHost: Boolean = false): Unit = {
     // fail at START, not inside batch 0 after its intent is written (a
     // config/schema mismatch there would crash-loop on every restart):
@@ -126,7 +124,7 @@ object CurationStream {
     // resolved once on the first batch, cached for the run; STRICT — a
     // fallback id would re-key the commit markers mid-stream
     lazy val streamId = PageStream.streamIdOf(spark, checkpointDir)
-    val q = readDocs(spark, inDir, maxFilesPerTrigger, withHost)
+    val q = readDocs(spark, inDir, withHost)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         curateBatch(batch, batchId, stateRoot, outDir, streamId, cfg)
@@ -170,8 +168,7 @@ object CurationStream {
         v
       }
     val survivors = IncrementalCuration.stepLake(spark, stateRoot, batch,
-      batchEmbeddings = None, cfg = cfg.curation,
-      hostCapN = cfg.hostCapN,
+      batchEmbeddings = None, hostCapN = cfg.hostCapN,
       atVersion = Some(pinnedVersion))
     appendOut(survivors, outDir, streamId, batchId)
     if (!fs.rename(intent, commit))
@@ -180,13 +177,7 @@ object CurationStream {
     // replay only ever concerns the latest uncommitted batch, so a bounded
     // window is safe — a standing query would otherwise accrete one tiny
     // marker file per micro-batch forever
-    val retainMarkers = 128
-    if (batchId > retainMarkers) {
-      for (s <- fs.listStatus(dir)
-           if scala.util.Try(s.getPath.getName.takeWhile(_.isDigit).toLong)
-             .toOption.exists(_ < batchId - retainMarkers))
-        fs.delete(s.getPath, false)
-    }
+    PageStream.gcMarkers(fs, dir, batchId)
   }
 
   /** Idempotent per-batch output append: staging write + one rename into

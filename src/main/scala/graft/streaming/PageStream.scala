@@ -21,30 +21,31 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object PageStream {
 
+  /** Micro-batch bound of both streams' file scans: one giant crawl drop
+    * cannot blow a single batch. */
+  private[streaming] val MaxFilesPerTrigger = 64
+
   /** Streaming page scan: same schema as the lake
-    * (url, warc_ts, html, text, lang). `maxFilesPerTrigger` bounds
-    * micro-batch size so one giant crawl drop cannot blow a single batch. */
-  def readPages(spark: SparkSession, path: String,
-                maxFilesPerTrigger: Int = 64): DataFrame =
+    * (url, warc_ts, html, text, lang), at most [[MaxFilesPerTrigger]]
+    * files per micro-batch. */
+  def readPages(spark: SparkSession, path: String): DataFrame =
     spark.readStream
       .schema("url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", MaxFilesPerTrigger)
       .parquet(path)
 
   /** The scored stream: extract → langid → quality gates → PII scrub —
     * identical column contract to the batch pipeline. */
-  def scored(pages: DataFrame,
-             cfg: QualityPipeline.Config = QualityPipeline.Config()): DataFrame =
-    QualityPipeline.run(pages, cfg)
+  def scored(pages: DataFrame): DataFrame =
+    QualityPipeline.run(pages)
       .select("url", "lang_pred", "keep", "drop_reasons", "n_pii", "text_scrubbed")
 
   /** Drain everything currently in `inDir` into `outDir` exactly once and
     * stop. Rerunning with the same `checkpointDir` processes only files
     * that arrived since the last run. */
   def runAvailable(spark: SparkSession, inDir: String, outDir: String,
-                   checkpointDir: String,
-                   cfg: QualityPipeline.Config = QualityPipeline.Config()): Unit = {
-    val q = scored(readPages(spark, inDir), cfg)
+                   checkpointDir: String): Unit = {
+    val q = scored(readPages(spark, inDir))
       .writeStream
       .format("parquet")
       .option("path", outDir)
@@ -80,13 +81,12 @@ object PageStream {
     * wrote meanwhile) and re-appends. Net effect: exactly-once lake rows
     * under any crash point. */
   def runIntoLake(spark: SparkSession, inDir: String, lakeDir: String,
-                  checkpointDir: String,
-                  cfg: QualityPipeline.Config = QualityPipeline.Config()): Unit = {
+                  checkpointDir: String): Unit = {
     import org.apache.spark.sql.functions._
     // resolved once on the first batch, cached for the run (the metadata
     // file exists by then — written at query start)
     lazy val streamId = streamIdOf(spark, checkpointDir)
-    val q = QualityPipeline.run(readPages(spark, inDir), cfg).filter(col("keep"))
+    val q = QualityPipeline.run(readPages(spark, inDir)).filter(col("keep"))
       .select(col("url"), col("warc_ts"),
         encode(concat(lit("<html><body>"), col("text_scrubbed"),
           lit("</body></html>")), "UTF-8").as("html"),
@@ -127,6 +127,20 @@ object PageStream {
         "(it would re-key the exactly-once commit markers)", e), identity)
   }
 
+  /** Commit markers older than this many batches are deleted. */
+  private val RetainMarkers = 128
+
+  /** Delete the markers in `dir` more than [[RetainMarkers]] batches older
+    * than `batchId`. */
+  private[streaming] def gcMarkers(fs: org.apache.hadoop.fs.FileSystem,
+                                   dir: org.apache.hadoop.fs.Path, batchId: Long): Unit =
+    if (batchId > RetainMarkers) {
+      for (s <- fs.listStatus(dir)
+           if scala.util.Try(s.getPath.getName.takeWhile(_.isDigit).toLong)
+             .toOption.exists(_ < batchId - RetainMarkers))
+        fs.delete(s.getPath, false)
+    }
+
   /** One idempotent lake append (see [[runIntoLake]] for the protocol).
     *
     * `streamId` namespaces the commit markers: a RESET checkpoint (or a
@@ -141,8 +155,7 @@ object PageStream {
     * metadata (Iceberg) is what removes them, not reordering. */
   private[streaming] def ingestBatch(batch: DataFrame, batchId: Long,
                                      lakeDir: String,
-                                     streamId: String = "default",
-                                     retainMarkers: Int = 128): Unit = {
+                                     streamId: String = "default"): Unit = {
     import graft.sources.PageLake
     val spark = batch.sparkSession
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -182,12 +195,7 @@ object PageStream {
       // GC old markers: replay only ever concerns the latest uncommitted
       // batch, so a bounded retention window is safe (a continuous stream
       // would otherwise accrete one tiny file per micro-batch forever)
-      if (batchId > retainMarkers) {
-        for (s <- fs.listStatus(dir)
-             if scala.util.Try(s.getPath.getName.takeWhile(_.isDigit).toLong)
-               .toOption.exists(_ < batchId - retainMarkers))
-          fs.delete(s.getPath, false)
-      }
+      gcMarkers(fs, dir, batchId)
     }
   }
 }

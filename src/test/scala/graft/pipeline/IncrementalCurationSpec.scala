@@ -227,7 +227,7 @@ class IncrementalCurationSpec extends SparkSpecBase {
         .select($"id".as("doc_id"), $"text_dedup".as("text"))
       val s3 = Curation.neardupStage(s2, cfg.neardupThreshold)
       val s4 = Curation.substringStage(s3, cfg)
-      Curation.qualityStage(s4, cfg)
+      Curation.qualityStage(s4)
     }
     // history = a FIXED POINT of the chain (an already-curated corpus —
     // the step's contract; a non-fixed-point history would be re-judged

@@ -124,8 +124,7 @@ class LakeIncrementalSpec extends SparkSpecBase {
     IncrementalCuration.initLake(history, Some(histEmb), root,
       withLineDedup = true, withSpanDedup = true)
     val sLake = IncrementalCuration.stepLake(spark, root, batch, Some(batchEmb),
-      expectedHistoryDigests = 1 << 10, expectedHistoryLines = 1 << 14,
-      expectedHistoryGrams = 1 << 17)
+      expectedHistoryDigests = 1 << 10, expectedHistoryLines = 1 << 14)
 
     assert(ids(sLake) == ids(sMem), "survivor sets must agree")
     // dedup plants actually died (the fixture is live, not vacuous)

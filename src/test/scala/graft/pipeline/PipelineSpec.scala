@@ -122,8 +122,7 @@ class PipelineSpec extends SparkSpecBase {
       ("https://elsewhere.example.net/a", prose))
       .toDF("url", "text")
       .withColumn("warc_ts", current_timestamp()).withColumn("lang", lit("en"))
-    val cfg = QualityPipeline.Config(minHostRank = bar)
-    val gated = QualityPipeline.run(pages, cfg, hostRanks = Some(ranks))
+    val gated = QualityPipeline.hostRankStage(QualityPipeline.run(pages), ranks, bar)
       .select(col("url"), col("keep"), array_join(col("drop_reasons"), ",").as("r"))
       .collect().map(r => r.getString(0) -> ((r.getBoolean(1), r.getString(2)))).toMap
     assert(gated("https://good.example.org/a")._1, gated.toString)
@@ -131,11 +130,11 @@ class PipelineSpec extends SparkSpecBase {
       gated("https://bad.example.org/a")._2.contains("low_host_rank"), gated.toString)
     // host outside the link graph: neutral, not auto-dropped
     assert(gated("https://elsewhere.example.net/a")._1, gated.toString)
-    // without a rank table the same config gates nothing (feature is opt-in)
-    val ungated = QualityPipeline.run(pages, cfg)
+    // without the gate the pipeline drops none of them (it is opt-in)
+    val ungated = QualityPipeline.run(pages)
     assert(ungated.filter(!col("keep")).count() == 0)
     // the rank table must ship broadcast: the corpus never shuffles on host
-    val plan = QualityPipeline.run(pages, cfg, hostRanks = Some(ranks))
+    val plan = QualityPipeline.hostRankStage(QualityPipeline.run(pages), ranks, bar)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
       s"host-rank join must broadcast:\n$plan")
@@ -168,6 +167,79 @@ class PipelineSpec extends SparkSpecBase {
     // default config: gates off — no dup reasons anywhere
     val off = reasons(QualityPipeline.Config())
     assert(off.values.forall(!_.contains("dup_")), off.toString)
+  }
+
+  test("each drop reason fires on a page just past its threshold") {
+    import spark.implicits._
+    // fresh four-letter words on every call: no repeated 2-gram, mean
+    // length 4, all alphabetic
+    var used = 0
+    def ws(n: Int): Seq[String] = {
+      val out = (used until used + n).map(i =>
+        (0 until 4).map(k => ('a' + (i / math.pow(26, k).toInt) % 26).toChar).mkString)
+      used += n
+      out
+    }
+    def line(n: Int): String = ws(n).mkString(" ")
+    val pair = line(2)
+    val longLine = line(10)
+    val pages = Seq(
+      "ten_words" -> line(10),
+      "few_words" -> line(9),
+      "many_words" -> line(200001),
+      "long_words" -> (ws(9).map(_ * 3) :+ ws(1).head * 3 + "z").mkString(" "),
+      "symbols" -> (ws(3).map("#" + _) ++ ws(17)).mkString(" "),
+      "numbers" -> ((100000 to 100005).map(_.toString) ++ ws(5)).mkString(" "),
+      "repeats" -> (ws(4).flatMap(w => Seq(w, "zzab", "zzcd")) ++ ws(8)).mkString(" "),
+      "bullets" -> ((1 to 10).map(_ => "-" + line(2)) :+ line(2)).mkString("\n"),
+      "ellipses" -> ((1 to 4).map(_ => line(3) + "...") ++ (1 to 9).map(_ => line(3)))
+        .mkString("\n"),
+      "dup_lines" -> (Seq.fill(5)(pair) ++ (1 to 5).map(_ => line(6))).mkString("\n"),
+      "dup_line_chars" -> (Seq.fill(4)(longLine) ++ ws(7)).mkString("\n"),
+      "dup_paras" -> {
+        val p = line(2)
+        (Seq(p, p, p) ++ (1 to 3).map(_ => line(3) + "\n" + line(3))).mkString("\n\n")
+      },
+      "dup_para_chars" -> {
+        val d = ws(6).mkString("\n")
+        (Seq(d, d) ++ (1 to 9).map(_ => line(2))).mkString("\n\n")
+      })
+      .map { case (k, t) => (s"https://reasons.example.org/$k", t) }
+      .toDF("url", "text")
+      .withColumn("warc_ts", timestamp_seconds(lit(1704067200L)))
+      .withColumn("lang", lit("en"))
+    def reasons(df: org.apache.spark.sql.DataFrame, cfg: QualityPipeline.Config) = {
+      val base = QualityPipeline.extract(df)
+      QualityPipeline.qualityStage(QualityPipeline.langIdStage(
+          if (cfg.c4LineFilter) QualityPipeline.lineFilterStage(base) else base), cfg)
+        .select(col("url"), col("drop_reasons")).collect()
+        .map(r => r.getString(0).stripPrefix("https://reasons.example.org/") ->
+          r.getSeq[String](1)).toMap
+    }
+    // recorded from the pipeline before its thresholds became constants
+    assert(reasons(pages, QualityPipeline.Config(gopherDupGates = true)) == Map(
+      "ten_words" -> Nil,
+      "few_words" -> Seq("too_few_words"),
+      "many_words" -> Seq("too_many_words"),
+      "long_words" -> Seq("word_len_out_of_range"),
+      "symbols" -> Seq("symbol_heavy"),
+      "numbers" -> Seq("non_alpha"),
+      "repeats" -> Seq("repetitive"),
+      "bullets" -> Seq("bullet_heavy"),
+      "ellipses" -> Seq("ellipsis_heavy"),
+      "dup_lines" -> Seq("dup_lines"),
+      "dup_line_chars" -> Seq("dup_line_chars"),
+      "dup_paras" -> Seq("dup_paras"),
+      "dup_para_chars" -> Seq("dup_para_chars")))
+    // C4's page gate: five kept sentences pass, four do not
+    def sentences(n: Int) = (1 to n).map(_ => line(4) + ".").mkString("\n")
+    val c4Pages = Seq("five" -> sentences(5), "four" -> sentences(4))
+      .map { case (k, t) => (s"https://reasons.example.org/$k", t) }
+      .toDF("url", "text")
+      .withColumn("warc_ts", timestamp_seconds(lit(1704067200L)))
+      .withColumn("lang", lit("en"))
+    assert(reasons(c4Pages, QualityPipeline.Config(c4LineFilter = true)) == Map(
+      "five" -> Nil, "four" -> Seq("too_few_sentences")))
   }
 
   test("html-extract and mojibake stages: null-text pages extract, damage repairs, clean text untouched") {

@@ -66,8 +66,7 @@ class CurationStreamSpec extends SparkSpecBase {
     // reference: the sequential batch loop over the same drops
     val refSurvivors = Seq(d1, d2, d3).map(d =>
       ids(IncrementalCuration.stepLake(spark, rootR, d,
-        expectedHistoryDigests = 1 << 10, expectedHistoryLines = 1 << 14,
-        expectedHistoryGrams = 1 << 17)))
+        expectedHistoryDigests = 1 << 10, expectedHistoryLines = 1 << 14)))
 
     // stream: one drop lands, the standing query drains it, repeat —
     // checkpoint offsets make each run see only the new files
@@ -164,8 +163,7 @@ class CurationStreamSpec extends SparkSpecBase {
     val out0 = fs.create(intent, true)
     try out0.write(v0.toString.getBytes("UTF-8")) finally out0.close()
     IncrementalCuration.stepLake(spark, rootB, d1,
-      expectedHistoryDigests = 1 << 10, expectedHistoryLines = 1 << 14,
-      expectedHistoryGrams = 1 << 17, atVersion = Some(v0))
+      expectedHistoryDigests = 1 << 10, expectedHistoryLines = 1 << 14, atVersion = Some(v0))
     assert(StateLake.committedBatches(spark, s"$rootB/docs") == Seq(0, 1),
       "fixture sanity: the crashed attempt fully committed the state")
 
@@ -239,8 +237,7 @@ class CurationStreamSpec extends SparkSpecBase {
     val o = fs.create(intent, true)
     try o.write(v0.toString.getBytes("UTF-8")) finally o.close()
     val surv = IncrementalCuration.stepLake(spark, root, d1,
-      expectedHistoryDigests = 1 << 10, expectedHistoryLines = 1 << 14,
-      expectedHistoryGrams = 1 << 17, atVersion = Some(v0))
+      expectedHistoryDigests = 1 << 10, expectedHistoryLines = 1 << 14, atVersion = Some(v0))
     CurationStream.appendOut(surv, outDir, "s", 0L)
     val nOut = spark.read.parquet(outDir).count()
     // crash here: marker missing — replay must finish idempotently
